@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: times the headline queries on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Each query is forced end-to-end with a noop
@@ -30,10 +31,10 @@ object Bench {
     // own queries -1, never the round's numbers.
     Tables.names.foreach { n =>
       try Tables.load(spark, sfDir, n).schema
-      catch { case e: Throwable => System.err.println(s"[bench] warmup $n: $e") }
+      catch { case NonFatal(e) => System.err.println(s"[bench] warmup $n: $e") }
     }
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case e: Throwable => System.err.println(s"[bench] warmup entry: $e") }
+    catch { case NonFatal(e) => System.err.println(s"[bench] warmup entry: $e") }
 
     // three passes per query, report the MEDIAN: pass 1 pays one-time
     // codegen compilation + AQE statistics, passes 2-3 are the
@@ -64,7 +65,7 @@ object Bench {
             q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
             (System.nanoTime() - t0) / 1e9
           } catch {
-            case e: Throwable => System.err.println(s"[bench] ${q.name}: $e"); -1.0
+            case NonFatal(e) => System.err.println(s"[bench] ${q.name}: $e"); -1.0
           }
         }
         val (a, b, c) = (once(), once(), once())
@@ -78,7 +79,7 @@ object Bench {
       def timed(f: => Unit): Double = {
         val t0 = System.nanoTime()
         try { f; (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable => System.err.println(s"[bench] split: $e"); -1.0 }
+        catch { case NonFatal(e) => System.err.println(s"[bench] split: $e"); -1.0 }
       }
       def rep3(f: () => Double): (Double, Double) = {
         val (a, b, c) = (f(), f(), f())
@@ -125,7 +126,7 @@ object Bench {
     def loadavg(): Double =
       try java.nio.file.Files.readString(
         java.nio.file.Paths.get("/proc/loadavg")).split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
+      catch { case NonFatal(_) => -1.0 }
 
     val spreadLimit =
       sys.env.getOrElse("SPARK_GRAFT_SPREAD_LIMIT", "1.5").toDouble
@@ -199,7 +200,7 @@ object Bench {
       val out = java.nio.file.Paths.get("target/bench.json")
       java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.writeString(out, line + "\n")
-    } catch { case e: Throwable => System.err.println(s"[bench] file write: $e") }
+    } catch { case NonFatal(e) => System.err.println(s"[bench] file write: $e") }
     spark.stop()
     // Clip-proof trailer: the driver snapshots a bounded LOG TAIL, and
     // the full record above (219-query object, multi-KB single line)

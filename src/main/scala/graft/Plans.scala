@@ -480,13 +480,15 @@ object Plans {
     * regenerating PLANS.md produces byte-identical text when the plan
     * STRUCTURE is unchanged (r16 ADVICE): attribute exprIds (#NNNN)
     * become first-appearance ordinals, `plan_id=` values and JVM
-    * lambda addresses become fixed placeholders. Only the PLANS.md
-    * artifact is normalized — the machine checks read raw plans. */
+    * lambda names become fixed placeholders, in both the hex
+    * `Lambda$N/0x…` form of newer JDKs and the decimal `Lambda$N/123456`
+    * form of older ones. Only the PLANS.md artifact is normalized — the
+    * machine checks read raw plans. */
   private[graft] def normalize(plan: String): String = {
     val pid = plan.replaceAll("plan_id=\\d+", "plan_id=X")
     val lam = pid
-      .replaceAll("\\$\\$Lambda\\$?\\d*/0x[0-9a-fA-F]+(@[0-9a-fA-F]+)?", "\\$\\$LAMBDA")
-      .replaceAll("Lambda\\$\\d+/0x[0-9a-fA-F]+(@[0-9a-fA-F]+)?", "LAMBDA")
+      .replaceAll("\\$\\$Lambda\\$?\\d*/(0x[0-9a-fA-F]+|\\d+)(@[0-9a-fA-F]+)?", "\\$\\$LAMBDA")
+      .replaceAll("Lambda\\$\\d+/(0x[0-9a-fA-F]+|\\d+)(@[0-9a-fA-F]+)?", "LAMBDA")
     val ids = scala.collection.mutable.LinkedHashMap[String, Int]()
     val re = "#(\\d+)".r
     re.findAllMatchIn(lam).foreach(m => ids.getOrElseUpdate(m.group(1), ids.size + 1))

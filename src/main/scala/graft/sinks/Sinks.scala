@@ -50,6 +50,13 @@ object Sinks {
     * the buckets its update keys land in. A 1-row upsert into a 100 TB
     * history touches ~1/256th of the table, not all of it.
     *
+    * Every write (first write, flat-table migration, bucket merge) goes
+    * through `writeBuckets`: each bucket it writes is written by one
+    * task as one file, and the buckets are spread over every core. Scale
+    * note: a history row is ~203 B on disk (perfbench's
+    * `sinks.history_bytes_per_new_row`), so at 10⁹ files a bucket is
+    * ≈0.8 GB, all of it written by its one task.
+    *
     * Crash safety: merged buckets are staged, then promoted per bucket as
     * rename(current → __old), rename(staged → current), delete(__old) —
     * at every instant either the old or the new bucket exists on disk.
@@ -70,7 +77,7 @@ object Sinks {
     val keyed = updates.withColumn("key_prefix",
       concat(lit("x"), substring(col("cache_key"), 1, 2)))
     if (!fs.exists(dst)) {
-      keyed.write.partitionBy("key_prefix").parquet(historyPath)
+      writeBuckets(keyed, SaveMode.ErrorIfExists, historyPath)
       return
     }
     val currentAll = spark.read.parquet(historyPath)
@@ -83,7 +90,7 @@ object Sinks {
         .join(updates.select("cache_key"), Seq("cache_key"), "left_anti")
         .unionByName(updates)
         .withColumn("key_prefix", concat(lit("x"), substring(col("cache_key"), 1, 2)))
-      merged.write.mode(SaveMode.Overwrite).partitionBy("key_prefix").parquet(staged)
+      writeBuckets(merged, SaveMode.Overwrite, staged)
       val old = new org.apache.hadoop.fs.Path(historyPath + "__old")
       if (fs.exists(old)) fs.delete(old, true)
       if (!fs.rename(dst, old))
@@ -101,7 +108,7 @@ object Sinks {
       .filter(col("key_prefix").isin(prefixes.toIndexedSeq: _*)) // partition pruning
       .join(updates.select("cache_key"), Seq("cache_key"), "left_anti")
       .unionByName(keyed)
-    merged.write.mode(SaveMode.Overwrite).partitionBy("key_prefix").parquet(staged)
+    writeBuckets(merged, SaveMode.Overwrite, staged)
     prefixes.foreach { p =>
       val cur = new org.apache.hadoop.fs.Path(dst, s"key_prefix=$p")
       val stg = new org.apache.hadoop.fs.Path(staged, s"key_prefix=$p")
@@ -118,6 +125,16 @@ object Sinks {
     }
     fs.delete(new org.apache.hadoop.fs.Path(staged), true)
   }
+
+  /** Write a `key_prefix`-partitioned history table with each bucket's
+    * rows in one task: without the shuffle, every input partition opens
+    * its own writer per bucket and a bucket ends up as many small files.
+    * The explicit count keeps AQE from coalescing the buckets into fewer
+    * tasks. */
+  private def writeBuckets(df: DataFrame, mode: SaveMode, path: String): Unit =
+    df.repartition(math.min(256, df.sparkSession.sparkContext.defaultParallelism),
+        col("key_prefix"))
+      .write.mode(mode).partitionBy("key_prefix").parquet(path)
 
   /** Restore buckets orphaned by a crash mid-promote: a failure between
     * rename(cur → __old) and rename(staged → cur) leaves `__old` as the

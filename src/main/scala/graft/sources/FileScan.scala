@@ -55,7 +55,13 @@ object FileScan {
 
   /** S1-S6: list + filter + order + limit, producing the engine's
     * FileRow frame: file_path, file_name, file_size, mtime, content,
-    * file_hash (sha256), mime_type, file_number. */
+    * file_hash (sha256), mime_type, file_number.
+    *
+    * The output is hash-partitioned by `file_path` over
+    * `defaultParallelism` partitions, so the stages downstream of the
+    * scan (extraction, sinks) run on every core. Partition order is not
+    * scan order: `file_number` carries the FIFO/LIFO position, so order
+    * by it wherever order matters. */
   def scan(spark: SparkSession, cfg: ScanConfig): DataFrame = {
     val raw = spark.read.format("binaryFile")
       .option("recursiveFileLookup", cfg.recursive.toString)
@@ -88,7 +94,11 @@ object FileScan {
       case Lifo => Seq(col("mtime").desc, col("file_path"))
     }
     val limited = mimeOk.orderBy(order: _*).limit(cfg.maxFiles)
+    // numbering leaves one partition; spread it by path (stable under
+    // task retry). The count is explicit: a count-less repartition(col)
+    // may be coalesced back into one partition by AQE.
     graft.operators.Ranks.sequenceNumber(limited, order, "file_number")
+      .repartition(spark.sparkContext.defaultParallelism, col("file_path"))
   }
 
   /** S5: API upload staging (source.py:1190-1288) — the composed

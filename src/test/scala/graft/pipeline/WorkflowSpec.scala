@@ -58,19 +58,22 @@ class WorkflowSpec extends SparkSpec {
     assert(spark.read.parquet(histPath).count() == 3)
   }
 
-  test("extraction is billed once per (row, prompt) — never once per sink action") {
-    val srcDir = Files.createTempDirectory("graft-wf1x-src")
-    Files.write(srcDir.resolve("a.txt"), "batch pipeline".getBytes)
-    Files.write(srcDir.resolve("b.txt"), "batch batch".getBytes)
-    val outDir = Files.createTempDirectory("graft-wf1x-out").toString + "/results"
-    val histPath = Files.createTempDirectory("graft-wf1x-hist").toString + "/history"
-    val queueRoot = Files.createTempDirectory("graft-wf1x-queue").toString
+  /** Runs a workflow over one file per text with EVERY optional
+    * destination hop active: fs sink + review queue + result cache +
+    * history upsert + the two summary counts — with the old per-action
+    * re-execution such a run would bill the LLM up to 6×. Returns the
+    * run summary and the number of completions billed. */
+  private def runCounted(tag: String, texts: Seq[String]): (Workflow.RunSummary, Long) = {
+    val srcDir = Files.createTempDirectory(s"graft-$tag-src")
+    texts.zipWithIndex.foreach { case (t, i) =>
+      Files.write(srcDir.resolve(f"f$i%03d.txt"), t.getBytes)
+    }
+    val outDir = Files.createTempDirectory(s"graft-$tag-out").toString + "/results"
+    val histPath = Files.createTempDirectory(s"graft-$tag-hist").toString + "/history"
+    val queueRoot = Files.createTempDirectory(s"graft-$tag-queue").toString
     val cache = new graft.sinks.ResultCache(
-      () => new graft.streaming.MemoryQueue(s"wf1x-${java.util.UUID.randomUUID()}"),
+      () => new graft.streaming.MemoryQueue(s"$tag-${java.util.UUID.randomUUID()}"),
       ttlSeconds = 600)
-    // EVERY optional destination hop active: fs sink + review queue +
-    // result cache + history upsert + the two summary counts — with the
-    // old per-action re-execution this run would bill the LLM up to 6×
     val spec = Workflow.WorkflowSpec(
       scan = FileScan.ScanConfig(srcDir.toString, glob = "*.txt"),
       prompts = Seq(
@@ -80,11 +83,23 @@ class WorkflowSpec extends SparkSpec {
       outputFolder = outDir,
       reviewQueue = Some((() => new graft.streaming.DirectoryQueue(queueRoot), "review:wf-1")),
       resultCache = Some(cache))
-    val calls = spark.sparkContext.longAccumulator("llm-calls")
+    val calls = spark.sparkContext.longAccumulator(s"llm-calls-$tag")
     val run = Workflow.run(spark, spec, () => new CountingLLM(calls))
+    (run, calls.value.longValue)
+  }
+
+  test("extraction is billed once per (row, prompt) — never once per sink action") {
+    val (run, calls) = runCounted("wf1x", Seq("batch pipeline", "batch batch"))
     assert(run.listed == 2 && run.extracted == 2 && run.failed == 0)
-    assert(calls.value === 4L, // 2 files × 2 prompts, exactly once each
-      s"LLM billed ${calls.value} completions for 4 (row, prompt) pairs")
+    assert(calls === 4L, // 2 files × 2 prompts, exactly once each
+      s"LLM billed $calls completions for 4 (row, prompt) pairs")
+    // more files than cores: the scan spreads them over every core, so
+    // extraction and every sink run in several tasks
+    val (run40, calls40) = runCounted("wf40x",
+      (1 to 40).map(i => s"batch $i pipeline " + "batch " * (i % 3)))
+    assert(run40 == Workflow.RunSummary(40, 40, 40, 0))
+    assert(calls40 === 80L, // 40 files × 2 prompts
+      s"LLM billed $calls40 completions for 80 (row, prompt) pairs")
   }
 
   test("workflow staging dir: extraction materializes durably, same results") {

@@ -30,6 +30,14 @@ class PlanNormalizeSpec extends AnyFunSuite {
     assert(!s.matches(".*0x[0-9a-f]+.*"), s)
   }
 
+  test("hex and decimal lambda forms both normalize") {
+    val hex = "Arguments: a.CorpusOps$$$Lambda$3412/0x00007f3c5d2@4f2a1b33, obj#7"
+    val dec = "Arguments: a.CorpusOps$$$Lambda$3412/1626877848@4f2a1b33, obj#7"
+    assert(n(hex) === "Arguments: a.CorpusOps$$$LAMBDA, obj#1")
+    assert(n(dec) === n(hex))
+    assert(n("udf(Lambda$57/1626877848)") === "udf(LAMBDA)")
+  }
+
   test("idempotent") {
     val s = "Filter (x#55 > y#3) [plan_id=88] Lambda$9/0xab@cd"
     assert(n(n(s)) === n(s))

@@ -168,6 +168,45 @@ class SinksSpec extends SparkSpec {
     assert(got.select("cache_key").as[String].collect().toSet == Set("cc33", "dd44"))
   }
 
+  test("history upsert writes each bucket as one file from a multi-partition input") {
+    import spark.implicits._
+    def sha(i: Int): String = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s"doc-$i".getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    def rows(keys: Range, result: String) =
+      keys.map(i => (sha(i), s"/f$i", "COMPLETED", result))
+        .toDF("cache_key", "file_path", "status", "result").repartition(4)
+    def filesPerBucket(path: String): Map[String, Int] =
+      new java.io.File(path).listFiles().filter(_.getName.startsWith("key_prefix="))
+        .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+    def contents(path: String): Set[(String, String)] =
+      spark.read.parquet(path).select("cache_key", "result").as[(String, String)]
+        .collect().toSet
+    def expected(v1: Range, v2: Range): Set[(String, String)] =
+      (v1.map(i => (sha(i), "v1")) ++ v2.map(i => (sha(i), "v2"))).toSet
+    def assertOneFilePerBucket(path: String, keys: Range): Unit = {
+      val got = filesPerBucket(path)
+      assert(got.keySet == keys.map(i => "key_prefix=x" + sha(i).take(2)).toSet)
+      assert(got.values.forall(_ == 1), got.filter(_._2 != 1))
+    }
+
+    // first write, then a merge that replaces 50 keys and adds 50
+    val path = Files.tmp("hist5")
+    Sinks.upsertHistory(spark, path, rows(0 until 200, "v1"))
+    assert(filesPerBucket(path).size >= 64)
+    assertOneFilePerBucket(path, 0 until 200)
+    assert(contents(path) == expected(0 until 200, 0 until 0))
+    Sinks.upsertHistory(spark, path, rows(150 until 250, "v2"))
+    assertOneFilePerBucket(path, 0 until 250)
+    assert(contents(path) == expected(0 until 150, 150 until 250))
+
+    // one-time migration of a flat legacy table
+    val flat = Files.tmp("hist6")
+    rows(0 until 200, "v1").write.parquet(flat)
+    Sinks.upsertHistory(spark, flat, rows(150 until 250, "v2"))
+    assertOneFilePerBucket(flat, 0 until 250)
+    assert(contents(flat) == expected(0 until 150, 150 until 250))
+  }
+
   test("usage rollup sums counters per run") {
     import spark.implicits._
     val usage = Seq(
