@@ -479,13 +479,15 @@ object Plans {
   /** Rewrite the nondeterministic tokens of a formatted plan so that
     * regenerating PLANS.md produces byte-identical text when the plan
     * STRUCTURE is unchanged (r16 ADVICE): attribute exprIds (#NNNN)
-    * become first-appearance ordinals, `plan_id=` values and JVM
-    * lambda names become fixed placeholders, in both the hex
-    * `Lambda$N/0x…` form of newer JDKs and the decimal `Lambda$N/123456`
-    * form of older ones. Only the PLANS.md artifact is normalized — the
-    * machine checks read raw plans. */
+    * become first-appearance ordinals, `plan_id=` values, RDD ids
+    * (`MapPartitionsRDD[392]`, which count the RDDs earlier queries
+    * made) and JVM lambda names become fixed placeholders, the lambdas
+    * in both the hex `Lambda$N/0x…` form of newer JDKs and the decimal
+    * `Lambda$N/123456` form of older ones. Only the PLANS.md artifact is
+    * normalized — the machine checks read raw plans. */
   private[graft] def normalize(plan: String): String = {
     val pid = plan.replaceAll("plan_id=\\d+", "plan_id=X")
+      .replaceAll("RDD\\[\\d+\\]", "RDD[N]")
     val lam = pid
       .replaceAll("\\$\\$Lambda\\$?\\d*/(0x[0-9a-fA-F]+|\\d+)(@[0-9a-fA-F]+)?", "\\$\\$LAMBDA")
       .replaceAll("Lambda\\$\\d+/(0x[0-9a-fA-F]+|\\d+)(@[0-9a-fA-F]+)?", "LAMBDA")

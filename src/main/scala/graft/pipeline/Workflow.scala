@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   * the Celery fan-out, chord barrier and batch bookkeeping collapse into
   * Spark's scheduler (§4 table).
   *
-  * scan (binaryFile) → history anti-join → extraction columns →
-  * destination write + history upsert + usage rollup.
+  * scan (metadata listing, then each kept file read once) → history
+  * anti-join → extraction columns → destination write + history upsert
+  * + usage rollup.
   */
 object Workflow {
 
@@ -49,7 +50,7 @@ object Workflow {
     * Exactly TWO jobs touch source bytes / the LLM:
     *  1. scan → anti-join, with the listing and post-dedup counts
     *     collected via [[Observation]] on that same pass — a separate
-    *     `files.count()` would re-pay the binaryFile listing;
+    *     `files.count()` would add a job over the scan's spread;
     *  2. extraction, materialized ONCE — the fs sink, review queue,
     *     result cache and history upsert all read the staged result, so
     *     each LLM completion is billed once per (row, prompt), never

@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   *
   * [[HadoopFsConnector]] is the engine-native implementation covering
   * every Hadoop-supported scheme (file://, hdfs://, s3a://, abfs://,
-  * gs:// with the right jars) — listing and staging both distributed
-  * via binaryFile, content never on the driver. The SaaS roster
+  * gs:// with the right jars) — listing from the driver's file index,
+  * copies distributed, content never on the driver. The SaaS roster
   * implements the same trait at the public wire-protocol level over
   * the injectable [[graft.tools.HttpTransport]]:
   * [[GoogleDriveConnector]] (Drive v3 REST),
@@ -48,8 +48,9 @@ trait StagingConnector extends Serializable {
       stagingDir: String): DataFrame
 }
 
-/** Hadoop-scheme connector: list + copy via the distributed binaryFile
-  * source; each partition writes its own files to the staging FS. */
+/** Hadoop-scheme connector: lists from the driver's file index
+  * ([[FileScan.listFiles]]); each partition streams its files to the
+  * staging FS with the session's Hadoop configuration. */
 final class HadoopFsConnector(override val name: String = "hadoop_fs")
     extends StagingConnector {
 
@@ -59,33 +60,29 @@ final class HadoopFsConnector(override val name: String = "hadoop_fs")
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
     }.getOrElse(false)
 
-  def listRemote(spark: SparkSession, root: String, glob: String): DataFrame =
-    spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .load(root)
-      .select(
-        col("path").as("remote_path"),
-        element_at(split(col("path"), "/"), -1).as("file_name"),
-        col("length").as("file_size"),
-        col("modificationTime").as("mtime"))
+  private def matching(spark: SparkSession, root: String, glob: String): DataFrame =
+    FileScan.listFiles(spark, root, recursive = true)
       .filter(graft.functions.TextFunctions.globMatch(col("file_name"), glob))
+
+  def listRemote(spark: SparkSession, root: String, glob: String): DataFrame =
+    matching(spark, root, glob).withColumnRenamed("file_path", "remote_path")
 
   def copyToStaging(spark: SparkSession, root: String, glob: String,
       stagingDir: String): DataFrame = {
-    val matched = spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .load(root)
-      .select(element_at(split(col("path"), "/"), -1).as("file_name"),
-        col("content"))
-      .filter(graft.functions.TextFunctions.globMatch(col("file_name"), glob))
-    matched.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-      val dir = new org.apache.hadoop.fs.Path(stagingDir)
-      val fs = dir.getFileSystem(new org.apache.hadoop.conf.Configuration())
-      it.foreach { r =>
-        val out = fs.create(new org.apache.hadoop.fs.Path(dir, r.getString(0)), true)
-        try out.write(r.getAs[Array[Byte]](1)) finally out.close()
+    val conf = FileScan.hadoopConf(spark)
+    matching(spark, root, glob).select(col("file_path"), col("file_name"))
+      .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+        val hconf = conf.value.value
+        val dir = new org.apache.hadoop.fs.Path(stagingDir)
+        val fs = dir.getFileSystem(hconf)
+        it.foreach { r =>
+          FileScan.withStream(conf, r.getString(0)) { in =>
+            val out = fs.create(new org.apache.hadoop.fs.Path(dir, r.getString(1)), true)
+            try org.apache.hadoop.io.IOUtils.copyBytes(in, out, hconf, false)
+            finally out.close()
+          }
+        }
       }
-    }
     listRemote(spark, stagingDir, glob)
   }
 }

@@ -1,8 +1,15 @@
 package graft.sources
 
 import graft.functions.TextFunctions
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkException
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.util.SerializableConfiguration
 
 /** Source-stage file scanning (SURVEY.md S1-S7, P1-P2, P10, W1-W2, F1-F2).
   *
@@ -12,11 +19,13 @@ import org.apache.spark.sql.functions._
   * (endpoint_v2/source.py:292-510, 769-804, 938-1031;
   * constants.py:60,151-198).
   *
-  * Spark-first: `binaryFile` gives (path, modificationTime, length,
-  * content) with Catalyst-pushable path filters; hashing and MIME
-  * sniffing are codegen'd expressions over the content column, not
-  * driver-side loops. At 100 TB the listing itself is distributed by the
-  * InMemoryFileIndex and content never reaches the driver.
+  * Metadata first, as in the reference: the listing is the file index
+  * `binaryFile` builds on the driver (path, length, mtime; no job, no
+  * file opened), and filtering, ordering, the cap and numbering run over
+  * those rows alone. Only the kept files are read, each once, in the
+  * partition that goes on to extract it, so content never crosses a
+  * shuffle and never reaches the driver. Hashing and MIME sniffing are
+  * codegen'd expressions over the content column, not driver-side loops.
   */
 object FileScan {
 
@@ -53,37 +62,96 @@ object FileScan {
     size(split(regexp_replace(col("file_path"), "^file:", ""), "/")) - rootDepth
   }
 
+  // nullable, as binaryFile reads them
+  private val ListingSchema = StructType(Seq(
+    StructField("file_path", StringType),
+    StructField("file_size", LongType),
+    StructField("mtime_ms", LongType)))
+
+  /** S1 listing: the file index `binaryFile` builds on the driver for
+    * `root`, with its hidden-file and `recursiveFileLookup` rules, as
+    * rows of file_path, file_name, file_size, mtime. Runs no job and
+    * opens no file. Paths in one listing are unique, so the in-listing
+    * dedup (P2) holds without a shuffle. */
+  def listFiles(spark: SparkSession, root: String, recursive: Boolean): DataFrame = {
+    val index = spark.read.format("binaryFile")
+      .option("recursiveFileLookup", recursive.toString)
+      .load(root)
+      .queryExecution.analyzed
+      .collectFirst { case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location }
+      .get
+    val rows = index.listFiles(Nil, Nil).flatMap(_.files).map { f =>
+      val s = f.fileStatus
+      Row(s.getPath.toString, s.getLen, s.getModificationTime)
+    }
+    spark.createDataFrame(spark.sparkContext.parallelize(rows), ListingSchema)
+      .select(
+        col("file_path"),
+        element_at(split(col("file_path"), "/"), -1).as("file_name"),
+        col("file_size"),
+        timestamp_millis(col("mtime_ms")).as("mtime"))
+  }
+
+  /** The session's Hadoop configuration (`spark.hadoop.*` and session
+    * `fs.*` settings included), broadcast once for executor-side reads
+    * and writes. */
+  def hadoopConf(spark: SparkSession): Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+
+  private[sources] def withStream[T](conf: Broadcast[SerializableConfiguration], path: String)(
+      f: java.io.InputStream => T): T = {
+    val p = new Path(path)
+    val in = p.getFileSystem(conf.value.value).open(p)
+    try f(in) finally in.close()
+  }
+
+  // The file reads are non-deterministic UDFs so that the optimizer
+  // neither copies a read into a pushed-down filter nor inlines it into
+  // each consumer of its column: every read runs once per row.
+
+  /** A file's bytes, with binaryFile's error for files over its
+    * `spark.sql.sources.binaryFile.maxLength`. */
+  private def readContent(conf: Broadcast[SerializableConfiguration],
+      maxLength: Int): UserDefinedFunction =
+    udf { (path: String, size: Long) =>
+      if (size > maxLength) throw new SparkException("_LEGACY_ERROR_TEMP_2076",
+        Map("path" -> path, "len" -> size.toString, "maxLength" -> maxLength.toString), null)
+      withStream(conf, path)(_.readAllBytes())
+    }.asNondeterministic()
+
+  /** The 4-byte head [[sniffMime]] looks at. */
+  private def readHead(conf: Broadcast[SerializableConfiguration]): UserDefinedFunction =
+    udf((path: String) => withStream(conf, path)(_.readNBytes(4))).asNondeterministic()
+
   /** S1-S6: list + filter + order + limit, producing the engine's
     * FileRow frame: file_path, file_name, file_size, mtime, content,
     * file_hash (sha256), mime_type, file_number.
     *
-    * The output is hash-partitioned by `file_path` over
-    * `defaultParallelism` partitions, so the stages downstream of the
-    * scan (extraction, sinks) run on every core. Partition order is not
-    * scan order: `file_number` carries the FIFO/LIFO position, so order
-    * by it wherever order matters. */
+    *  1. metadata: [[listFiles]], then the depth, glob and empty-file
+    *     filters, the MIME gate (reading only each candidate's 4-byte
+    *     head, and only when `allowedMime` is set), mtime order, the cap
+    *     and `file_number`;
+    *  2. spread: the numbered paths are hash-partitioned by `file_path`
+    *     over `defaultParallelism` partitions, so the stages downstream
+    *     of the scan (extraction, sinks) run on every core;
+    *  3. read: each kept file is read once in its partition, with the
+    *     session's Hadoop configuration, and hashed and sniffed there.
+    *
+    * Partition order is not scan order: `file_number` carries the
+    * FIFO/LIFO position, so order by it wherever order matters. */
   def scan(spark: SparkSession, cfg: ScanConfig): DataFrame = {
-    val raw = spark.read.format("binaryFile")
-      .option("recursiveFileLookup", cfg.recursive.toString)
-      .load(cfg.root)
-      .select(
-        col("path").as("file_path"),
-        element_at(split(col("path"), "/"), -1).as("file_name"),
-        col("length").as("file_size"),
-        col("modificationTime").as("mtime"),
-        col("content"))
-
+    val conf = hadoopConf(spark)
     val depthOk = if (cfg.recursive) depthBelow(cfg.root) <= cfg.maxDepth else lit(true)
     val globOk = TextFunctions.globMatch(col("file_name"), cfg.glob)
 
-    val filtered = raw
+    val listed = listFiles(spark, cfg.root, cfg.recursive)
       .filter(depthOk && globOk && col("file_size") > 0)       // P1 dir/empty guard
-      .dropDuplicates("file_path")                             // P2 in-listing dedup
-      .withColumn("file_hash", sha2(col("content"), 256))      // F1
-      .withColumn("mime_type", sniffMime(col("content"), col("file_name")))
 
-    val mimeOk = if (cfg.allowedMime.isEmpty) filtered
-      else filtered.filter(col("mime_type").isin(cfg.allowedMime: _*)) // P10
+    val candidates = if (cfg.allowedMime.isEmpty) listed       // P10, before the cap
+      else listed.withColumn("head", readHead(conf)(col("file_path")))
+        .filter(sniffMime(col("head"), col("file_name")).isin(cfg.allowedMime: _*))
+        .drop("head")
 
     // W1/W2: mtime order (path tiebreak), cap, 1-based file_number.
     // The reference caps sortable listings at 40k files; at scale the
@@ -93,12 +161,21 @@ object FileScan {
       case Fifo => Seq(col("mtime").asc, col("file_path"))
       case Lifo => Seq(col("mtime").desc, col("file_path"))
     }
-    val limited = mimeOk.orderBy(order: _*).limit(cfg.maxFiles)
+    val numbered = graft.operators.Ranks.sequenceNumber(
+      candidates.orderBy(order: _*).limit(cfg.maxFiles), order, "file_number")
+
+    val maxLength = spark.conf.get("spark.sql.sources.binaryFile.maxLength").toInt
     // numbering leaves one partition; spread it by path (stable under
     // task retry). The count is explicit: a count-less repartition(col)
     // may be coalesced back into one partition by AQE.
-    graft.operators.Ranks.sequenceNumber(limited, order, "file_number")
+    numbered
       .repartition(spark.sparkContext.defaultParallelism, col("file_path"))
+      .withColumn("content", readContent(conf, maxLength)(col("file_path"), col("file_size")))
+      .select(col("file_path"), col("file_name"), col("file_size"), col("mtime"),
+        col("content"),
+        sha2(col("content"), 256).as("file_hash"),                      // F1
+        sniffMime(col("content"), col("file_name")).as("mime_type"),    // F2
+        col("file_number"))
   }
 
   /** S5: API upload staging (source.py:1190-1288) — the composed
@@ -151,12 +228,13 @@ object FileScan {
         col("r.file_size"), col("r.content"))
 
     stagingDir.foreach { dir =>
+      val conf = hadoopConf(uploads.sparkSession)
       deduped.select(col("file_name"), col("content"))
-        .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-          val root = new org.apache.hadoop.fs.Path(dir)
-          val fs = root.getFileSystem(new org.apache.hadoop.conf.Configuration())
+        .foreachPartition { (it: Iterator[Row]) =>
+          val root = new Path(dir)
+          val fs = root.getFileSystem(conf.value.value)
           it.foreach { r =>
-            val out = fs.create(new org.apache.hadoop.fs.Path(root, r.getString(0)), true)
+            val out = fs.create(new Path(root, r.getString(0)), true)
             try out.write(r.getAs[Array[Byte]](1)) finally out.close()
           }
         }

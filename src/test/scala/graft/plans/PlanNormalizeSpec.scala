@@ -3,7 +3,7 @@ package graft.plans
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The PLANS.md normalizer (r16 ADVICE): nondeterministic tokens —
-  * exprIds, plan_id values, JVM lambda addresses — must map to stable
+  * exprIds, plan_id values, RDD ids, JVM lambda addresses — must map to stable
   * placeholders so regenerated artifacts diff clean when structure is
   * unchanged, while genuinely different structures still differ. */
 class PlanNormalizeSpec extends AnyFunSuite {
@@ -36,6 +36,14 @@ class PlanNormalizeSpec extends AnyFunSuite {
     assert(n(hex) === "Arguments: a.CorpusOps$$$LAMBDA, obj#1")
     assert(n(dec) === n(hex))
     assert(n("udf(Lambda$57/1626877848)") === "udf(LAMBDA)")
+  }
+
+  test("RDD ids become a placeholder") {
+    val early = "MapPartitionsRDD[37] at localCheckpoint at Staging.scala:37, ExistingRDD"
+    val late = "MapPartitionsRDD[392] at localCheckpoint at Staging.scala:37, ExistingRDD"
+    assert(n(early) === "MapPartitionsRDD[N] at localCheckpoint at Staging.scala:37, ExistingRDD")
+    assert(n(late) === n(early))
+    assert(n("ParallelCollectionRDD[5]") === "ParallelCollectionRDD[N]")
   }
 
   test("idempotent") {
