@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   *    integer centroid. Empty clusters keep their previous centroid.
   *
   * Scale: the canonical Lloyd-on-a-cluster shape — centroids live on
-  * the driver (k·d = 512 longs), broadcast into a codegen'd argmin
+  * the driver (k·d = 512 longs), closure-captured by an argmin UDF
   * projection; each round's update is ONE (cid, pos)-keyed partial
   * aggregation whose result is k·d rows regardless of corpus size.
   * T rounds = T corpus scans of a materialized integer table, no
@@ -94,31 +94,6 @@ object ClusterOps {
       Assign(bd, bi, sd, si)
     })
 
-  /** The r15 literal-expression argmin, kept ONLY as the A/B control
-    * behind `spark.graft.kmeans.exprArgmin=true` (dev flag, never set
-    * in any query path): k aggregate higher-order functions over k·d
-    * array literals + one array_sort, with the sorted array bound as a
-    * lambda variable so head/second are read without re-sorting. Same
-    * exact int64 distances and the same (d2, cid) tie-break as the
-    * UDF; exists so ScaleBench/Scratch can price the UDF against
-    * codegen'd expressions in the executor-bound regime (the sf0.1 win
-    * was driver-side compile time — the 100 TB question is per-row
-    * cost, and this flag lets both forms run on the same corpus). */
-  private def assignExprCol(cents: Array[Array[Long]]) = {
-    val entries = cents.zipWithIndex.map { case (c, j) =>
-      val arr = c.mkString("array(", "L,", "L)")
-      s"struct(aggregate(zip_with(q, $arr, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x) as d2, ${j}L as cid)"
-    }.mkString(",")
-    expr(s"""element_at(transform(array(array_sort(array($entries))), sd ->
-      named_struct('d2', sd[0].d2, 'cid', sd[0].cid,
-        'd2b', sd[1].d2, 'cid_b', sd[1].cid)), 1)""")
-  }
-
-  private def assignCol(s: SparkSession, cents: Array[Array[Long]]) =
-    if (s.conf.getOption("spark.graft.kmeans.exprArgmin").contains("true"))
-      assignExprCol(cents)
-    else assignWith(cents)(col("q"))
-
   /** The shared Lloyd trajectory: quantized table, `Rounds` rounds of
     * assign/update, returning the final (vec_id, q, cid, d2)
     * assignment and the final centroids. Both q174 (cluster stats)
@@ -145,10 +120,9 @@ object ClusterOps {
       .select(col("q")).collect()
     var cents: Array[Array[Long]] =
       seeds.map(_.getSeq[Long](0).toArray)
-    val sess = emb.sparkSession
-    // Lloyd rounds: codegen'd argmin assignment, k·d-row update agg
+    // Lloyd rounds: argmin UDF assignment, k·d-row update agg
     (1 to Rounds).foreach { _ =>
-      val sums = qm.withColumn("a", assignCol(sess, cents))
+      val sums = qm.withColumn("a", assignWith(cents)(col("q")))
         .select(col("a.cid").as("cid"), posexplode(col("q")).as(Seq("pos", "v")))
         .groupBy(col("cid"), col("pos"))
         .agg(sum(col("v")).as("sv"), count(lit(1)).as("n"))
@@ -160,7 +134,7 @@ object ClusterOps {
       }
       cents = next
     }
-    val assigned = qm.withColumn("a", assignCol(sess, cents))
+    val assigned = qm.withColumn("a", assignWith(cents)(col("q")))
       .select(col("vec_id"), col("q"),
         col("a.cid").as("cid"), col("a.d2").as("d2"))
     (assigned, cents)
@@ -287,9 +261,9 @@ object ClusterOps {
     * re-k before anything downstream (SemDeDup blocking, IVF probe
     * tuning) trusts the partition.
     *
-    * Both distances fall out of the SAME sorted codegen'd distance
-    * array the assignment uses (head = a, second = b) — no extra
-    * pass, no join; the only float is the final ratio, rounded 4.
+    * Both distances fall out of the SAME argmin UDF the assignment
+    * uses (best = a, second best = b) — no extra pass, no join; the
+    * only float is the final ratio, rounded 4.
     * Identical-to-centroid duplicates (a = b = 0) score 0 by
     * convention on both engines.
     *
@@ -300,7 +274,7 @@ object ClusterOps {
     (s, dir) => {
       val (assigned, cents) = lloyd(s, dir)
       val sil = assigned
-        .withColumn("a2", assignCol(s, cents))
+        .withColumn("a2", assignWith(cents)(col("q")))
         .select(col("cid"), col("d2").as("a"), col("a2.d2b").as("b"))
         .withColumn("s",
           when(greatest(col("a"), col("b")) === 0L, lit(0.0))

@@ -1202,15 +1202,6 @@ object DedupOps {
     * verify counts shared hashes THROUGH the inverted index
     * (co-occurrence triples grouped per pair) — set arrays never
     * cross a shuffle (see [[containmentRecallOf]]). */
-  /** Perf diagnostics for the containment family
-    * (`spark.graft.contain.debug=true`): per-stage wall laps at the
-    * materialize boundaries plus the intrinsic row masses (candidate
-    * pairs, inverted-index incidences) — the numbers a closure
-    * adjudication needs. Debug-only counts re-run their frames;
-    * production paths never pay them. */
-  private def containDbg(s: org.apache.spark.sql.SparkSession): Boolean =
-    s.conf.getOption("spark.graft.contain.debug").contains("true")
-
   private[graft] def containProbes(hashed: DataFrame,
       tau: Double = ContainTauDefault): DataFrame =
     hashed.select(col("doc_id").as("small_id"),
@@ -1318,20 +1309,6 @@ object DedupOps {
     val incidences = ia.as("a")
       .join(ib.as("b"), col("a.h") === col("b.h") && orderPred)
       .select(col("a.doc_id").as(aName), col("b.doc_id").as(bName))
-    if (containDbg(hashed.sparkSession)) {
-      // intrinsic-mass attribution (debug recomputes these frames):
-      // the incidence count IS the Σ_h df_a·df_b mass the closure
-      // argument prices, and the candidate-restricted count is what
-      // the aggregate actually folds
-      val t0 = System.nanoTime()
-      val nInc = incidences.count()
-      val tInc = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      val nRes = incidences.join(pairs, Seq(aName, bName)).count()
-      val tRes = (System.nanoTime() - t1) / 1e9
-      println(f"[contain] incidences=$nInc t=$tInc%.2fs " +
-        f"candidate-restricted=$nRes t=$tRes%.2fs")
-    }
     // `restrictHint`: the restrict join is incidences (big) ⋈ pairs;
     // when the caller's pair frame is DISTINCT-keyed (so its hash
     // partitioning has no heavy key by construction) and slim, a
@@ -1339,29 +1316,10 @@ object DedupOps {
     // q245 path passes it (r16 attribution measured the restrict join
     // as the operator's single heaviest stage); small-pair callers
     // (q51/q241) leave it None and let AQE broadcast.
-    val restr = restrictHint.map(pairs.hint(_)).getOrElse(pairs)
-    // A/B seam (r16 verdict item 3): `spark.graft.contain.preagg=true`
-    // (dev flag, unset in every driver path) aggregates the incidence
-    // stream to (pair, n_common) BEFORE the restrict join — the §2.3
-    // map-side-combine lever the join-first closure never measured.
-    // Same output rows either way: grouping all co-occurring pairs and
-    // then inner-joining the candidate frame keeps exactly the rows
-    // the join-then-group form keeps. What it changes is WHERE the
-    // rows die: x100 recorded 276.7M incidences vs 273.8M distinct
-    // co-occurring pairs (pairs repeat ~1.01×), so the partial agg can
-    // collapse almost nothing and builds a 273.8M-group hash state —
-    // this flag exists to price that prediction, not to ship it.
-    if (sess.conf.getOption("spark.graft.contain.preagg").contains("true"))
-      incidences
-        .groupBy(col(aName), col(bName))
-        .agg(count(lit(1)).as("n_common"))
-        .join(restr, Seq(aName, bName))
-        .select(pairs.columns.map(col) :+ col("n_common"): _*)
-    else
-      incidences
-        .join(restr, Seq(aName, bName))
-        .groupBy(pairs.columns.map(col): _*)
-        .agg(count(lit(1)).as("n_common"))
+    incidences
+      .join(restrictHint.map(pairs.hint(_)).getOrElse(pairs), Seq(aName, bName))
+      .groupBy(pairs.columns.map(col): _*)
+      .agg(count(lit(1)).as("n_common"))
   }
 
   private[operators] def containmentRecallOf(hashed: DataFrame,
@@ -1373,15 +1331,11 @@ object DedupOps {
     // columns it had just projected away (SCALE.md Round 15). It is
     // also MATERIALIZED, feeding three consumers (the two per-side
     // semi-joins inside commonHashCounts and the final verify join).
-    val dbg = containDbg(hashed.sparkSession)
-    val tCand0 = System.nanoTime()
     val cand = materialize(containProbes(hashed, tau).join(containIndex(hashed), "h")
       .filter(col("n_small") < col("n_big") ||
         (col("n_small") === col("n_big") && col("small_id") < col("big_id")))
       .select(col("small_id"), col("n_small"), col("big_id"), col("n_big"))
       .distinct(), s"${tag}_cand")
-    if (dbg) println(f"[contain] cand assembled pairs=${cand.count()} " +
-      f"t=${(System.nanoTime() - tCand0) / 1e9}%.2fs (probe⋈index + distinct)")
     // commonHashCounts is candidate-restricted and carries cand's
     // size columns through its group keys — the verify IS its output
     commonHashCounts(hashed, cand, "small_id", "big_id",
@@ -1410,14 +1364,9 @@ object DedupOps {
     * the DuckDB oracle truncates IDENTICALLY, so the comparison is
     * exact either way. The MinHash family keeps the full digest (its
     * K permutations are the digest's 8-char slices). */
-  private def hashed16Of(sh: DataFrame, tag: String): DataFrame = {
-    val t0 = System.nanoTime()
-    val out = materialize(sh.select(col("doc_id"),
+  private def hashed16Of(sh: DataFrame, tag: String): DataFrame =
+    materialize(sh.select(col("doc_id"),
       expr("transform(shingles, s -> substr(sha2(s, 256), 1, 16))").as("hashes")), tag)
-    if (containDbg(sh.sparkSession))
-      println(f"[contain] hashed16 $tag t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-    out
-  }
 
   private val hash16SqlCte =
     """hs AS (SELECT doc_id,

@@ -793,23 +793,7 @@ object LmOps {
     // 26.5M-row sorts) into a sort-free hash join against the small
     // aggregated side; at bench scale AQE still upgrades it to
     // broadcast when the side is tiny.
-    // Perf laps for the span family (`spark.graft.span.debug=true`,
-    // the suffix/contain idiom): materialize boundary + debug-only
-    // re-runs of the two downstream stages, for closure attributions.
-    val dbg = s.conf.getOption("spark.graft.span.debug").contains("true")
-    val t0 = System.nanoTime()
     val spans = materialize(spanWindows(s, dir), "q98_spans")
-    if (dbg) {
-      println(f"[span] spans materialized (generate+shuffle+ckpt) " +
-        f"t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      val t1 = System.nanoTime()
-      val n = spans.count()
-      println(f"[span] ckpt scan n=$n t=${(System.nanoTime() - t1) / 1e9}%.2fs")
-      val t2 = System.nanoTime()
-      val nsh = sharedSpans(spans).count()
-      println(f"[span] shared-hash agg n=$nsh " +
-        f"t=${(System.nanoTime() - t2) / 1e9}%.2fs (debug re-agg)")
-    }
     val shared = sharedSpans(spans).withColumn("dup", lit(1))
     spans.join(shared.hint("shuffle_hash"), Seq("h"), "left_outer")
       .groupBy(col("doc_id"))
@@ -1211,6 +1195,9 @@ object LmOps {
   // ---------------------------------------------------------------
 
   private val DoremiRounds = 5
+  /** Most distinct `source` values q173 reads into its driver-side
+    * dictionary; a corpus with more fails instead of collecting them. */
+  private[operators] val MaxSources = 1000
   private val DoremiSmooth = 0.01 // uniform-mixing floor c
   private val DoremiKeep = 0.99   // 1 − c as its OWN literal: both engines
                                   // parse "0.99" rather than one computing
@@ -1270,8 +1257,8 @@ object LmOps {
       // rode every corpus-sized exchange — the bigram checkpoint, the
       // c2s build's (source, w1, w2) map-side partials, and the probe's
       // (doc_id, source) partials. The dict is a LITERAL MAP from one
-      // bounded collect of the distinct sources (the same k-row class
-      // as the multiplicative-weights replay collect below), so encode
+      // collect of at most MaxSources distinct sources (the same k-row
+      // class as the multiplicative-weights replay collect below), so encode
       // and decode are map lookups fused into their stages — a first
       // cut as a broadcast join + window dict measured SLOWER than the
       // string form at sf0.1 (2.45 vs 1.65 s min-wall: two extra
@@ -1280,14 +1267,6 @@ object LmOps {
       // the sid assignment deterministic; bijective by construction,
       // so every sid-keyed groupBy groups exactly the rows the source-
       // keyed one did.
-      val lmDbg = s.conf.getOption("spark.graft.lm.debug").contains("true")
-      def lapT[A](tag: String)(f: => A): A =
-        if (!lmDbg) f else {
-          val t0 = System.nanoTime()
-          val r = f
-          println(f"[lm] q173 $tag t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-          r
-        }
       // null-safe: a null source stays null through encode AND decode
       // (element_at on a missing/null key yields null), so null-keyed
       // groups behave exactly as they did with the string key.
@@ -1295,16 +1274,19 @@ object LmOps {
       // exchange is for CPU-heavy narrow maps, not a column-pruned
       // distinct (its own doc) — this keeps the serial dict job at
       // scan → partial distinct → one k-row exchange.
-      val srcs = lapT("dict")(Tables.load(s, dir, "documents")
-        .select(col("source")).distinct()
-        .collect().map(_.getString(0)).filter(_ != null).sorted)
+      val srcs = Tables.load(s, dir, "documents")
+        .select(col("source")).where(col("source").isNotNull).distinct()
+        .take(MaxSources + 1).map(_.getString(0)).sorted
+      if (srcs.length > MaxSources) throw new IllegalStateException(
+        s"q173_doremi_weights: more than $MaxSources distinct sources; " +
+        "the source dictionary and the weight replay run on the driver")
       val sidOf = map(srcs.zipWithIndex.flatMap { case (nm, i) =>
         Seq(lit(nm), lit(i + 1)) }.toIndexedSeq: _*)
       val srcOf = map(srcs.zipWithIndex.flatMap { case (nm, i) =>
         Seq(lit(i + 1), lit(nm)) }.toIndexedSeq: _*)
-      val bgs = lapT("bgs")(materialize(
+      val bgs = materialize(
         bigramsDirect(d.withColumn("sid", element_at(sidOf, col("source"))),
-          Seq("sid")), "doremi_bg"))
+          Seq("sid")), "doremi_bg")
       // FUSED scoring, composed on the model side (q108's idiom, guide
       // §2.3): the corpus-sized bgs frame is aggregated ONCE — to the
       // finest model table c2s(source, w1, w2) — and every other count
@@ -1320,9 +1302,9 @@ object LmOps {
       // models by construction) and the same -ln((c2+α)/(c1+v·α))
       // chain per leg, evaluated per bigram TYPE instead of per
       // token, each rounded at 6 per doc exactly as before.
-      val c2s = lapT("c2s_build")(materialize(
+      val c2s = materialize(
         bgs.groupBy(col("sid"), col("w1"), col("w2"))
-          .agg(count(lit(1)).as("c2s")), "doremi_c2s"))
+          .agg(count(lit(1)).as("c2s")), "doremi_c2s")
       val c2t = c2s.groupBy(col("w1"), col("w2"))
         .agg(sum(col("c2s")).as("c2t"))
       val c1s = c2s.groupBy(col("sid"), col("w1"))
@@ -1342,19 +1324,6 @@ object LmOps {
             .as("ref_nll"),
           (-log((col("c2s") + Alpha) / (col("c1s") + col("vs") * Alpha)))
             .as("fit_nll"))
-      // perf laps (`spark.graft.lm.debug=true`, the contain/span idiom):
-      // debug-only re-runs of the model subtrees, for attribution
-      if (lmDbg) {
-        def lap(tag: String)(f: => Long): Unit = {
-          val t0 = System.nanoTime()
-          val n = f
-          println(f"[lm] q173 $tag n=$n t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-        }
-        lap("c2s")(c2s.count())
-        lap("vt")(vt.collect().head.getLong(0))
-        lap("vs")(vs.count())
-        lap("scoredType")(scoredType.count())
-      }
       val scoredDoc = bgs
         .join(broadcast(scoredType), Seq("sid", "w1", "w2"))
         .groupBy(col("doc_id"), col("sid"))
@@ -1373,7 +1342,7 @@ object LmOps {
         .select(col("source"), col("n_docs"), col("l_ref"), col("l_fit"),
           col("excess"))
       // k-row multiplicative-weights replay (k = domain count, ≤ dozens)
-      val rows = lapT("probe")(perSource.orderBy(col("source")).collect())
+      val rows = perSource.orderBy(col("source")).collect()
       val k = rows.length
       val excess = rows.map(_.getDouble(4))
       var w = Array.fill(k)(1.0 / k)

@@ -48,19 +48,11 @@ object MixOps {
   val q92Decontaminate: QueryDef = QueryDef(
     "q92_decontaminate",
     (s, dir) => {
-      // A/B seam (r16 verdict item 6): the r16 fused form re-splits
-      // each doc-disjoint leg's own slice (+8% wall, −26% cpu at
-      // sf0.1); `spark.graft.gram.pin=true` (dev flag, unset in every
-      // driver path) restores the checkpointed form so ScaleBench can
-      // price the trade at x10/x100 where the removed corpus-sized
-      // materialization matters. Identical rows either way — the pin
-      // only changes where the explode output lives.
-      val gramsRaw = CorpusOps.fiveGrams(s, dir)
+      // not materialized: each doc-disjoint leg re-splits only its own
+      // slice, which beats a corpus-sized checkpoint at x10 and x100
+      // (SCALE.md, q92 fused re-split vs checkpointed grams)
+      val grams = CorpusOps.fiveGrams(s, dir)
         .select(col("doc_id"), explode(col("shingles")).as("sh"))
-      val grams =
-        if (s.conf.getOption("spark.graft.gram.pin").contains("true"))
-          materialize(gramsRaw, "q92_grams")
-        else gramsRaw
       val benchGrams = grams.filter(col("doc_id") % 10 === 7)
         .select(col("sh")).distinct()
       grams.filter(col("doc_id") % 10 =!= 7)

@@ -263,17 +263,7 @@ object SuffixOps {
       return s.createDataFrame(s.sparkContext.emptyRDD[Row], rankSchema)
     val maxLen = maxLenRow.getInt(0).toLong
 
-    // perf diagnostics (spark.graft.suffix.debug=true): per-round
-    // active-set size, class count, and wall time — the working-set
-    // drain curve the retirement refinement is betting on
-    val dbg = s.conf.getOption("spark.graft.suffix.debug").contains("true")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (dbg) {
-      println(f"[suffix] $tag t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      t0 = System.nanoTime()
-    }
     val (combined0, totalPositions, classes0) = initialHeadRanks(tokens)
-    lap(s"init positions=$totalPositions classes=$classes0")
     require(totalPositions <= MaxPackablePositions,
       s"suffix array: $totalPositions token positions exceed the packed " +
       "int64 sort-key bound (2^31-1) — shard the corpus per job or " +
@@ -313,8 +303,6 @@ object SuffixOps {
       // shrinks geometrically once k passes the local repeat depth,
       // and the loop ends at nActive = 0 long before k reaches maxLen.
       val saturated = retiredNow == 0L && runs == activeClasses
-      lap(s"round k=$k in=$nActive out=$nNew retired=$retiredNow runs=$runs" +
-        (if (saturated) " SATURATED" else ""))
       active = newActive
       nActive = if (saturated) 0L else nNew
       activeClasses = runs - retiredNow
@@ -323,26 +311,13 @@ object SuffixOps {
     (active :: pieces).reduce(_ unionByName _)
   }
 
-  private def dbgOn(s: SparkSession): Boolean =
-    s.conf.getOption("spark.graft.suffix.debug").contains("true") ||
-      sys.env.get("SPARK_GRAFT_SUFFIX_DEBUG").contains("true")
-  private def dbgLap(on: Boolean, tag: String, t0: Long): Long = {
-    if (on) println(f"[suffix] $tag t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-    System.nanoTime()
-  }
-
   /** Adjacent-suffix LCPs: (dA, iA, lcp, wA) for each neighbor pair in
     * suffix-array order — lcp computed by direct comparison of the two
     * doc-bounded suffix slices. */
-  private def indexedSa(s: SparkSession, dir: String): DataFrame = {
-    val ranks = suffixRanks(s, dir)
-    val t0 = System.nanoTime()
-    val out = zipWithRank(
-      ranks.orderBy(col("rk"), col("doc_id"), col("i")), "idx")
+  private def indexedSa(s: SparkSession, dir: String): DataFrame =
+    zipWithRank(
+      suffixRanks(s, dir).orderBy(col("rk"), col("doc_id"), col("i")), "idx")
       .localCheckpoint()
-    dbgLap(dbgOn(s), "indexedSa sort+zip", t0)
-    out
-  }
 
   /** Tokens shipped per suffix row through the LCP joins. Adjacent-SA
     * neighbors sharing a prefix past this bound escalate to the exact
@@ -389,7 +364,6 @@ object SuffixOps {
         col("sufA"), col("sufLenA"),
         expr(s"slice(wBf, iB, $LcpBound)").as("sufB"),
         (size(col("wBf")) - col("iB") + 1).as("sufLenB"))
-    val tSc = System.nanoTime()
     // conclusive: a mismatch inside the bound, or either suffix ending
     // within it (its end IS the lcp); inconclusive only when the two
     // slices agree on all LcpBound tokens and both suffixes continue.
@@ -403,10 +377,6 @@ object SuffixOps {
         (col("lcp") === LcpBound && col("sufLenA") > LcpBound &&
           col("sufLenB") > LcpBound).as("open"))
       .localCheckpoint()
-    dbgLap(dbgOn(sa.sparkSession), "neighborLcp bounded pass", tSc)
-    if (dbgOn(sa.sparkSession))
-      println(s"[suffix] neighborLcp open=${scored.filter(col("open")).count()} " +
-        s"of ${scored.count()}")
     val resolved = scored.filter(!col("open"))
       .select(col("idx"), col("dA"), col("iA"), col("lcp"))
     val escalated = lcpCols(scored.filter(col("open"))

@@ -56,10 +56,14 @@ object FileScan {
       .otherwise("text/plain")
   }
 
-  /** Depth of a file below the scan root (root-level file = 1). */
-  private def depthBelow(root: String): Column = {
-    val rootDepth = size(split(lit(root.stripSuffix("/")), "/"))
-    size(split(regexp_replace(col("file_path"), "^file:", ""), "/")) - rootDepth
+  /** Depth of a file below the scan root (root-level file = 1). Both
+    * sides count the segments of their URI path, so `/x`, `file:/x`,
+    * `file:///x` and `scheme://host/x` roots cap at the same level. */
+  private def depthBelow(conf: Broadcast[SerializableConfiguration], root: String): Column = {
+    val r = new Path(root)
+    val rootPath = r.getFileSystem(conf.value.value).makeQualified(r).toUri.getPath
+    val filePath = regexp_replace(col("file_path"), "^[A-Za-z][A-Za-z0-9+.-]*:(//[^/]*)?", "")
+    size(split(filePath, "/")) - rootPath.stripSuffix("/").split("/", -1).length
   }
 
   // nullable, as binaryFile reads them
@@ -142,7 +146,7 @@ object FileScan {
     * FIFO/LIFO position, so order by it wherever order matters. */
   def scan(spark: SparkSession, cfg: ScanConfig): DataFrame = {
     val conf = hadoopConf(spark)
-    val depthOk = if (cfg.recursive) depthBelow(cfg.root) <= cfg.maxDepth else lit(true)
+    val depthOk = if (cfg.recursive) depthBelow(conf, cfg.root) <= cfg.maxDepth else lit(true)
     val globOk = TextFunctions.globMatch(col("file_name"), cfg.glob)
 
     val listed = listFiles(spark, cfg.root, cfg.recursive)

@@ -12,21 +12,6 @@ class ClusterOpsSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.01"
 
-  test("q174/q182: the expr-argmin A/B control (spark.graft.kmeans.exprArgmin) is row-identical") {
-    // the flag swaps the closure UDF for the literal-expression argmin
-    // (the ScaleBench A/B control); both must produce the same exact
-    // integer assignment, distances, and silhouette
-    val udf174 = ClusterOps.q174KmeansClusters.fn(spark, dir).collect().toSeq
-    val udf182 = ClusterOps.q182Silhouette.fn(spark, dir).collect().toSeq
-    spark.conf.set("spark.graft.kmeans.exprArgmin", "true")
-    try {
-      val expr174 = ClusterOps.q174KmeansClusters.fn(spark, dir).collect().toSeq
-      val expr182 = ClusterOps.q182Silhouette.fn(spark, dir).collect().toSeq
-      assert(udf174 === expr174, "exprArgmin changed q174's rows")
-      assert(udf182 === expr182, "exprArgmin changed q182's rows")
-    } finally spark.conf.unset("spark.graft.kmeans.exprArgmin")
-  }
-
   test("q174: clusters partition the corpus and distances are true nearest-centroid") {
     val emb = graft.Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding")).collect()

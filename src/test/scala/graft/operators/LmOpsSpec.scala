@@ -402,6 +402,17 @@ class LmOpsSpec extends SparkSpec {
     assert(rows.exists(_.getDouble(4) > 0.0))
   }
 
+  test("q173: more than MaxSources distinct sources fails loudly instead of collecting them") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-q173-sources").toString
+    (0 to LmOps.MaxSources).map(i => (i.toLong, s"words of doc $i", "en", s"src$i", 12L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    val e = intercept[IllegalStateException](LmOps.q173DoremiWeights.fn(spark, tmp))
+    assert(e.getMessage.contains("q173_doremi_weights") &&
+      e.getMessage.contains(s"more than ${LmOps.MaxSources} distinct sources"), e.getMessage)
+  }
+
   test("q208: Moore-Lewis scores favor the in-domain slice and keep = score<0") {
     val out = LmOps.q208MooreLewis.fn(spark, dir)
     val src = graft.Tables.load(spark, dir, "documents")
