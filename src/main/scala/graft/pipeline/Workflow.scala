@@ -48,7 +48,9 @@ object Workflow {
     * chord callback would assemble (workers/file_processing/tasks.py:1023-1090).
     *
     * Exactly TWO jobs touch source bytes / the LLM:
-    *  1. scan → anti-join, with the listing and post-dedup counts
+    *  1. scan → anti-join against the history table (a history that
+    *     exists but cannot be read fails the run here, before any
+    *     completion is billed), with the listing and post-dedup counts
     *     collected via [[Observation]] on that same pass — a separate
     *     `files.count()` would add a job over the scan's spread;
     *  2. extraction, materialized ONCE — the fs sink, review queue,
@@ -61,14 +63,7 @@ object Workflow {
       client: () => LLMClient): RunSummary = {
     val files = FileScan.scan(spark, spec.scan)
 
-    val history: DataFrame = try {
-      spark.read.parquet(spec.historyPath)
-    } catch {
-      case _: Exception =>
-        import spark.implicits._
-        Seq.empty[(String, String, String, String)]
-          .toDF("cache_key", "file_path", "status", "result")
-    }
+    val history = Sinks.readHistory(spark, spec.historyPath)
 
     val obsScan = Observation()
     val obsFresh = Observation()

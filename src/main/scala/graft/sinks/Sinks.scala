@@ -1,7 +1,14 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Destination connectors (SURVEY.md K1-K7) on Spark primitives.
   *
@@ -42,20 +49,78 @@ object Sinks {
       .json(outputFolder)
   }
 
+  /** The FileHistory table's columns (SURVEY.md K5). */
+  private val HistorySchema: StructType = StructType(
+    Seq("cache_key", "file_path", "status", "result").map(StructField(_, StringType)))
+
+  /** The FileHistory table at `historyPath`, or an empty one when the
+    * path does not exist. Any other read error propagates: an unreadable
+    * history must stop a run before extraction bills a completion, not
+    * read as "nothing processed yet". */
+  def readHistory(spark: SparkSession, historyPath: String): DataFrame = {
+    val p = new Path(historyPath)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      spark.read.parquet(historyPath)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), HistorySchema)
+  }
+
+  /** Rows per history bucket before the table splits 16 ways further.
+    * A bucket is one file, and a merge rewrites each bucket it touches
+    * whole, so the value trades the fixed cost of a file against the
+    * rows a small merge rewrites. Measured on 4 vCPUs (local filesystem
+    * without native Hadoop, rows of ~81 B on disk): 5,000 rows take
+    * 2.1–3.2 s as 256 files and 0.21–0.24 s as one, ~9 ms a file; one
+    * task writes 2^18 rows as one file in 0.87–0.97 s and 2^20 rows in
+    * 3.1–3.7 s. A 1-row upsert into a 2^18-row table takes 1.40–1.50 s
+    * at one bucket and 1.24–1.30 s at 16, so up to 2^18 rows a bucket's
+    * rewrite adds ~0.2 s to the upsert's fixed cost of jobs; at 2^20 rows
+    * the rewrite alone would be ~3 s per upsert. */
+  private[sinks] val RowsPerBucket: Long = 1L << 18
+
+  /** Widest bucket name: two hex characters of `cache_key`, 256 buckets. */
+  private val MaxWidth = 2
+
+  /** Characters of `cache_key` in a table's bucket name: the smallest `w`
+    * of 0, 1, 2 with `rows / 16^w ≤ RowsPerBucket`, capped at 2 so the
+    * bucket set stays ≤256 whatever the table's size. */
+  private[sinks] def bucketWidth(rows: Long): Int =
+    (0 until MaxWidth).find(w => rows <= (RowsPerBucket << (4 * w))).getOrElse(MaxWidth)
+
+  // the "x" marker keeps partition-value type inference on STRING — an
+  // all-numeric bucket set ("12", "47") would otherwise infer INT and
+  // break later lookups of hex buckets like "ec"
+  private val BucketDir = "key_prefix=x"
+  private def bucketOf(width: Int) = concat(lit("x"), substring(col("cache_key"), 1, width))
+
   /** K5: FileHistory upsert (MERGE semantics on a parquet state table):
-    * new rows replace same-cache_key rows, others survive. Parquet has no
-    * MERGE — on Delta this is a real MERGE INTO; here the table is
-    * partitioned by `key_prefix = substr(cache_key, 1, 2)` (≤256 buckets,
-    * sha256 keys spread uniformly) and an upsert reads + rewrites ONLY
-    * the buckets its update keys land in. A 1-row upsert into a 100 TB
-    * history touches ~1/256th of the table, not all of it.
+    * new rows replace rows with the same (cache_key, file_path) — the key
+    * `FileScan.dedupAgainstHistory` skips files by — and others survive,
+    * so the same content at several paths keeps one row per path.
+    * Parquet has no MERGE — on Delta this is a real MERGE INTO; here the
+    * table is partitioned by `key_prefix = "x" + substr(cache_key, 1, w)`
+    * and an upsert reads + rewrites ONLY the buckets its update keys land
+    * in.
     *
-    * Every write (first write, flat-table migration, bucket merge) goes
-    * through `writeBuckets`: each bucket it writes is written by one
-    * task as one file, and the buckets are spread over every core. Scale
-    * note: a history row is ~203 B on disk (perfbench's
-    * `sinks.history_bytes_per_new_row`), so at 10⁹ files a bucket is
-    * ≈0.8 GB, all of it written by its one task.
+    * The width `w` follows the table's size (`bucketWidth` of the table's
+    * rows, counted from its parquet footers, plus the update's rows). A
+    * history row is ~80 B on disk in a file of thousands of rows
+    * (perfbench's `sinks.history_bytes_per_new_row`: 79 B for 5,000 rows
+    * in one file, 203 B when the same rows were spread over 256 files).
+    *  - w = 0 up to `RowsPerBucket` (2^18) rows: one bucket, `key_prefix=x`,
+    *    so a write is one file; every upsert rewrites all ≤~21 MB of it.
+    *  - w = 1 up to 16 × `RowsPerBucket` (~4.2 M) rows: 16 buckets of
+    *    ≤2^18 rows; a 1-row upsert rewrites ~1/16th of the table.
+    *  - w = 2 above that: 256 buckets, the layout's widest. A 1-row upsert
+    *    touches ~1/256th of the table; at 10⁹ files a bucket is ≈0.3 GB,
+    *    written by one task.
+    * A table whose width on disk differs from the rule's (a flat legacy
+    * table, or one that grew past a threshold) is re-laid out once: every
+    * row merged and the whole directory swapped. An upsert of no rows
+    * writes nothing.
+    *
+    * Every write goes through `writeBuckets`: each bucket it writes is
+    * written by one task as one file, and the buckets are spread over
+    * every core.
     *
     * Crash safety: merged buckets are staged, then promoted per bucket as
     * rename(current → __old), rename(staged → current), delete(__old) —
@@ -66,53 +131,60 @@ object Sinks {
   def upsertHistory(spark: SparkSession, historyPath: String,
       updates: DataFrame): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(historyPath)
+    val dst = new Path(historyPath)
     // resolve the FS from the path itself — fs.defaultFS may be a
     // different filesystem (e.g. history on s3a, default hdfs)
     val fs = dst.getFileSystem(conf)
-    recoverOrphans(fs, dst, historyPath)
-    // the "x" marker keeps partition-value type inference on STRING —
-    // an all-numeric bucket set ("12", "47") would otherwise infer INT
-    // and break later lookups of hex buckets like "ec"
-    val keyed = updates.withColumn("key_prefix",
-      concat(lit("x"), substring(col("cache_key"), 1, 2)))
+    val tableWidth = recoverOrphans(fs, dst, historyPath)
+    // one job over the updates gives both their row count and their
+    // buckets at the widest width, which fix those at every narrower one
+    val perBucket = updates.groupBy(bucketOf(MaxWidth)).count()
+      .collect() // bounded: ≤256 values
+    require(!perBucket.exists(_.isNullAt(0)), "upsertHistory: a row has no cache_key")
+    // nothing to record; a first write of no rows would leave a directory
+    // with no parquet file, which no later read can infer a schema from
+    if (perBucket.isEmpty) return
+    val current = readHistory(spark, historyPath)
+    // past 16 × RowsPerBucket rows the width is capped whatever the rest
+    val tableRows = footerRows(current, conf, upTo = RowsPerBucket << (4 * (MaxWidth - 1)))
+    val width = bucketWidth(tableRows + perBucket.map(_.getLong(1)).sum)
+    val keyed = updates.withColumn("key_prefix", bucketOf(width))
+    val rowKey = Seq("cache_key", "file_path")
     if (!fs.exists(dst)) {
-      writeBuckets(keyed, SaveMode.ErrorIfExists, historyPath)
+      writeBuckets(keyed, width, SaveMode.ErrorIfExists, historyPath)
       return
     }
-    val currentAll = spark.read.parquet(historyPath)
-    val partitioned = currentAll.columns.contains("key_prefix")
     val staged = historyPath + "__staged"
-    if (!partitioned) {
-      // one-time migration of a flat legacy table: merge everything and
-      // swap the whole directory (old copy set aside until promote lands)
-      val merged = currentAll
-        .join(updates.select("cache_key"), Seq("cache_key"), "left_anti")
+    if (!tableWidth.contains(width)) {
+      // re-layout (a flat legacy table, or a table at another width):
+      // merge everything and swap the whole directory (old copy set
+      // aside until promote lands)
+      val merged = current.drop("key_prefix")
+        .join(updates.select(rowKey.map(col): _*), rowKey, "left_anti")
         .unionByName(updates)
-        .withColumn("key_prefix", concat(lit("x"), substring(col("cache_key"), 1, 2)))
-      writeBuckets(merged, SaveMode.Overwrite, staged)
-      val old = new org.apache.hadoop.fs.Path(historyPath + "__old")
+        .withColumn("key_prefix", bucketOf(width))
+      writeBuckets(merged, width, SaveMode.Overwrite, staged)
+      val old = new Path(historyPath + "__old")
       if (fs.exists(old)) fs.delete(old, true)
       if (!fs.rename(dst, old))
         throw new java.io.IOException(s"upsertHistory: cannot set aside $dst")
-      if (!fs.rename(new org.apache.hadoop.fs.Path(staged), dst))
+      if (!fs.rename(new Path(staged), dst))
         // recoverOrphans restores the set-aside table on the next call
         throw new java.io.IOException(
-          s"upsertHistory: migration promote failed; prior table preserved at $old")
+          s"upsertHistory: re-layout promote failed; prior table preserved at $old")
       fs.delete(old, true)
       return
     }
-    val prefixes = keyed.select("key_prefix").distinct()
-      .collect().map(_.getString(0)) // bounded: ≤256 values
-    val merged = currentAll
+    val prefixes = perBucket.map(_.getString(0).take(1 + width)).distinct
+    val merged = current
       .filter(col("key_prefix").isin(prefixes.toIndexedSeq: _*)) // partition pruning
-      .join(updates.select("cache_key"), Seq("cache_key"), "left_anti")
+      .join(updates.select(rowKey.map(col): _*), rowKey, "left_anti")
       .unionByName(keyed)
-    writeBuckets(merged, SaveMode.Overwrite, staged)
+    writeBuckets(merged, width, SaveMode.Overwrite, staged)
     prefixes.foreach { p =>
-      val cur = new org.apache.hadoop.fs.Path(dst, s"key_prefix=$p")
-      val stg = new org.apache.hadoop.fs.Path(staged, s"key_prefix=$p")
-      val old = new org.apache.hadoop.fs.Path(dst, s"key_prefix=$p.__old")
+      val cur = new Path(dst, s"key_prefix=$p")
+      val stg = new Path(staged, s"key_prefix=$p")
+      val old = new Path(dst, s"key_prefix=$p.__old")
       if (fs.exists(old)) fs.delete(old, true)
       if (fs.exists(cur) && !fs.rename(cur, old))
         throw new java.io.IOException(s"upsertHistory: cannot set aside $cur")
@@ -123,16 +195,37 @@ object Sinks {
       // delete the set-aside copy only once the new current is in place
       if (fs.exists(old)) fs.delete(old, true)
     }
-    fs.delete(new org.apache.hadoop.fs.Path(staged), true)
+    fs.delete(new Path(staged), true)
+  }
+
+  /** Rows of a parquet table, summed from its files' footers: reads no
+    * column data and runs no job (0 for a frame with no files). Stops
+    * once the sum passes `upTo`, so a table far past the widest
+    * threshold costs a few footer reads, not one per bucket. The read
+    * options are built once, at the first file: built per file from the
+    * configuration they cost ~11 ms a footer (256 footers: 3.0 s,
+    * against 0.07–0.14 s). */
+  private def footerRows(table: DataFrame, conf: Configuration, upTo: Long): Long = {
+    lazy val options = HadoopReadOptions.builder(conf).build()
+    val counts = table.queryExecution.analyzed
+      .collectFirst { case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location }
+      .fold(Seq.empty[PartitionDirectory])(_.listFiles(Nil, Nil))
+      .iterator.flatMap(_.files).map { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f.fileStatus, conf), options)
+        try reader.getRecordCount finally reader.close()
+      }
+    var rows = 0L
+    while (rows <= upTo && counts.hasNext) rows += counts.next()
+    rows
   }
 
   /** Write a `key_prefix`-partitioned history table with each bucket's
     * rows in one task: without the shuffle, every input partition opens
     * its own writer per bucket and a bucket ends up as many small files.
-    * The explicit count keeps AQE from coalescing the buckets into fewer
-    * tasks. */
-  private def writeBuckets(df: DataFrame, mode: SaveMode, path: String): Unit =
-    df.repartition(math.min(256, df.sparkSession.sparkContext.defaultParallelism),
+    * The explicit count (no more tasks than the width has buckets) keeps
+    * AQE from coalescing the buckets into fewer tasks. */
+  private def writeBuckets(df: DataFrame, width: Int, mode: SaveMode, path: String): Unit =
+    df.repartition(math.min(1 << (4 * width), df.sparkSession.sparkContext.defaultParallelism),
         col("key_prefix"))
       .write.mode(mode).partitionBy("key_prefix").parquet(path)
 
@@ -141,24 +234,27 @@ object Sinks {
     * bucket's only copy, invisible to the prefix-pruned merge (its
     * partition value reads as "XX.__old"). Rename it back before any
     * read; an `__old` whose `cur` also exists is a completed promote's
-    * leftover and is deleted. The flat-table migration has the same
-    * window with `<historyPath>__old` holding the whole table. */
-  private def recoverOrphans(fs: org.apache.hadoop.fs.FileSystem,
-      dst: org.apache.hadoop.fs.Path, historyPath: String): Unit = {
-    val flatOld = new org.apache.hadoop.fs.Path(historyPath + "__old")
+    * leftover and is deleted. The re-layout has the same window with
+    * `<historyPath>__old` holding the whole table. Returns the width of
+    * the table's bucket names, None for a flat table or no table. */
+  private def recoverOrphans(fs: FileSystem, dst: Path, historyPath: String): Option[Int] = {
+    val flatOld = new Path(historyPath + "__old")
     if (fs.exists(flatOld)) {
       if (!fs.exists(dst)) fs.rename(flatOld, dst)
       else fs.delete(flatOld, true)
     }
-    if (!fs.exists(dst)) return
-    fs.listStatus(dst).foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith("key_prefix=") && name.endsWith(".__old")) {
-        val cur = new org.apache.hadoop.fs.Path(dst, name.stripSuffix(".__old"))
-        if (!fs.exists(cur)) fs.rename(st.getPath, cur)
-        else fs.delete(st.getPath, true)
+    if (!fs.exists(dst)) return None
+    val buckets = fs.listStatus(dst).map(_.getPath.getName)
+      .filter(_.startsWith("key_prefix=")).map { name =>
+        if (name.endsWith(".__old")) {
+          val cur = new Path(dst, name.stripSuffix(".__old"))
+          if (!fs.exists(cur)) fs.rename(new Path(dst, name), cur)
+          else fs.delete(new Path(dst, name), true)
+        }
+        name.stripSuffix(".__old")
       }
-    }
+    // the longest name: a key shorter than the width names a narrower bucket
+    buckets.filter(_.startsWith(BucketDir)).map(_.length - BucketDir.length).maxOption
   }
 
   /** A1/K7: usage rollup — group per-call usage rows by run. */

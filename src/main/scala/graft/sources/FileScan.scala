@@ -279,9 +279,12 @@ object FileScan {
       files("file_hash") === col("cache_key"), "left_anti")
 
   /** J3: reuse cached results — left join COMPLETED history, rows with a
-    * cached result carry it (callers skip recompute via the flag). */
+    * cached result carry it (callers skip recompute via the flag). The
+    * history keeps a row per path a content was seen at; one of them
+    * serves, so each file stays one row. */
   def reuseCachedResults(files: DataFrame, history: DataFrame): DataFrame = {
     val done = history.filter(col("status") === "COMPLETED")
+      .dropDuplicates("cache_key")
       .select(col("cache_key"), col("result").as("cached_result"))
     files.join(done, files("file_hash") === done("cache_key"), "left_outer")
       .withColumn("from_cache", col("cached_result").isNotNull)

@@ -58,34 +58,48 @@ class WorkflowSpec extends SparkSpec {
     assert(spark.read.parquet(histPath).count() == 3)
   }
 
-  /** Runs a workflow over one file per text with EVERY optional
-    * destination hop active: fs sink + review queue + result cache +
-    * history upsert + the two summary counts — with the old per-action
-    * re-execution such a run would bill the LLM up to 6×. Returns the
-    * run summary and the number of completions billed. */
-  private def runCounted(tag: String, texts: Seq[String]): (Workflow.RunSummary, Long) = {
-    val srcDir = Files.createTempDirectory(s"graft-$tag-src")
-    texts.zipWithIndex.foreach { case (t, i) =>
-      Files.write(srcDir.resolve(f"f$i%03d.txt"), t.getBytes)
-    }
-    val outDir = Files.createTempDirectory(s"graft-$tag-out").toString + "/results"
-    val histPath = Files.createTempDirectory(s"graft-$tag-hist").toString + "/history"
-    val queueRoot = Files.createTempDirectory(s"graft-$tag-queue").toString
-    val cache = new graft.sinks.ResultCache(
-      () => new graft.streaming.MemoryQueue(s"$tag-${java.util.UUID.randomUUID()}"),
-      ttlSeconds = 600)
-    val spec = Workflow.WorkflowSpec(
-      scan = FileScan.ScanConfig(srcDir.toString, glob = "*.txt"),
-      prompts = Seq(
-        PromptSpec("n_batch", "count of word 'batch'", "number"),
-        PromptSpec("mentions_pipeline", "does it mention 'pipeline'", "boolean")),
-      historyPath = histPath,
-      outputFolder = outDir,
-      reviewQueue = Some((() => new graft.streaming.DirectoryQueue(queueRoot), "review:wf-1")),
-      resultCache = Some(cache))
+  /** A workflow over a folder of its own with EVERY optional destination
+    * hop active: fs sink + review queue + result cache + history upsert +
+    * the two summary counts — with the old per-action re-execution such a
+    * run would bill the LLM up to 6×. Runs again over the same folder and
+    * history as often as asked, metering completions in `calls`. */
+  private final class CountedFlow(tag: String) {
+    private val srcDir = Files.createTempDirectory(s"graft-$tag-src")
+    val histPath: String = Files.createTempDirectory(s"graft-$tag-hist").toString + "/history"
     val calls = spark.sparkContext.longAccumulator(s"llm-calls-$tag")
-    val run = Workflow.run(spark, spec, () => new CountingLLM(calls))
-    (run, calls.value.longValue)
+    private val spec = {
+      // locals, so the queue factories ship to executors without the flow
+      val queueRoot = Files.createTempDirectory(s"graft-$tag-queue").toString
+      val cacheNs = s"$tag-${java.util.UUID.randomUUID()}"
+      Workflow.WorkflowSpec(
+        scan = FileScan.ScanConfig(srcDir.toString, glob = "*.txt"),
+        prompts = Seq(
+          PromptSpec("n_batch", "count of word 'batch'", "number"),
+          PromptSpec("mentions_pipeline", "does it mention 'pipeline'", "boolean")),
+        historyPath = histPath,
+        outputFolder = Files.createTempDirectory(s"graft-$tag-out").toString + "/results",
+        reviewQueue = Some((() => new graft.streaming.DirectoryQueue(queueRoot), "review:wf-1")),
+        resultCache = Some(new graft.sinks.ResultCache(
+          () => new graft.streaming.MemoryQueue(cacheNs), ttlSeconds = 600)))
+    }
+
+    def write(name: String, text: String): Unit =
+      Files.write(srcDir.resolve(name), text.getBytes)
+
+    /** One run: its summary and the completions it billed. */
+    def run(): (Workflow.RunSummary, Long) = {
+      val acc = calls // a local: the client factory ships to executors, the flow cannot
+      val before = acc.value.longValue
+      val summary = Workflow.run(spark, spec, () => new CountingLLM(acc))
+      (summary, acc.value.longValue - before)
+    }
+  }
+
+  /** One run over one file per text; the summary and completions billed. */
+  private def runCounted(tag: String, texts: Seq[String]): (Workflow.RunSummary, Long) = {
+    val flow = new CountedFlow(tag)
+    texts.zipWithIndex.foreach { case (t, i) => flow.write(f"f$i%03d.txt", t) }
+    flow.run()
   }
 
   test("extraction is billed once per (row, prompt) — never once per sink action") {
@@ -100,6 +114,32 @@ class WorkflowSpec extends SparkSpec {
     assert(run40 == Workflow.RunSummary(40, 40, 40, 0))
     assert(calls40 === 80L, // 40 files × 2 prompts
       s"LLM billed $calls40 completions for 80 (row, prompt) pairs")
+  }
+
+  test("the same content at several paths is billed once per path, then never again") {
+    val flow = new CountedFlow("wfcopies")
+    Seq("a", "b", "c").foreach(n => flow.write(s"$n.txt", "batch pipeline copy"))
+    val (run1, calls1) = flow.run()
+    assert(run1 == Workflow.RunSummary(3, 3, 3, 0) && calls1 === 6L)
+    // a fourth copy: only it is new
+    flow.write("d.txt", "batch pipeline copy")
+    val (run2, calls2) = flow.run()
+    assert(run2.afterDedup == 1 && calls2 === 2L)
+    // the fourth copy's history row did not displace the other three
+    val (run3, calls3) = flow.run()
+    assert(run3 == Workflow.RunSummary(4, 0, 0, 0))
+    assert(calls3 === 0L, s"third run billed $calls3 completions for files already done")
+  }
+
+  test("an unreadable history fails the run before any completion is billed") {
+    val flow = new CountedFlow("wfjunk")
+    flow.write("a.txt", "batch pipeline")
+    flow.write("b.txt", "batch batch")
+    Files.createDirectories(java.nio.file.Paths.get(flow.histPath))
+    Files.write(java.nio.file.Paths.get(flow.histPath, "part-0.parquet"), "not parquet".getBytes)
+    intercept[Exception](flow.run())
+    assert(flow.calls.value === 0L,
+      s"LLM billed ${flow.calls.value} completions before the history read failed")
   }
 
   test("workflow staging dir: extraction materializes durably, same results") {

@@ -102,28 +102,82 @@ class SinksSpec extends SparkSpec {
     assert(h2.toSeq == Seq("COMPLETED"))
   }
 
+  test("history upsert replaces by (cache_key, file_path): a copy at another path is its own row") {
+    import spark.implicits._
+    val path = Files.tmp("hist-copies")
+    def hist(rows: (String, String, String)*) =
+      rows.map { case (k, p, r) => (k, p, "COMPLETED", r) }
+        .toDF("cache_key", "file_path", "status", "result")
+    Sinks.upsertHistory(spark, path, hist(("h", "/a", "1"), ("h", "/b", "1"), ("h", "/c", "1")))
+    // the same content at a fourth path adds its row and keeps the others:
+    // replacing by cache_key alone would drop /a, /b and /c, and the next
+    // run would extract them again
+    Sinks.upsertHistory(spark, path, hist(("h", "/d", "2")))
+    Sinks.upsertHistory(spark, path, hist(("h", "/a", "3")))
+    val got = spark.read.parquet(path).select("file_path", "result").as[(String, String)]
+      .collect().toSet
+    assert(got == Set("/a" -> "3", "/b" -> "1", "/c" -> "1", "/d" -> "2"))
+  }
+
+  test("history upsert of no rows writes nothing, so a later run can read the history") {
+    import spark.implicits._
+    val path = Files.tmp("hist-empty")
+    val none = Seq.empty[(String, String, String, String)]
+      .toDF("cache_key", "file_path", "status", "result")
+    // a first run over an empty folder
+    Sinks.upsertHistory(spark, path, none)
+    assert(Sinks.readHistory(spark, path).count() == 0)
+    Sinks.upsertHistory(spark, path, Seq(("h1", "/a", "COMPLETED", "{}"))
+      .toDF("cache_key", "file_path", "status", "result"))
+    val table = new java.io.File(path).listFiles().map(_.getName).toSet
+    Sinks.upsertHistory(spark, path, none)
+    assert(new java.io.File(path).listFiles().map(_.getName).toSet == table)
+    assert(Sinks.readHistory(spark, path).select("cache_key").as[String].collect().toSeq == Seq("h1"))
+  }
+
+  test("bucket width: the smallest of 0, 1, 2 with rows / 16^w <= RowsPerBucket") {
+    val r = Sinks.RowsPerBucket
+    assert(r == (1L << 18))
+    val widths = Seq(0L, r, r + 1, 16 * r, 16 * r + 1, 1000000000L).map(Sinks.bucketWidth)
+    assert(widths == Seq(0, 0, 1, 1, 2, 2))
+  }
+
+  /** (file name, SHA-256 of its bytes) of every file in a directory. */
+  private def fileDigests(dir: java.io.File): Set[(String, String)] =
+    dir.listFiles().map { f =>
+      f.getName -> java.security.MessageDigest.getInstance("SHA-256")
+        .digest(java.nio.file.Files.readAllBytes(f.toPath)).map(b => f"$b%02x").mkString
+    }.toSet
+
+  private def bucketDirs(path: String): Array[java.io.File] =
+    new java.io.File(path).listFiles().filter(_.getName.startsWith("key_prefix="))
+
   test("history upsert is partition-local: 1-row upsert touches 1 bucket") {
     import spark.implicits._
+    // RowsPerBucket + 1 rows: the smallest table the rule splits, 16 ways
     val path = Files.tmp("hist2")
-    val first = Seq(("aa11", "/a", "COMPLETED", "{}"), ("bb22", "/b", "ERROR", "{}"))
-      .toDF("cache_key", "file_path", "status", "result")
-    Sinks.upsertHistory(spark, path, first)
-    def listing(bucket: String): Set[(String, Long)] = {
-      val d = new java.io.File(path, s"key_prefix=$bucket")
-      d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => (f.getName, f.lastModified)).toSet
-    }
-    val aaBefore = listing("xaa")
+    def keyed(ids: org.apache.spark.sql.Column, status: String) = Seq(
+      sha2(concat(lit("doc-"), ids.cast("string")), 256).as("cache_key"),
+      concat(lit("/f"), ids.cast("string")).as("file_path"),
+      lit(status).as("status"), lit("{}").as("result"))
     Sinks.upsertHistory(spark, path,
-      Seq(("bb22", "/b", "COMPLETED", "{}"))
-        .toDF("cache_key", "file_path", "status", "result"))
-    // the aa bucket's files are byte-identical — not rewritten
-    assert(listing("xaa") == aaBefore)
+      spark.range(Sinks.RowsPerBucket + 1).select(keyed(col("id"), "COMPLETED"): _*))
+    val buckets = bucketDirs(path)
+    assert(buckets.map(_.getName).toSet == "0123456789abcdef".map(c => s"key_prefix=x$c").toSet)
+    assert(buckets.forall(_.listFiles().count(_.getName.endsWith(".parquet")) == 1))
+
+    val one = spark.range(1).select(keyed(lit(-1L), "ERROR"): _*)
+    val touched = "key_prefix=x" + one.select("cache_key").as[String].head().take(1)
+    val before = buckets.filter(_.getName != touched).map(d => d.getName -> fileDigests(d)).toMap
+    Sinks.upsertHistory(spark, path, one)
+    // the other 15 buckets are byte-identical — not rewritten
+    val after = bucketDirs(path).filter(_.getName != touched)
+      .map(d => d.getName -> fileDigests(d)).toMap
+    assert(before.size == 15 && after == before)
     val got = spark.read.parquet(path)
-    assert(got.count() == 2)
-    import org.apache.spark.sql.functions.col
-    assert(got.filter(col("cache_key") === "bb22")
-      .select("status").as[String].collect().toSeq == Seq("COMPLETED"))
+    assert(got.count() == Sinks.RowsPerBucket + 2)
+    assert(got.filter(col("file_path") === "/f-1")
+      .select("status").as[String].collect().toSeq == Seq("ERROR"))
   }
 
   test("history upsert recovers a bucket orphaned by a crash mid-promote") {
@@ -136,10 +190,12 @@ class SinksSpec extends SparkSpec {
     // never landed — the bucket's ONLY copy is the .__old directory
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sparkContext.hadoopConfiguration)
-    val cur = new org.apache.hadoop.fs.Path(path, "key_prefix=xaa")
-    val old = new org.apache.hadoop.fs.Path(path, "key_prefix=xaa.__old")
+    // a 2-row table is one bucket
+    assert(bucketDirs(path).map(_.getName).toSeq == Seq("key_prefix=x"))
+    val cur = new org.apache.hadoop.fs.Path(path, "key_prefix=x")
+    val old = new org.apache.hadoop.fs.Path(path, "key_prefix=x.__old")
     assert(fs.rename(cur, old))
-    // next upsert touches that same prefix; without recovery the aa13 row
+    // next upsert touches that same bucket; without recovery the aa13 row
     // would be merged against an invisible bucket and aa11 silently lost
     Sinks.upsertHistory(spark, path,
       Seq(("aa13", "/c", "COMPLETED", "{}"))
@@ -168,43 +224,60 @@ class SinksSpec extends SparkSpec {
     assert(got.select("cache_key").as[String].collect().toSet == Set("cc33", "dd44"))
   }
 
-  test("history upsert writes each bucket as one file from a multi-partition input") {
+  private def sha(i: Int): String = java.security.MessageDigest.getInstance("SHA-256")
+    .digest(s"doc-$i".getBytes("UTF-8")).map(b => f"$b%02x").mkString
+  private def shaRows(keys: Range, result: String) = {
     import spark.implicits._
-    def sha(i: Int): String = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"doc-$i".getBytes("UTF-8")).map(b => f"$b%02x").mkString
-    def rows(keys: Range, result: String) =
-      keys.map(i => (sha(i), s"/f$i", "COMPLETED", result))
-        .toDF("cache_key", "file_path", "status", "result").repartition(4)
-    def filesPerBucket(path: String): Map[String, Int] =
-      new java.io.File(path).listFiles().filter(_.getName.startsWith("key_prefix="))
-        .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
-    def contents(path: String): Set[(String, String)] =
-      spark.read.parquet(path).select("cache_key", "result").as[(String, String)]
-        .collect().toSet
-    def expected(v1: Range, v2: Range): Set[(String, String)] =
-      (v1.map(i => (sha(i), "v1")) ++ v2.map(i => (sha(i), "v2"))).toSet
+    keys.map(i => (sha(i), s"/f$i", "COMPLETED", result))
+      .toDF("cache_key", "file_path", "status", "result").repartition(4)
+  }
+  private def filesPerBucket(path: String): Map[String, Int] =
+    bucketDirs(path).map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+  private def contents(path: String): Set[(String, String)] = {
+    import spark.implicits._
+    spark.read.parquet(path).select("cache_key", "result").as[(String, String)].collect().toSet
+  }
+  private def expected(v1: Range, v2: Range): Set[(String, String)] =
+    (v1.map(i => (sha(i), "v1")) ++ v2.map(i => (sha(i), "v2"))).toSet
+
+  test("history upsert writes each bucket as one file from a multi-partition input") {
+    // the buckets at the width the rule picks for the table's rows
     def assertOneFilePerBucket(path: String, keys: Range): Unit = {
+      val width = Sinks.bucketWidth(keys.size)
       val got = filesPerBucket(path)
-      assert(got.keySet == keys.map(i => "key_prefix=x" + sha(i).take(2)).toSet)
+      assert(got.keySet == keys.map(i => "key_prefix=x" + sha(i).take(width)).toSet)
       assert(got.values.forall(_ == 1), got.filter(_._2 != 1))
     }
 
     // first write, then a merge that replaces 50 keys and adds 50
     val path = Files.tmp("hist5")
-    Sinks.upsertHistory(spark, path, rows(0 until 200, "v1"))
-    assert(filesPerBucket(path).size >= 64)
+    Sinks.upsertHistory(spark, path, shaRows(0 until 200, "v1"))
     assertOneFilePerBucket(path, 0 until 200)
     assert(contents(path) == expected(0 until 200, 0 until 0))
-    Sinks.upsertHistory(spark, path, rows(150 until 250, "v2"))
+    Sinks.upsertHistory(spark, path, shaRows(150 until 250, "v2"))
     assertOneFilePerBucket(path, 0 until 250)
     assert(contents(path) == expected(0 until 150, 150 until 250))
 
     // one-time migration of a flat legacy table
     val flat = Files.tmp("hist6")
-    rows(0 until 200, "v1").write.parquet(flat)
-    Sinks.upsertHistory(spark, flat, rows(150 until 250, "v2"))
+    shaRows(0 until 200, "v1").write.parquet(flat)
+    Sinks.upsertHistory(spark, flat, shaRows(150 until 250, "v2"))
     assertOneFilePerBucket(flat, 0 until 250)
     assert(contents(flat) == expected(0 until 150, 150 until 250))
+  }
+
+  test("history upsert re-lays out a small 256-bucket table as one bucket") {
+    // the layout of a fixed two-character width, whatever the table's size
+    val wide = Files.tmp("hist7")
+    shaRows(0 until 200, "v1")
+      .withColumn("key_prefix", concat(lit("x"), substring(col("cache_key"), 1, 2)))
+      .write.partitionBy("key_prefix").parquet(wide)
+    assert(filesPerBucket(wide).size > 100)
+    // an update of one existing row leaves the row set as it was
+    Sinks.upsertHistory(spark, wide, shaRows(0 until 1, "v1"))
+    assert(filesPerBucket(wide) == Map("key_prefix=x" -> 1))
+    assert(contents(wide) == expected(0 until 200, 0 until 0))
+    assert(spark.read.parquet(wide).count() == 200)
   }
 
   test("usage rollup sums counters per run") {
