@@ -6,7 +6,6 @@ import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -56,11 +55,14 @@ object Sinks {
   /** The FileHistory table at `historyPath`, or an empty one when the
     * path does not exist. Any other read error propagates: an unreadable
     * history must stop a run before extraction bills a completion, not
-    * read as "nothing processed yet". */
+    * read as "nothing processed yet". A table a crashed re-layout left
+    * set aside as `<historyPath>__old` is put back first, for the same
+    * reason. */
   def readHistory(spark: SparkSession, historyPath: String): DataFrame = {
     val p = new Path(historyPath)
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      spark.read.parquet(historyPath)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    restoreSetAside(fs, p)
+    if (fs.exists(p)) spark.read.parquet(historyPath)
     else spark.createDataFrame(java.util.Collections.emptyList[Row](), HistorySchema)
   }
 
@@ -74,7 +76,10 @@ object Sinks {
     * 3.1–3.7 s. A 1-row upsert into a 2^18-row table takes 1.40–1.50 s
     * at one bucket and 1.24–1.30 s at 16, so up to 2^18 rows a bucket's
     * rewrite adds ~0.2 s to the upsert's fixed cost of jobs; at 2^20 rows
-    * the rewrite alone would be ~3 s per upsert. */
+    * the rewrite alone would be ~3 s per upsert. Against a fixed 256
+    * buckets (medians of 10 runs each): a 10-row upsert into 2^18 rows
+    * took 2.14 s as 256 buckets and 1.18 s as one, a 100-row one 2.90 s
+    * and 1.68 s; into 5,000 rows 2.23 s and 0.83 s. */
   private[sinks] val RowsPerBucket: Long = 1L << 18
 
   /** Widest bucket name: two hex characters of `cache_key`, 256 buckets. */
@@ -85,6 +90,21 @@ object Sinks {
     * bucket set stays ≤256 whatever the table's size. */
   private[sinks] def bucketWidth(rows: Long): Int =
     (0 until MaxWidth).find(w => rows <= (RowsPerBucket << (4 * w))).getOrElse(MaxWidth)
+
+  /** The width an upsert writes at. A new (or flat) table takes
+    * `bucketWidth` of its rows plus the update's. A bucketed table widens
+    * when that sum overflows its width, and narrows only when twice its
+    * rows fit a narrower one: the sum counts an update row that replaces
+    * a row as new, so a table near a threshold would otherwise flip width,
+    * and re-lay itself out whole, on successive upserts. */
+  private[sinks] def upsertWidth(tableWidth: Option[Int], tableRows: Long,
+      updateRows: Long): Int = {
+    val fit = bucketWidth(tableRows + updateRows)
+    tableWidth match {
+      case Some(w) if fit <= w => math.min(w, math.max(fit, bucketWidth(2 * tableRows)))
+      case _ => fit
+    }
+  }
 
   // the "x" marker keeps partition-value type inference on STRING — an
   // all-numeric bucket set ("12", "47") would otherwise infer INT and
@@ -101,8 +121,8 @@ object Sinks {
     * and an upsert reads + rewrites ONLY the buckets its update keys land
     * in.
     *
-    * The width `w` follows the table's size (`bucketWidth` of the table's
-    * rows, counted from its parquet footers, plus the update's rows). A
+    * The width `w` follows the table's size (`upsertWidth` of the
+    * table's rows, counted from its parquet footers, and the update's). A
     * history row is ~80 B on disk in a file of thousands of rows
     * (perfbench's `sinks.history_bytes_per_new_row`: 79 B for 5,000 rows
     * in one file, 203 B when the same rows were spread over 256 files).
@@ -114,7 +134,8 @@ object Sinks {
     *    touches ~1/256th of the table; at 10⁹ files a bucket is ≈0.3 GB,
     *    written by one task.
     * A table whose width on disk differs from the rule's (a flat legacy
-    * table, or one that grew past a threshold) is re-laid out once: every
+    * table, one that grew past a threshold, or a small table in the
+    * 256-bucket layout every table had before) is re-laid out once: every
     * row merged and the whole directory swapped. An upsert of no rows
     * writes nothing.
     *
@@ -135,7 +156,7 @@ object Sinks {
     // resolve the FS from the path itself — fs.defaultFS may be a
     // different filesystem (e.g. history on s3a, default hdfs)
     val fs = dst.getFileSystem(conf)
-    val tableWidth = recoverOrphans(fs, dst, historyPath)
+    val tableWidth = recoverOrphans(fs, dst)
     // one job over the updates gives both their row count and their
     // buckets at the widest width, which fix those at every narrower one
     val perBucket = updates.groupBy(bucketOf(MaxWidth)).count()
@@ -147,7 +168,7 @@ object Sinks {
     val current = readHistory(spark, historyPath)
     // past 16 × RowsPerBucket rows the width is capped whatever the rest
     val tableRows = footerRows(current, conf, upTo = RowsPerBucket << (4 * (MaxWidth - 1)))
-    val width = bucketWidth(tableRows + perBucket.map(_.getLong(1)).sum)
+    val width = upsertWidth(tableWidth, tableRows, perBucket.map(_.getLong(1)).sum)
     val keyed = updates.withColumn("key_prefix", bucketOf(width))
     val rowKey = Seq("cache_key", "file_path")
     if (!fs.exists(dst)) {
@@ -164,7 +185,7 @@ object Sinks {
         .unionByName(updates)
         .withColumn("key_prefix", bucketOf(width))
       writeBuckets(merged, width, SaveMode.Overwrite, staged)
-      val old = new Path(historyPath + "__old")
+      val old = setAside(dst)
       if (fs.exists(old)) fs.delete(old, true)
       if (!fs.rename(dst, old))
         throw new java.io.IOException(s"upsertHistory: cannot set aside $dst")
@@ -207,13 +228,11 @@ object Sinks {
     * against 0.07–0.14 s). */
   private def footerRows(table: DataFrame, conf: Configuration, upTo: Long): Long = {
     lazy val options = HadoopReadOptions.builder(conf).build()
-    val counts = table.queryExecution.analyzed
-      .collectFirst { case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location }
-      .fold(Seq.empty[PartitionDirectory])(_.listFiles(Nil, Nil))
-      .iterator.flatMap(_.files).map { f =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f.fileStatus, conf), options)
-        try reader.getRecordCount finally reader.close()
-      }
+    val counts = table.inputFiles.iterator.map { f =>
+      val file = HadoopInputFile.fromPath(new Path(new java.net.URI(f)), conf)
+      val reader = ParquetFileReader.open(file, options)
+      try reader.getRecordCount finally reader.close()
+    }
     var rows = 0L
     while (rows <= upTo && counts.hasNext) rows += counts.next()
     rows
@@ -235,14 +254,11 @@ object Sinks {
     * partition value reads as "XX.__old"). Rename it back before any
     * read; an `__old` whose `cur` also exists is a completed promote's
     * leftover and is deleted. The re-layout has the same window with
-    * `<historyPath>__old` holding the whole table. Returns the width of
-    * the table's bucket names, None for a flat table or no table. */
-  private def recoverOrphans(fs: FileSystem, dst: Path, historyPath: String): Option[Int] = {
-    val flatOld = new Path(historyPath + "__old")
-    if (fs.exists(flatOld)) {
-      if (!fs.exists(dst)) fs.rename(flatOld, dst)
-      else fs.delete(flatOld, true)
-    }
+    * `<historyPath>__old` holding the whole table (`restoreSetAside`).
+    * Returns the width of the table's bucket names, None for a flat table
+    * or no table. */
+  private def recoverOrphans(fs: FileSystem, dst: Path): Option[Int] = {
+    restoreSetAside(fs, dst)
     if (!fs.exists(dst)) return None
     val buckets = fs.listStatus(dst).map(_.getPath.getName)
       .filter(_.startsWith("key_prefix=")).map { name =>
@@ -256,6 +272,20 @@ object Sinks {
     // the longest name: a key shorter than the width names a narrower bucket
     buckets.filter(_.startsWith(BucketDir)).map(_.length - BucketDir.length).maxOption
   }
+
+  /** The re-layout's crash window: between rename(table → `__old`) and
+    * the staged copy's promote, `<table>__old` is the table's only copy,
+    * so rename it back. An `__old` beside the table is a completed
+    * re-layout's leftover and is deleted. */
+  private def restoreSetAside(fs: FileSystem, dst: Path): Unit = {
+    val old = setAside(dst)
+    if (fs.exists(old)) {
+      if (!fs.exists(dst)) fs.rename(old, dst)
+      else fs.delete(old, true)
+    }
+  }
+
+  private def setAside(dst: Path): Path = new Path(dst.getParent, dst.getName + "__old")
 
   /** A1/K7: usage rollup — group per-call usage rows by run. */
   def usageRollup(usage: DataFrame): DataFrame =

@@ -142,6 +142,22 @@ class WorkflowSpec extends SparkSpec {
       s"LLM billed ${flow.calls.value} completions before the history read failed")
   }
 
+  test("a history set aside by a crashed re-layout still counts: done files are not billed again") {
+    val flow = new CountedFlow("wfsetaside")
+    flow.write("a.txt", "batch pipeline")
+    flow.write("b.txt", "batch batch")
+    val (run1, calls1) = flow.run()
+    assert(run1 == Workflow.RunSummary(2, 2, 2, 0) && calls1 === 4L)
+    // the re-layout's crash window: the table renamed to __old, its
+    // staged copy not yet promoted
+    Files.move(java.nio.file.Paths.get(flow.histPath),
+      java.nio.file.Paths.get(flow.histPath + "__old"))
+    val (run2, calls2) = flow.run()
+    assert(run2 == Workflow.RunSummary(2, 0, 0, 0))
+    assert(calls2 === 0L, s"billed $calls2 completions for files the set-aside history holds")
+    assert(Files.exists(java.nio.file.Paths.get(flow.histPath)))
+  }
+
   test("workflow staging dir: extraction materializes durably, same results") {
     val srcDir = Files.createTempDirectory("graft-wfstage-src")
     Files.write(srcDir.resolve("a.txt"), "batch pipeline".getBytes)

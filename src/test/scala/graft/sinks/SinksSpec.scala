@@ -142,6 +142,48 @@ class SinksSpec extends SparkSpec {
     assert(widths == Seq(0, 0, 1, 1, 2, 2))
   }
 
+  test("upsert width: a table widens when its rows overflow it, narrows only when twice its rows fit") {
+    val r = Sinks.RowsPerBucket
+    import Sinks.upsertWidth
+    // no table, or a flat one: the rule's width for all the rows
+    assert(upsertWidth(None, 0, 5) == 0)
+    assert(upsertWidth(None, r - 10, 20) == 1)
+    // an update that overflows the table's width widens it
+    assert(upsertWidth(Some(0), r - 10, 20) == 1)
+    assert(upsertWidth(Some(1), 16 * r, 1) == 2)
+    // rows that fit a narrower width, but not twice over, keep the width
+    assert(upsertWidth(Some(1), r - 10, 5) == 1)
+    assert(upsertWidth(Some(2), 8 * r + 1, 1) == 2)
+    assert(upsertWidth(Some(2), 16 * r, 1) == 2)
+    // twice the rows fit narrower: a small table in the 256-bucket layout
+    assert(upsertWidth(Some(2), 200, 1) == 0)
+    assert(upsertWidth(Some(2), 8 * r, 1) == 1)
+    assert(upsertWidth(Some(1), r / 2 - 1, 1) == 0)
+  }
+
+  test("history upsert near a width threshold keeps one width across replaced and new rows") {
+    val r = Sinks.RowsPerBucket
+    val path = Files.tmp("hist8")
+    def rows(from: Long, until: Long, status: String) = spark.range(from, until).select(
+      sha2(concat(lit("doc-"), col("id").cast("string")), 256).as("cache_key"),
+      concat(lit("/f"), col("id").cast("string")).as("file_path"),
+      lit(status).as("status"), lit("{}").as("result"))
+    Sinks.upsertHistory(spark, path, rows(0, r - 10, "COMPLETED"))
+    assert(bucketDirs(path).map(_.getName).toSeq == Seq("key_prefix=x"))
+    // retried rows replacing their own, then new rows, then retried rows
+    // again: each update's rows count as new, so the table's rows plus the
+    // update's cross RowsPerBucket and fall back below it in turn
+    val widths = Seq(rows(0, 20, "ERROR"), rows(r - 10, r - 5, "COMPLETED"),
+        rows(0, 20, "COMPLETED")).map { update =>
+      Sinks.upsertHistory(spark, path, update)
+      bucketDirs(path).map(_.getName.length - "key_prefix=x".length).toSet
+    }
+    assert(widths.distinct.size == 1 && widths.head.size == 1, widths)
+    val got = spark.read.parquet(path)
+    assert(got.count() == r - 5)
+    assert(got.filter(col("status") =!= "COMPLETED").count() == 0)
+  }
+
   /** (file name, SHA-256 of its bytes) of every file in a directory. */
   private def fileDigests(dir: java.io.File): Set[(String, String)] =
     dir.listFiles().map { f =>

@@ -11,11 +11,11 @@ i uses seed A + i, cycling through the range A-B. Every run's last stdout
 line (the benchmark's JSON record) is echoed to stderr as it lands.
 
 The summary on stdout gives, per end-to-end metric, each side's median and
-quartiles and the pairs the change won (ties count for neither side), and
-for the claimed metric (`--metric`, default wall_s) whether a gain may be
-claimed: the change wins at least nine tenths of the pairs run, and the
-medians differ, in the better direction, by more than the parent's
-interquartile range. A run that fails or prints no record wins no pair.
+quartiles, the pairs the change won (ties count for neither side), and
+whether a gain may be claimed on it (`gain_holds`): the change wins at
+least nine tenths of the pairs run, and the medians differ, in the better
+direction, by more than the parent's interquartile range. A run that fails
+or prints no record wins no pair.
 
 Quartiles are linear interpolations between order statistics
 (`statistics.quantiles(method="inclusive")`, numpy's default).
@@ -117,12 +117,9 @@ def main(argv=None):
     ap.add_argument("--pairs", type=int, required=True)
     ap.add_argument("--seeds", required=True, help="seed range A-B")
     ap.add_argument("--seconds", type=float, required=True)
-    ap.add_argument("--metric", default="wall_s", help="the metric a gain is claimed on")
     a = ap.parse_args(argv)
     seeds = parse_seeds(a.seeds)
     metrics = end_to_end(a.parent)
-    if a.metric not in dict(metrics):
-        ap.error(f"{a.metric} is not an end-to-end metric of the benchmark")
 
     pairs = []
     for i in range(a.pairs):
@@ -141,8 +138,6 @@ def main(argv=None):
                "failed_ops": {side: sum(p[k]["failed"] for p in pairs if p[k])
                               for k, side in enumerate(("parent", "change"))},
                "metrics": [summarize(pairs, n, b) for n, b in metrics]}
-    claimed = next(m for m in summary["metrics"] if m["metric"] == a.metric)
-    summary["claim"] = {"metric": a.metric, "gain_holds": claimed["gain_holds"]}
     print(json.dumps(summary, indent=1))
     return 0
 
