@@ -85,7 +85,7 @@ object Plans {
       ("q98 span dedup: shared-span join keyed on the span hash, no cartesian",
         !planOf("q98_dup_spans").contains("CartesianProduct")),
       // the span frame materializes as a localCheckpoint locally (Scan
-      // ExistingRDD) or a parquet round-trip when a stagingDir conf is
+      // ExistingRDD) or a parquet round-trip when spark.graft.stagingDir is
       // set — the single-scan property under audit is "no Generate in
       // the final plan", so accept either scan spelling.
       ("q98: exploded span frame computed once (no Generate in the final plan)",

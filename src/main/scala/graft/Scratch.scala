@@ -64,7 +64,7 @@ object Scratch {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // extra runtime confs for diagnostics sessions, e.g.
-    // SPARK_GRAFT_CONFS=spark.sql.adaptive.enabled=false,spark.graft.corpus.stagingDir=/tmp/stage
+    // SPARK_GRAFT_CONFS=spark.sql.adaptive.enabled=false,spark.graft.stagingDir=/tmp/stage
     sys.env.get("SPARK_GRAFT_CONFS").foreach(_.split(",").filter(_.nonEmpty)
       .foreach { kv =>
         val Array(k, v) = kv.split("=", 2)

@@ -2,33 +2,33 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** The durable-staging materialization seam shared by every multi-pass
-  * operator tier (dedup, corpus, LM, workflow).
+/** The one materialization seam: every barrier in the operator and
+  * pipeline tiers (multi-pass tables, iterative rounds, the workflow's
+  * `fresh` and `extracted` frames) calls [[materialize]], and one key,
+  * [[Key]], decides for all of them. Unset: `localCheckpoint` — eager
+  * and fast, but pinned to executors, so a lost executor kills the job.
+  * Set to a parquet-capable root: write-then-read a staged table under
+  * it, so any lost task recomputes from the staged files — the
+  * configuration a 100 TB run uses (SCALE.md). Every tier stages under
+  * the same root; the tag names the directory.
   *
-  * Default (local mode): `localCheckpoint` — fast, but pinned to
-  * executors, so a lost executor kills the job. Durable mode (the
-  * tier's staging conf key set to a parquet-capable path): write-then-
-  * read a staged table, so any lost task recomputes from the staged
-  * files — the configuration a 100 TB run uses (SCALE.md). One
-  * implementation here so a change to the seam (cleanup policy, conf
-  * plumbing) cannot silently diverge between tiers.
-  *
-  * Cleanup policy: every staged directory this process writes is
-  * tracked; call [[cleanup]] once the run's OUTPUTS have been consumed
-  * or persisted elsewhere to delete all of them. Deletion cannot be
-  * automatic per-materialize — the returned DataFrame READS from the
-  * staged files, and callers (Curation.run, the dedup passes) hand
-  * such frames back to their callers — so the staging root is scratch
-  * space owned by the session: either call [[cleanup]] at the end of a
-  * run, or purge the root externally between runs.
+  * Cleanup: staged directories are tracked, and the frames returned
+  * read from them, so none is deleted per call (callers such as
+  * Curation.run hand those frames on); call [[cleanup]] once a run's
+  * outputs are consumed or persisted, or purge the root between runs.
   */
 object Staging {
 
+  /** The staging root; unset means `localCheckpoint`. */
+  val Key = "spark.graft.stagingDir"
+
   private val staged = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  def materialize(df: DataFrame, tag: String, confKey: String): DataFrame = {
+  /** `df`, computed once: staged under `<root>/<tag>_<id>` when [[Key]]
+    * is set, else `df.localCheckpoint()`. Eager either way. */
+  def materialize(df: DataFrame, tag: String): DataFrame = {
     val s = df.sparkSession
-    s.conf.getOption(confKey) match {
+    s.conf.getOption(Key) match {
       case Some(root) =>
         val path = s"$root/${tag}_${java.util.UUID.randomUUID().toString.take(8)}"
         df.write.mode("overwrite").parquet(path)
@@ -37,6 +37,13 @@ object Staging {
       case None => df.localCheckpoint()
     }
   }
+
+  /** Kept only for the benchmark's traced copy of `Workflow.run`
+    * (perfbench), which still passes a per-tier key: the key is
+    * ignored, so that pass stages exactly when `Workflow.run` does. */
+  @deprecated("the key is ignored; call materialize(df, tag)", "0.1.0")
+  def materialize(df: DataFrame, tag: String, confKey: String): DataFrame =
+    materialize(df, tag)
 
   /** Paths staged (durable mode) by this process and not yet cleaned. */
   def stagedPaths: Set[String] = {

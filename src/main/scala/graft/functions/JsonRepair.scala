@@ -8,19 +8,10 @@ import org.apache.spark.sql.functions._
   * outermost {...} or [...] span, then repair common LLM JSON defects —
   * trailing commas, single quotes, unquoted keys, fenced code blocks.
   *
-  * Fast path is pure Column ops (regexp_extract); the repair fallback is
-  * a deterministic Scala function exposed as a UDF for rows where
-  * from_json fails.
+  * The repair is a deterministic Scala function, exposed as a UDF for
+  * rows where from_json fails.
   */
 object JsonRepair {
-
-  /** Column fast path: marker strip + outermost-span extract. */
-  def extractJsonSpan(c: Column): Column = {
-    val stripped = regexp_replace(
-      regexp_replace(c, "§§§", ""), "(?s)```(?:json)?(.*?)```", "$1")
-    val span = regexp_extract(stripped, "(?s)(\\{.*\\}|\\[.*\\])", 1)
-    when(length(span) > 0, span).otherwise(lit(null))
-  }
 
   /** Deterministic repair of common LLM JSON defects. Returns the
     * repaired string (parse-ready) or null when hopeless. */

@@ -64,7 +64,4 @@ object TextFunctions {
       scala.util.matching.Regex.quoteReplacement(
         Integer.parseInt(m.group(1), 16).toChar.toString))
   }
-
-  val unicodeUnescapeUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((s: String) => unicodeUnescape(s))
 }

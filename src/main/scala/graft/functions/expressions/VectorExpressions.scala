@@ -1,11 +1,9 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native Catalyst expressions for the vector hot path (SURVEY.md §4
@@ -103,13 +101,5 @@ object VectorExpressions {
       reg.createOrReplaceTempFunction("l2_sq_f", es => L2SqFloat(es.head, es(1)), "scala_udf")
       reg.createOrReplaceTempFunction("l1_f", es => L1Float(es.head, es(1)), "scala_udf")
     }
-  }
-
-  /** Column over registered functions by column-expression text. */
-  def dotF(spark: org.apache.spark.sql.SparkSession, a: String, b: String): Column = {
-    register(spark); expr(s"dot_product_f($a, $b)")
-  }
-  def l2SqF(spark: org.apache.spark.sql.SparkSession, a: String, b: String): Column = {
-    register(spark); expr(s"l2_sq_f($a, $b)")
   }
 }

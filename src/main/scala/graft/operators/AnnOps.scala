@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Staging, Tables}
 import graft.functions.expressions.VectorExpressions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -12,10 +12,11 @@ import org.apache.spark.sql.functions._
   *
   * Index build: pick C centroids (deterministic here: vec_id < C; k-means
   * at scale), assign every vector to its nearest centroid — a narrow map
-  * over a broadcast centroid table. With `spark.graft.ann.stagingDir`
-  * set, the assignment is written `partitionBy(cell)` and the probe
-  * becomes partition-PRUNED I/O: only the `nprobe` cell directories are
-  * listed and read, so a 100 TB index pays ~nprobe/C of the scan.
+  * over a broadcast centroid table. With `spark.graft.stagingDir`
+  * ([[graft.Staging.Key]]) set, the assignment is written
+  * `partitionBy(cell)` under it and the probe becomes partition-PRUNED
+  * I/O: only the `nprobe` cell directories are listed and read, so a
+  * 100 TB index pays ~nprobe/C of the scan.
   * Query: score the C centroids (driver-sized), probe the `nprobe`
   * nearest cells, exact-rank only those candidates.
   */
@@ -116,7 +117,7 @@ object AnnOps {
         .select(col("vec_id").as("cid"), col("embedding").as("cv"))
       val qv = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
 
-      s.conf.getOption("spark.graft.ann.stagingDir") match {
+      s.conf.getOption(Staging.Key) match {
         case Some(root) =>
           // staged path: partitionBy(cell) index + literal in-set probe →
           // the parquet scan prunes to nprobe of C cell directories
@@ -1063,9 +1064,9 @@ object AnnOps {
     val n = nodes.count().toDouble
     var pr = nodes.withColumn("pr", lit(1.0 / n))
     (1 to iters).foreach { t =>
-      pr = graft.Staging.materialize(
+      pr = Staging.materialize(
         pageRankRound(nodes, edges, pr, outDeg, damp, n),
-        s"pagerank$t", "spark.graft.ann.stagingDir")
+        s"pagerank$t")
     }
     pr
   }
@@ -1099,10 +1100,10 @@ object AnnOps {
         VectorExpressions.register(s)
         val e = Tables.load(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding"))
-        val edges = graft.Staging.materialize(
+        val edges = Staging.materialize(
           knnGraphExact(e, GraphK)
             .select(col("vec_id").as("src"), col("nbr_id").as("dst")),
-          "knn_edges", "spark.graft.ann.stagingDir")
+          "knn_edges")
         val nodes = e.select(col("vec_id").as("id"))
         pageRank(nodes, edges, GraphK, iters, damp)
           .select(col("id").as("vec_id"),
@@ -1405,12 +1406,12 @@ object AnnOps {
           .join(edges, col("vid") === col("evid"))
           .select(col("qid"), col("nbr_id").as("vid")))
         .distinct()
-      beam = graft.Staging.materialize(
+      beam = Staging.materialize(
         scoreCandidates(cand, e, queries)
           .withColumn("rk", row_number().over(wqWindow).cast("long"))
           .filter(col("rk") <= NswEf)
           .select(col("qid"), col("vid"), col("cos")),
-        s"${tag}_beam$r", "spark.graft.ann.stagingDir")
+        s"${tag}_beam$r")
     }
     beam
   }
@@ -1548,11 +1549,11 @@ object AnnOps {
       VectorExpressions.register(s)
       val e = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
-      val edges = graft.Staging.materialize(
+      val edges = Staging.materialize(
         knnGraphExact(e, GraphK).select(col("vec_id"), col("nbr_id"))
           .unionByName(hashPositionLinks(e, NswLong, ":")).distinct()
           .select(col("vec_id").as("evid"), col("nbr_id")),
-        "nsw_edges", "spark.graft.ann.stagingDir")
+        "nsw_edges")
       val queries = nswQueries(e)
       // entry: the smallest id that is not the query itself
       val small = e.select(col("vec_id")).orderBy(col("vec_id"))
@@ -1634,14 +1635,14 @@ object AnnOps {
         .join(e, Seq("vec_id"))
         .select(col("vec_id"), col("nbr_id"),
           round(expr("dot_product_f(embedding, nvec)"), 6).as("cos"))
-      var graph = graft.Staging.materialize(
+      var graph = Staging.materialize(
         score(init)
           .withColumn("rk", row_number().over(wk).cast("long"))
           .filter(col("rk") <= GraphK)
           .select(col("vec_id"), col("nbr_id")),
-        "nnd_init", "spark.graft.ann.stagingDir")
-      val exact = knnGraphExact(e, GraphK)
-        .select(col("vec_id"), col("nbr_id")).localCheckpoint()
+        "nnd_init")
+      val exact = Staging.materialize(knnGraphExact(e, GraphK)
+        .select(col("vec_id"), col("nbr_id")), "nnd_exact")
       val nEdgesExact = exact.count().toDouble
       def recallOf(g: DataFrame): Double =
         g.join(exact, Seq("vec_id", "nbr_id"), "left_semi").count() / nEdgesExact
@@ -1659,12 +1660,12 @@ object AnnOps {
           .select(col("a").as("vec_id"), col("b").as("nbr_id"))
           .unionByName(und)
           .distinct()
-        graph = graft.Staging.materialize(
+        graph = Staging.materialize(
           score(cand)
             .withColumn("rk", row_number().over(wk).cast("long"))
             .filter(col("rk") <= GraphK)
             .select(col("vec_id"), col("nbr_id")),
-          s"nnd_round$r", "spark.graft.ann.stagingDir")
+          s"nnd_round$r")
         curve += ((r.toLong, recallOf(graph)))
       }
       import scala.jdk.CollectionConverters._
@@ -1784,13 +1785,13 @@ object AnnOps {
         .withColumn("lvl", expr(lvlCase).cast("long"))
         .select(col("vec_id"), col("lvl"))
       // one all-pairs rounded-cosine table; every layer ranks it
-      val pairs = graft.Staging.materialize(
+      val pairs = Staging.materialize(
         e.crossJoin(broadcast(
             e.select(col("vec_id").as("nbr_id"), col("embedding").as("nvec"))))
           .filter(col("vec_id") =!= col("nbr_id"))
           .select(col("vec_id"), col("nbr_id"),
             round(expr("dot_product_f(embedding, nvec)"), 6).as("cos")),
-        "hnsw_pairs", "spark.graft.ann.stagingDir")
+        "hnsw_pairs")
       val wk = Window.partitionBy(col("vec_id"))
         .orderBy(col("cos").desc, col("nbr_id"))
       def layerEdges(k: Int): DataFrame = pairs
@@ -1811,24 +1812,22 @@ object AnnOps {
       // descend: greedy 1-best steps per upper layer
       var cur: DataFrame = entry
       (HnswMaxLevel to 1 by -1).foreach { k =>
-        val ek = graft.Staging.materialize(layerEdges(k),
-          s"hnsw_l$k", "spark.graft.ann.stagingDir")
+        val ek = Staging.materialize(layerEdges(k), s"hnsw_l$k")
         (1 to HnswSteps).foreach { st =>
           val cand = cur.select(col("qid"), col("vid"))
             .unionByName(cur.join(ek, col("vid") === col("evid"))
               .select(col("qid"), col("nbr_id").as("vid")))
             .distinct()
-          cur = graft.Staging.materialize(
+          cur = Staging.materialize(
             scoreCandidates(cand, e, queries)
               .withColumn("rk", row_number().over(wqWindow))
               .filter(col("rk") === 1)
               .select(col("qid"), col("vid")),
-            s"hnsw_c${k}_$st", "spark.graft.ann.stagingDir")
+            s"hnsw_c${k}_$st")
         }
       }
       // layer 0: the shared beam from the descended entry
-      val e0 = graft.Staging.materialize(layerEdges(0),
-        "hnsw_l0", "spark.graft.ann.stagingDir")
+      val e0 = Staging.materialize(layerEdges(0), "hnsw_l0")
       beamAudit(beamSearch(cur, e0, e, queries, "hnsw"), e, queries)
     },
     Some {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Staging, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -343,9 +343,9 @@ object ClassifierOps {
       "q207_linear_probe",
       (s, dir) => {
         import s.implicits._
-        val feat = graft.Staging.materialize(
+        val feat = Staging.materialize(
           probeFeatures(Tables.loadParallel(s, dir, "documents")),
-          "probe_feat", "spark.graft.corpus.stagingDir")
+          "probe_feat")
         var w = Array(0L, 0L, 0L, 0L, 0L)
         val traj = scala.collection.mutable.ArrayBuffer
           .empty[(Int, Double, Double, Double, Double, Double)]

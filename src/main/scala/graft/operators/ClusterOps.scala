@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Staging, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,9 +43,6 @@ object ClusterOps {
   private val K = 8
   private val Rounds = 3
   private val Dim = 64
-
-  private def materialize(df: DataFrame, tag: String): DataFrame =
-    graft.Staging.materialize(df, tag, "spark.graft.corpus.stagingDir")
 
   /** Best and second-best centroid per vector (second = the nearest
     * OTHER cluster, what the silhouette needs).
@@ -107,7 +104,7 @@ object ClusterOps {
     * with the dedup survivors' embeddings. */
   private[graft] def lloydOf(emb: DataFrame)
       : (DataFrame, Array[Array[Long]]) = {
-    val qm = materialize(
+    val qm = Staging.materialize(
       emb.select(col("vec_id"),
         expr("transform(embedding, x -> cast(floor(cast(x as double) * 1000.0 + 0.5) as bigint))")
           .as("q")),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Staging, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -45,8 +45,7 @@ object CollocationOps {
       // the exploded stream (pinning the EXPLODED rows instead was
       // measured slower: the checkpoint carries doc_id per gram and
       // the explode itself moves inside the serial job)
-      val sh = graft.Staging.materialize(CorpusOps.fiveGrams(s, dir),
-        "q200_sh", "spark.graft.corpus.stagingDir")
+      val sh = Staging.materialize(CorpusOps.fiveGrams(s, dir), "q200_sh")
       val grams = sh.select(col("doc_id"), explode(col("shingles")).as("sh"))
       val firstSeen = grams.groupBy(col("sh"))
         .agg(min(col("doc_id")).as("first_doc"))
@@ -218,20 +217,20 @@ object CollocationOps {
             greatest(col("w1"), col("w2")).as("b"))
           .groupBy(col("a"), col("b")).agg(count(lit(1)).as("w"))
           .filter(col("w") >= MinPairCount)
-        val edges = graft.Staging.materialize(
+        val edges = Staging.materialize(
           und.select(col("a").as("u"), col("b").as("v"), col("w"))
             .unionByName(
               und.select(col("b").as("u"), col("a").as("v"), col("w"))),
-          "textrank_edges", "spark.graft.corpus.stagingDir")
-        val outw = graft.Staging.materialize(
+          "textrank_edges")
+        val outw = Staging.materialize(
           edges.groupBy(col("u")).agg(sum(col("w")).as("ow")),
-          "textrank_outw", "spark.graft.corpus.stagingDir")
+          "textrank_outw")
         val nodes = edges.select(col("u").as("tok")).distinct()
         var scores = nodes.withColumn("score", lit(1.0))
         (1 to TrIters).foreach { t =>
-          scores = graft.Staging.materialize(
+          scores = Staging.materialize(
             textRankRound(nodes, edges, outw, scores),
-            s"textrank$t", "spark.graft.corpus.stagingDir")
+            s"textrank$t")
         }
         scores
           .select(col("tok"), round(col("score"), 6).as("textrank"))

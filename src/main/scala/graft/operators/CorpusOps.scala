@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Staging, Tables}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,14 +22,6 @@ object CorpusOps {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.loadParallel(s, dir, "documents")
-
-  /** Materialize a frame that several downstream joins re-read —
-    * localCheckpoint locally, durable parquet staging when
-    * `spark.graft.corpus.stagingDir` is set (the 100 TB configuration;
-    * same pattern as DedupOps.materialize). Without this the composed
-    * q87 plan recomputes the shingle explosion once per consumer. */
-  private def materialize(df: DataFrame, tag: String): DataFrame =
-    graft.Staging.materialize(df, tag, "spark.graft.corpus.stagingDir")
 
   // ---------------------------------------------------------------
   // q81: boilerplate via corpus-frequent n-grams (C4 §2.2 analog)
@@ -79,7 +71,7 @@ object CorpusOps {
       // materialized: the exploded gram frame feeds both the frequency
       // count and the per-doc probe (fiveGramsOf no longer checkpoints
       // internally, so the reuse pin lives at the consumer)
-      val grams = materialize(fiveGrams(s, dir)
+      val grams = Staging.materialize(fiveGrams(s, dir)
         .select(col("doc_id"), explode(col("shingles")).as("sh")), "q81_grams")
       val frequent = grams.groupBy(col("sh"))
         .agg(count(lit(1)).as("n_docs"))          // shingles are distinct per doc
@@ -139,7 +131,7 @@ object CorpusOps {
     "q125_source_boilerplate",
     (s, dir) => {
       val d = docs(s, dir)
-      val grams = materialize(fiveGramsOf(d)
+      val grams = Staging.materialize(fiveGramsOf(d)
         .join(d.select(col("doc_id"), col("source")), Seq("doc_id"))
         .select(col("doc_id"), col("source"), explode(col("shingles")).as("sh")),
         "src_boiler_grams")
@@ -309,7 +301,7 @@ object CorpusOps {
       // pinned: the hashed frame feeds four consumers (history slice,
       // Bloom build, both post-filter legs) — unpinned, each re-ran
       // the corpus sha pass
-      val files = materialize(docs(s, dir)
+      val files = Staging.materialize(docs(s, dir)
         .select(col("doc_id"), sha2(col("text"), 256).as("file_hash")),
         "q84_files")
       // stand-in history: every third doc completed (q23's convention)
@@ -508,7 +500,7 @@ object CorpusOps {
       // gate 2: boilerplate on the raw corpus (q81 semantics); the gram
       // frame feeds BOTH the frequency count and the per-doc fraction,
       // so it is materialized once instead of exploding shingles twice
-      val grams = materialize(fiveGrams(s, dir)
+      val grams = Staging.materialize(fiveGrams(s, dir)
         .select(col("doc_id"), explode(col("shingles")).as("sh")), "grams")
       val frequent = grams.groupBy(col("sh"))
         .agg(count(lit(1)).as("n_docs")).filter(col("n_docs") >= 3).select(col("sh"))
@@ -521,7 +513,7 @@ object CorpusOps {
         .select(col("doc_id"))
       // survivors feed the dedup groupBy AND the semi-join back — one
       // materialization, not two gate+boiler recomputes
-      val clean = materialize(
+      val clean = Staging.materialize(
         gated.join(boiler, Seq("doc_id"), "left_anti")
           .select(col("source"), col("doc_id"), col("text")), "clean")
       // gate 3: exact dedup — keep the lowest doc_id per content hash
@@ -771,7 +763,7 @@ object CorpusOps {
     // AND the join back — unpinned, the split+segment+sha Generate
     // runs once per consumer. Join (not a window over h) so AQE skew
     // handling still splits a mass-duplicated segment at scale.
-    val segs = materialize(lineSegments(d), "line_segs")
+    val segs = Staging.materialize(lineSegments(d), "line_segs")
     val firsts = segs.groupBy(col("h")).agg(min(col("pos_key")).as("first_key"))
     segs.join(firsts, Seq("h"))
       .withColumn("keep", col("pos_key") === col("first_key"))
@@ -814,7 +806,7 @@ object CorpusOps {
   /** Library entry: the q148 signal over an arbitrary frame. */
   def dupLineCharsOf(d: DataFrame): DataFrame = {
     // pinned for the same two consumers as lineDedupOf above
-    val segs = materialize(lineSegments(d), "line_segs148")
+    val segs = Staging.materialize(lineSegments(d), "line_segs148")
     val counts = segs.groupBy(col("h")).agg(count(lit(1)).as("n_occ"))
     segs.join(counts, Seq("h"))
       .groupBy(col("doc_id"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Staging, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -65,22 +65,13 @@ object DedupOps {
 
   private val shingleSqlCte = shingleSqlCteFor("documents")
 
-  /** Materialize a frame reused across several joins. Default (local
-    * mode): localCheckpoint — fast, but pinned to executors, so a lost
-    * executor kills the job. Durable mode (`spark.graft.dedup.stagingDir`
-    * set to a parquet-capable path): write-then-read a staged table, so
-    * any lost task recomputes from the staged files — the configuration
-    * a 100 TB run uses (SCALE.md). */
-  private[graft] def materialize(df: DataFrame, tag: String): DataFrame =
-    graft.Staging.materialize(df, tag, "spark.graft.dedup.stagingDir")
-
   /** MinHash signatures: ONE sha256 per shingle; the K hash functions
     * are the K disjoint 8-hex-char slices of the digest (256 independent
     * bits buy 8 independent 32-bit permutations for one hash pass —
     * 8× cheaper than hashing per-permutation). Signature entry k is the
     * lexicographic min of slice k. */
   private def hashedOf(sh: DataFrame, tag: String): DataFrame =
-    materialize(sh
+    Staging.materialize(sh
       .select(col("doc_id"),
         expr("transform(shingles, s -> sha2(s, 256))").as("hashes")), tag)
 
@@ -166,7 +157,7 @@ object DedupOps {
       // join (the q245 800 GB lesson, applied to its own family).
       // left_outer: a band collision with zero true overlap is still a
       // candidate row (jaccard 0), as before.
-      val pairs = materialize(lshCandidatePairs(signatures(hashed)), "q51_cand")
+      val pairs = Staging.materialize(lshCandidatePairs(signatures(hashed)), "q51_cand")
       val sizes = hashed.select(col("doc_id"),
         size(col("hashes")).cast("long").as("n"))
       pairs
@@ -229,7 +220,7 @@ object DedupOps {
       preflightGuard(s, dir, "minhash")
       val hashed = hashedShingles(s, dir)
       // slim verify through the inverted index — see q51's note
-      val pairs = materialize(lshCandidatePairs(signatures(hashed)), "q241_cand")
+      val pairs = Staging.materialize(lshCandidatePairs(signatures(hashed)), "q241_cand")
       val sizes = hashed.select(col("doc_id"),
         size(col("hashes")).cast("long").as("n"))
       pairs
@@ -334,6 +325,15 @@ object DedupOps {
   private val PfMod = 65536      // the 16^4 content-hash bucket space
   private val PfThresh = 16384   // buckets kept → sample rate p = 1/4
   private val PfBudgetDefault = 1000.0 // projected raw candidates per doc
+
+  /** The gates' budget (raw candidate pairs per doc) when
+    * `spark.graft.dedup.preflight` is "true", else None (gates off). */
+  private def preflightBudget(s: SparkSession): Option[Double] =
+    if (s.conf.getOption("spark.graft.dedup.preflight").contains("true"))
+      Some(s.conf.getOption("spark.graft.dedup.preflightBudget")
+        .map(_.toDouble).getOrElse(PfBudgetDefault))
+    else None
+
   /** 1/p² for the Bernoulli(PfThresh/PfMod) sample — 16.0; renders
     * identically into the oracle text so the two cannot drift. */
   private val PfInv2 = (PfMod.toDouble / PfThresh) * (PfMod.toDouble / PfThresh)
@@ -469,9 +469,7 @@ object DedupOps {
     * extra pass. */
   private def preflightGuard(s: SparkSession, dir: String, family: String,
       tau: Double = ContainTauDefault): Unit =
-    if (s.conf.getOption("spark.graft.dedup.preflight").contains("true")) {
-      val budget = s.conf.getOption("spark.graft.dedup.preflightBudget")
-        .map(_.toDouble).getOrElse(PfBudgetDefault)
+    preflightBudget(s).foreach { budget =>
       val r = preflightFor(s, dir, family, budget, tau).collect().head
       if (r.getAs[String]("verdict") == "refuse")
         throw new IllegalStateException(
@@ -732,7 +730,7 @@ object DedupOps {
 
   private[operators] def simhashPairs(s: SparkSession, dir: String): DataFrame = {
     preflightGuard(s, dir, "simhash")
-    simhashPairsOf(materialize(packedSimhash(s, dir), "simhash"))
+    simhashPairsOf(Staging.materialize(packedSimhash(s, dir), "simhash"))
   }
 
   val q90SimhashHamming: QueryDef = QueryDef(
@@ -863,13 +861,13 @@ object DedupOps {
     * left join. Converges in O(component diameter) rounds. */
   private[operators] def minLabelComponents(pairs: DataFrame,
       maxRounds: Int = 20): DataFrame = {
-    val edges = materialize(
+    val edges = Staging.materialize(
       pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))),
       "edges")
     // working set: edge endpoints only (src already carries both
     // directions after the union above)
-    var labels = materialize(edges
+    var labels = Staging.materialize(edges
       .select(col("src").as("id")).distinct()
       .withColumn("label", col("id")), "labels0")
     var changed = true
@@ -881,7 +879,7 @@ object DedupOps {
       val msgs = edges
         .join(labels.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst").as("id")).agg(min(col("label")).as("m"))
-      val next = materialize(
+      val next = Staging.materialize(
         labels.withColumnRenamed("label", "old")
           .join(msgs, Seq("id"), "left_outer")
           .withColumn("label", least(col("old"), coalesce(col("m"), col("old"))))
@@ -1027,7 +1025,7 @@ object DedupOps {
 
   private[operators] def simhash128Pairs(s: SparkSession, dir: String): DataFrame = {
     preflightGuard(s, dir, "simhash128")
-    simhash128PairsOf(materialize(packedSimhash128Of(docs(s, dir)), "simhash128"))
+    simhash128PairsOf(Staging.materialize(packedSimhash128Of(docs(s, dir)), "simhash128"))
   }
 
   /** Shared q242 oracle CTEs — the 128-bit string replay. */
@@ -1119,7 +1117,7 @@ object DedupOps {
 
   private[operators] def mankuPairs(s: SparkSession, dir: String): DataFrame = {
     preflightGuard(s, dir, "manku64")
-    mankuPairsOf(materialize(packedSimhash(s, dir), "manku_sig"))
+    mankuPairsOf(Staging.materialize(packedSimhash(s, dir), "manku_sig"))
   }
 
   /** The oracle's table list rendered as VALUES rows from the SAME
@@ -1270,11 +1268,7 @@ object DedupOps {
     // take this guard: their probe⋈index mass is already priced by
     // the bipartite "containment" family, and their measured x100
     // cost is adjudicated candidate-intrinsic.
-    val sess = hashed.sparkSession
-    if (incidenceGuard &&
-        sess.conf.getOption("spark.graft.dedup.preflight").contains("true")) {
-      val budget = sess.conf.getOption("spark.graft.dedup.preflightBudget")
-        .map(_.toDouble).getOrElse(PfBudgetDefault)
+    if (incidenceGuard) preflightBudget(hashed.sparkSession).foreach { budget =>
       val mass = ia.groupBy(col("h")).agg(count(lit(1)).as("ca"))
         .join(ib.groupBy(col("h")).agg(count(lit(1)).as("cb")), "h")
         .agg(coalesce(sum(col("ca") * col("cb")), lit(0L)).as("m"))
@@ -1331,7 +1325,7 @@ object DedupOps {
     // columns it had just projected away (SCALE.md Round 15). It is
     // also MATERIALIZED, feeding three consumers (the two per-side
     // semi-joins inside commonHashCounts and the final verify join).
-    val cand = materialize(containProbes(hashed, tau).join(containIndex(hashed), "h")
+    val cand = Staging.materialize(containProbes(hashed, tau).join(containIndex(hashed), "h")
       .filter(col("n_small") < col("n_big") ||
         (col("n_small") === col("n_big") && col("small_id") < col("big_id")))
       .select(col("small_id"), col("n_small"), col("big_id"), col("n_big"))
@@ -1365,7 +1359,7 @@ object DedupOps {
     * exact either way. The MinHash family keeps the full digest (its
     * K permutations are the digest's 8-char slices). */
   private def hashed16Of(sh: DataFrame, tag: String): DataFrame =
-    materialize(sh.select(col("doc_id"),
+    Staging.materialize(sh.select(col("doc_id"),
       expr("transform(shingles, s -> substr(sha2(s, 256), 1, 16))").as("hashes")), tag)
 
   private val hash16SqlCte =
@@ -1479,9 +1473,7 @@ object DedupOps {
     * published escape is Manku et al. 2007 permuted tables or a
     * 128-bit fingerprint, not a bigger cluster. */
   private def contractedGuard(s: SparkSession, fp: DataFrame, nDocs: => Long): Unit =
-    if (s.conf.getOption("spark.graft.dedup.preflight").contains("true")) {
-      val budget = s.conf.getOption("spark.graft.dedup.preflightBudget")
-        .map(_.toDouble).getOrElse(PfBudgetDefault)
+    preflightBudget(s).foreach { budget =>
       // nDocs is by-name so the caller's full-corpus count job only
       // runs when the gate is armed (r13 ADVICE: q205 paid it always)
       val nDocsV = nDocs
@@ -1562,14 +1554,14 @@ object DedupOps {
     * join), the same contract as [[minLabelComponents]]. */
   private[operators] def twoPhaseComponents(pairs: DataFrame,
       maxRounds: Int = 30): DataFrame = {
-    var edges = materialize(
+    var edges = Staging.materialize(
       pairs.select(greatest(col("doc_a"), col("doc_b")).as("u"),
           least(col("doc_a"), col("doc_b")).as("v"))
         .filter(col("u") =!= col("v")).distinct(), "tp_edges0")
     var done = false
     var rounds = 0
     while (!done && rounds < maxRounds) {
-      val next = materialize(twoPhaseRound(edges), s"tp_edges${rounds + 1}")
+      val next = Staging.materialize(twoPhaseRound(edges), s"tp_edges${rounds + 1}")
       // Convergence test = IS the frame a star forest (no edge target
       // is also a source)? A star forest is a fixed point of the
       // alternation (both star operations map it to itself) and every
@@ -1614,8 +1606,8 @@ object DedupOps {
       // fingerprints and every doc inherits its fingerprint's
       // component label. Component minima are preserved because each
       // supernode's id IS its group's min doc_id.
-      val packed = materialize(packedSimhash(s, dir), "ctr_sig")
-      val fp = materialize(fingerprintsOf(packed), "ctr_fp")
+      val packed = Staging.materialize(packedSimhash(s, dir), "ctr_sig")
+      val fp = Staging.materialize(fingerprintsOf(packed), "ctr_fp")
       contractedGuard(s, fp, docs(s, dir).count())
       val labels = twoPhaseComponents(
           fingerprintPairs(fp).select(col("doc_a"), col("doc_b")))
@@ -1881,7 +1873,7 @@ object DedupOps {
       "q226_source_minhash",
       (s, dir) => {
         val src = docs(s, dir).select(col("doc_id"), col("source"))
-        val grams = materialize(shingled(s, dir)
+        val grams = Staging.materialize(shingled(s, dir)
           .join(src, Seq("doc_id"))
           .select(col("source"), explode(col("shingles")).as("sh"))
           .distinct(), "src_sh")
@@ -1982,7 +1974,7 @@ object DedupOps {
         val hashed = hashedOf(shingledOf(d, "policy_tok"), "policy_hashed")
         // materialized: the verify consumes the candidate frame four
         // times (count + bloom build + two semi-joins + final join)
-        val cand = materialize(lshCandidatePairs(signatures(hashed)), "policy_cand")
+        val cand = Staging.materialize(lshCandidatePairs(signatures(hashed)), "policy_cand")
         val sizes = hashed.select(col("doc_id"),
           size(col("hashes")).cast("long").as("n"))
         cand.join(commonHashCounts(hashed, cand, "doc_a", "doc_b",

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Staging, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -407,8 +407,7 @@ object EventsOps {
   val q193RetentionHalfLife: QueryDef = QueryDef(
     "q193_retention_half_life",
     (s, dir) => {
-      val ret = graft.Staging.materialize(
-        q136Retention.fn(s, dir), "retention", "spark.graft.events.stagingDir")
+      val ret = Staging.materialize(q136Retention.fn(s, dir), "retention")
       val base = ret.filter(col("day_offset") === 0L)
         .select(col("cohort_day"), col("n_users").as("n0"))
       val pts = ret.filter(col("day_offset") >= 1L)

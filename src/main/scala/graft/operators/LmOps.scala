@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Staging, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,14 +25,6 @@ object LmOps {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.loadParallel(s, dir, "documents")
 
-  /** Durable-staging materialization seam (same contract as
-    * DedupOps/MixOps): localCheckpoint locally, parquet staging when
-    * `spark.graft.corpus.stagingDir` is set — the 100 TB configuration,
-    * where a lost executor recomputes from staged files instead of
-    * killing the job. */
-  private def materialize(df: DataFrame, tag: String): DataFrame =
-    graft.Staging.materialize(df, tag, "spark.graft.corpus.stagingDir")
-
   /** (doc_id, token array) — materialized so the downstream bigram
     * transform doesn't re-run the regex split per element_at (the
     * project-collapse inlining hazard measured in DedupOps.shingled).
@@ -44,7 +36,7 @@ object LmOps {
     * scanning + splitting once PER MODEL TABLE (three exchanges in
     * q96's plan, zero reused). The checkpoint stays. */
   private[graft] def tokenizedOf(d: DataFrame): DataFrame =
-    materialize(d.select(col("doc_id"),
+    Staging.materialize(d.select(col("doc_id"),
       split(lower(trim(col("text"))), "\\s+").as("w")), "lm_tok")
 
   private def tokenized(s: SparkSession, dir: String): DataFrame =
@@ -125,7 +117,7 @@ object LmOps {
 
   /** Train the add-alpha bigram model once over a reference corpus. */
   def trainLm(ref: DataFrame): LmModel =
-    trainLmFrom(materialize(bigramsOf(ref), "lm_ref_bigrams"), vocab = None)
+    trainLmFrom(Staging.materialize(bigramsOf(ref), "lm_ref_bigrams"), vocab = None)
 
   /** The sentinel OOV words collapse to under the top-V prune. */
   val UnkToken = "<unk>"
@@ -143,25 +135,25 @@ object LmOps {
     * query-time mapping. Corpus text that literally contains
     * "<unk>" merges with the OOV class, as in KenLM. */
   def trainLm(ref: DataFrame, topV: Int): LmModel = {
-    val bigrams = materialize(bigramsOf(ref), "lm_ref_bigrams")
-    val vocab = materialize(
+    val bigrams = Staging.materialize(bigramsOf(ref), "lm_ref_bigrams")
+    val vocab = Staging.materialize(
       bigrams.select(explode(array(col("w1"), col("w2"))).as("wd"))
         .groupBy(col("wd")).agg(count(lit(1)).as("c"))
         .orderBy(col("c").desc, col("wd"))
         .limit(topV)
         .select(col("wd")), "lm_vocab")
-    trainLmFrom(materialize(rewriteOov(bigrams, vocab), "lm_ref_pruned"),
+    trainLmFrom(Staging.materialize(rewriteOov(bigrams, vocab), "lm_ref_pruned"),
       vocab = Some(vocab))
   }
 
   private def trainLmFrom(bigrams: DataFrame,
       vocab: Option[DataFrame]): LmModel =
     LmModel(
-      materialize(bigrams.groupBy(col("w1"), col("w2"))
+      Staging.materialize(bigrams.groupBy(col("w1"), col("w2"))
         .agg(count(lit(1)).as("c2")), "lm_c2"),
-      materialize(bigrams.groupBy(col("w1"))
+      Staging.materialize(bigrams.groupBy(col("w1"))
         .agg(count(lit(1)).as("c1")), "lm_c1"),
-      materialize(bigrams.agg(countDistinct(col("w2")).as("v")), "lm_v"),
+      Staging.materialize(bigrams.agg(countDistinct(col("w2")).as("v")), "lm_v"),
       vocab)
 
   /** OOV words → [[UnkToken]], both bigram positions: two broadcast
@@ -205,10 +197,10 @@ object LmOps {
     // single-reader tokens: fuse scan→split→explode into the bigram
     // checkpoint's one job (bigramsDirect) instead of paying the
     // tokenizedOf checkpoint as a serial barrier first
-    avgNllFromBigrams(materialize(bigramsDirect(d), "lm_bigrams"))
+    avgNllFromBigrams(Staging.materialize(bigramsDirect(d), "lm_bigrams"))
 
   private[graft] def avgNllOfTokens(tok: DataFrame): DataFrame =
-    avgNllFromBigrams(materialize(bigramsOfTokens(tok), "lm_bigrams"))
+    avgNllFromBigrams(Staging.materialize(bigramsOfTokens(tok), "lm_bigrams"))
 
   private def avgNllFromBigrams(bigrams: DataFrame): DataFrame = {
     // q108's vocab-side composition applied to the add-alpha model
@@ -222,7 +214,7 @@ object LmOps {
     // doubles row-for-row (same expression over the same counts,
     // evaluated per bigram type instead of per token), oracle
     // unchanged.
-    val c2t = materialize(bigrams.groupBy(col("w1"), col("w2"))
+    val c2t = Staging.materialize(bigrams.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("c2")), "lm_c2t")
     val c1t = c2t.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
     val vt = c2t.agg(countDistinct(col("w2")).as("v"))
@@ -250,11 +242,6 @@ object LmOps {
     val bg = m.vocab.map(v => rewriteOov(raw, v)).getOrElse(raw)
     scoreNll(bg, m.bgCounts, m.ctxCounts, m.vocabSize, strict = false)
   }
-
-  /** One-shot convenience: train on `ref`, score `d`. Prefer
-    * [[trainLm]] + [[avgNllWith]] when scoring repeatedly. */
-  def avgNllAgainst(d: DataFrame, ref: DataFrame): DataFrame =
-    avgNllWith(d, trainLm(ref))
 
   /** The q96 model + per-doc score as shared oracle CTEs (ending in
     * `nll(doc_id, n_bigrams, avg_nll)`) — one copy of the smoothing
@@ -317,8 +304,8 @@ object LmOps {
   val q108KnPerplexity: QueryDef = QueryDef(
     "q108_kn_perplexity",
     (s, dir) => {
-      val bigrams = materialize(bigramsOf(docs(s, dir)), "kn_bigrams")
-      val c2t = materialize(bigrams.groupBy(col("w1"), col("w2"))
+      val bigrams = Staging.materialize(bigramsOf(docs(s, dir)), "kn_bigrams")
+      val c2t = Staging.materialize(bigrams.groupBy(col("w1"), col("w2"))
         .agg(count(lit(1)).as("c2")), "kn_c2")
       // c(w1·) = Σ_w2 c(w1 w2): the SAME integer as counting the
       // corpus stream, computed from the vocab-sized table
@@ -466,7 +453,7 @@ object LmOps {
       // the final bucket join — unpinned, the whole q96 probe+agg
       // subtree would run once per consumer (narrow (doc_id, lang,
       // nll) rows, ~docs-sized, checkpoint-cheap)
-      val scored = materialize(avgNllOf(d)
+      val scored = Staging.materialize(avgNllOf(d)
         .join(d.select(col("doc_id"), col("lang")), "doc_id"), "ccnet_scored")
       val cuts = scored.groupBy(col("lang")).agg(
         round(expr("percentile(avg_nll, 1.0D/3)"), 6).as("c1"),
@@ -533,7 +520,7 @@ object LmOps {
           |  i -> concat_ws(' ', element_at(w, i), element_at(w, i + 1)))""".stripMargin)).as("bg"))
       .select(col("doc_id"),
         expr(featBucket("sha2(bg, 256)")).cast("long").as("b"))
-    tag.fold(rows)(t => materialize(rows, t))
+    tag.fold(rows)(t => Staging.materialize(rows, t))
   }
 
   /** Per-raw-doc DSIR weights (doc_id, n_bigrams, avg_logratio) for an
@@ -558,9 +545,9 @@ object LmOps {
     // materialized: each count frame (≤B rows) feeds two consumers
     // (its total and the per-bucket score) — without the pin each
     // consumer would re-run the corpus-side aggregation scan
-    val tCounts = materialize(
+    val tCounts = Staging.materialize(
       tb.groupBy(col("b")).agg(count(lit(1)).as("ct")), "dsir_tc")
-    val rCounts = materialize(
+    val rCounts = Staging.materialize(
       rb.groupBy(col("b")).agg(count(lit(1)).as("cr")), "dsir_rc")
     val totals = tCounts.agg(coalesce(sum(col("ct")), lit(0L)).as("nt"))
       .crossJoin(rCounts.agg(coalesce(sum(col("cr")), lit(0L)).as("nr")))
@@ -793,7 +780,7 @@ object LmOps {
     // 26.5M-row sorts) into a sort-free hash join against the small
     // aggregated side; at bench scale AQE still upgrades it to
     // broadcast when the side is tiny.
-    val spans = materialize(spanWindows(s, dir), "q98_spans")
+    val spans = Staging.materialize(spanWindows(s, dir), "q98_spans")
     val shared = sharedSpans(spans).withColumn("dup", lit(1))
     spans.join(shared.hint("shuffle_hash"), Seq("h"), "left_outer")
       .groupBy(col("doc_id"))
@@ -852,7 +839,7 @@ object LmOps {
       // fix: one materialized explode, sort-free semi join. Here BOTH
       // consumers use the full (doc_id, i, h) width, so the r7 note
       // about paying i's width for consumers that drop it doesn't apply.
-      val spans = materialize(spanWindows(s, dir, withPos = true), "q107_spans")
+      val spans = Staging.materialize(spanWindows(s, dir, withPos = true), "q107_spans")
       val dupw = spans.join(sharedSpans(spans).hint("shuffle_hash"),
         Seq("h"), "left_semi")
       val w = Window.partitionBy(col("doc_id")).orderBy(col("i"))
@@ -1284,7 +1271,7 @@ object LmOps {
         Seq(lit(nm), lit(i + 1)) }.toIndexedSeq: _*)
       val srcOf = map(srcs.zipWithIndex.flatMap { case (nm, i) =>
         Seq(lit(i + 1), lit(nm)) }.toIndexedSeq: _*)
-      val bgs = materialize(
+      val bgs = Staging.materialize(
         bigramsDirect(d.withColumn("sid", element_at(sidOf, col("source"))),
           Seq("sid")), "doremi_bg")
       // FUSED scoring, composed on the model side (q108's idiom, guide
@@ -1302,7 +1289,7 @@ object LmOps {
       // models by construction) and the same -ln((c2+α)/(c1+v·α))
       // chain per leg, evaluated per bigram TYPE instead of per
       // token, each rounded at 6 per doc exactly as before.
-      val c2s = materialize(
+      val c2s = Staging.materialize(
         bgs.groupBy(col("sid"), col("w1"), col("w2"))
           .agg(count(lit(1)).as("c2s")), "doremi_c2s")
       val c2t = c2s.groupBy(col("w1"), col("w2"))
@@ -1588,10 +1575,10 @@ object LmOps {
   val q208MooreLewis: QueryDef = QueryDef(
     "q208_moore_lewis",
     (s, dir) => {
-      val tok = materialize(docs(s, dir)
+      val tok = Staging.materialize(docs(s, dir)
         .select(col("doc_id"), col("source"),
           split(lower(trim(col("text"))), "\\s+").as("w")), "ml_tok")
-      val bg = materialize(
+      val bg = Staging.materialize(
         tok.filter(size(col("w")) >= 2)
           .select(col("doc_id"), col("source"), explode(expr(
             """transform(sequence(1, size(w) - 1),
@@ -1599,11 +1586,11 @@ object LmOps {
           .select(col("doc_id"), col("source"), col("b.w1"), col("b.w2")),
         "ml_bg")
       def model(b: DataFrame, tag: String): (DataFrame, DataFrame, DataFrame) = (
-        materialize(b.groupBy(col("w1"), col("w2"))
+        Staging.materialize(b.groupBy(col("w1"), col("w2"))
           .agg(count(lit(1)).as("c2")), s"ml_${tag}_c2"),
-        materialize(b.groupBy(col("w1"))
+        Staging.materialize(b.groupBy(col("w1"))
           .agg(count(lit(1)).as("c1")), s"ml_${tag}_c1"),
-        materialize(b.agg(countDistinct(col("w2")).as("v")), s"ml_${tag}_v"))
+        Staging.materialize(b.agg(countDistinct(col("w2")).as("v")), s"ml_${tag}_v"))
       val (inC2, inC1, inV) =
         model(bg.filter(col("source") === MlInDomainSource), "in")
       val (gC2, gC1, gV) = model(bg, "gen")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Staging, Tables}
 import graft.tools.Media
 import org.apache.spark.sql.functions._
 
@@ -209,10 +209,11 @@ object MediaOps {
           Media.dHash64(img)
         }
       }
-      val sig = docs.filter(length(col("text")) > 0)
+      // hash once: feeds 8 band rows + both join sides
+      val sig = Staging.materialize(docs.filter(length(col("text")) > 0)
         .select(col("doc_id"), ph(col("text")).as("p"))
-        .select(col("doc_id"), col("p._1").as("hi"), col("p._2").as("lo"))
-        .localCheckpoint() // hash once: feeds 8 band rows + both join sides
+        .select(col("doc_id"), col("p._1").as("hi"), col("p._2").as("lo")),
+        "dhash_sig")
       val blocks = sig.select(col("doc_id"), col("hi"), col("lo"),
           explode(expr("sequence(0, 7)")).as("block_id"))
         .withColumn("blk", expr(

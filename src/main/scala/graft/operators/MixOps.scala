@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Staging, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,12 +23,6 @@ object MixOps {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.loadParallel(s, dir, "documents")
-
-  /** Same durable-staging materialization seam as DedupOps/CorpusOps:
-    * localCheckpoint locally, parquet staging when
-    * `spark.graft.corpus.stagingDir` is set (the 100 TB configuration). */
-  private def materialize(df: DataFrame, tag: String): DataFrame =
-    graft.Staging.materialize(df, tag, "spark.graft.corpus.stagingDir")
 
   // ---------------------------------------------------------------
   // q92: benchmark decontamination (n-gram overlap)
@@ -239,7 +233,7 @@ object MixOps {
     // IEEE negation is exact, so min(-cos) = max(cos) with the same
     // min-cid tiebreak; each vector's k candidate rows collapse
     // map-side before the shuffle (the q85-encode lesson)
-    val assigned = materialize(
+    val assigned = Staging.materialize(
       e.crossJoin(broadcast(cents))
         .select(col("vec_id"), col("embedding"), col("cid"),
           (-expr("dot_product_f(embedding, cvec)")).as("negcos"))
@@ -320,7 +314,7 @@ object MixOps {
       val cents = e.filter(col("vec_id") < Cents)
         .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       // same partial-aggregatable argmax as semDedup's assignment
-      val assigned = materialize(
+      val assigned = Staging.materialize(
         e.crossJoin(broadcast(cents))
           .select(col("vec_id"), col("cid"),
             (-expr("dot_product_f(embedding, cvec)")).as("negcos"))
@@ -439,7 +433,7 @@ object MixOps {
     "q122_source_overlap",
     (s, dir) => {
       val d = docs(s, dir)
-      val grams = materialize(
+      val grams = Staging.materialize(
         CorpusOps.fiveGramsOf(d)
           .join(d.select(col("doc_id"), col("source")), Seq("doc_id"))
           .select(col("source"), explode(col("shingles")).as("sh"))

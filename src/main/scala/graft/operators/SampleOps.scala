@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Staging, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -123,9 +123,9 @@ object SampleOps {
       // the join back — unpinned, the corpus is scanned and sha-hashed
       // once per consumer. Join (not a window over h) so AQE skew
       // handling still splits a mass-duplicated cluster at scale.
-      val hashed = graft.Staging.materialize(
+      val hashed = Staging.materialize(
         d.select(col("doc_id"), sha2(col("text"), 256).as("h")),
-        "q116_hashed", "spark.graft.corpus.stagingDir")
+        "q116_hashed")
       val sizes = hashed.groupBy(col("h")).agg(count(lit(1)).as("grp_size"))
       hashed.join(sizes, Seq("h"))
         .select(col("doc_id"), col("grp_size"),
@@ -543,8 +543,6 @@ object SampleOps {
   // ---------------------------------------------------------------
   // q165: deterministic epoch shuffle (training-order materialization)
   // ---------------------------------------------------------------
-
-  private val ShuffleShards = 16
 
   /** Deterministic training-order shuffle: every epoch a training job
     * needs the corpus in a NEW pseudorandom order that is reproducible

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Staging, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -66,8 +66,7 @@ object SelectOps {
   val q203KCenterCoreset: QueryDef = QueryDef(
     "q203_kcenter_coreset",
     (s, dir) => {
-      val qm = graft.Staging.materialize(quantized(s, dir), "kcenter_q",
-        "spark.graft.corpus.stagingDir")
+      val qm = Staging.materialize(quantized(s, dir), "kcenter_q")
       // seed: min vec_id (struct ordering: vec_id first)
       val seedRow = qm.agg(min(struct(col("vec_id"), col("q"))).as("w"))
         .head.getStruct(0)
@@ -223,14 +222,14 @@ object SelectOps {
     "q210_submodular_select",
     (s, dir) => {
       import s.implicits._
-      val tf = graft.Staging.materialize(
+      val tf = Staging.materialize(
         Tables.load(s, dir, "documents")
           .filter(length(trim(col("text"))) > 0)
           .select(col("doc_id"),
             explode(split(lower(trim(col("text"))), "\\s+")).as("word"))
           .groupBy(col("doc_id"), col("word"))
           .agg(count(lit(1)).as("tf")),
-        "submod_tf", "spark.graft.corpus.stagingDir")
+        "submod_tf")
       def q(x: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
         floor(sqrt(x.cast("double")) * SqrtScale + 0.5).cast("long")
       val state = scala.collection.mutable.Map.empty[String, Long]

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Staging, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,9 +25,6 @@ object SpectralOps {
   private val Dim = 64
   private val Rounds = 4
   private val VScale = 1000L // iterate vector lattice: max |component|
-
-  private def materialize(df: DataFrame, tag: String): DataFrame =
-    graft.Staging.materialize(df, tag, "spark.graft.corpus.stagingDir")
 
   /** One power-iteration round as a DataFrame: s = Σᵢ cᵢ·(cᵢ·v), the
     * d-row aggregation each round reduces the corpus into. Factored out
@@ -84,7 +81,7 @@ object SpectralOps {
       val dim0 = raw.select(size(col("embedding"))).head.getInt(0)
       require(dim0 == Dim,
         s"q202 expects $Dim-dim embeddings, table has $dim0")
-      val qm = materialize(
+      val qm = Staging.materialize(
         raw.select(col("vec_id"),
           expr("transform(embedding, x -> cast(floor(cast(x as double) * 1000.0 + 0.5) as bigint))")
             .as("q")),
@@ -99,7 +96,7 @@ object SpectralOps {
           math.floor(r.getLong(1).toDouble / r.getLong(2) + 0.5).toLong))
         .sortBy(_._1).map(_._2)
       val meanArr = meanRows.mkString("array(", "L,", "L)")
-      val cm = materialize(
+      val cm = Staging.materialize(
         qm.select(col("vec_id"),
           expr(s"zip_with(q, $meanArr, (a, b) -> a - b)").as("c")),
         "pca_c")

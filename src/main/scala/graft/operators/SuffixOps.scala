@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Staging, Tables}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -53,7 +53,7 @@ import org.apache.spark.sql.types.LongType
   *     the row's (rk, rk2)-run head inside the class segment. The run
   *     count and singleton (retire) flags fall out of the same scan,
   *     so saturation/fixpoint detection costs nothing;
-  *   - each round's rank table is materialized (localCheckpoint) to
+  *   - each round's rank table is materialized ([[graft.Staging]]) to
   *     truncate iterative lineage, the q130-PageRank convention;
   *     retired positions accumulate as ~log(maxLen) checkpointed
   *     pieces whose lazy union feeds the shifted rk2 lookup;
@@ -132,11 +132,10 @@ object SuffixOps {
           org.apache.spark.sql.types.StringType, nullable = false),
         org.apache.spark.sql.types.StructField("rk", LongType, nullable = false),
         org.apache.spark.sql.types.StructField("c", LongType, nullable = false))))
-    val combined = tokens.join(headsDf, "tk")
+    val combined = Staging.materialize(tokens.join(headsDf, "tk")
       .select(col("doc_id").cast("long").as("doc_id"),
         col("i").cast("long").as("i"), col("rk"),
-        (col("c") === 1L).as("retired"))
-      .localCheckpoint(true)
+        (col("c") === 1L).as("retired")), "sa_heads")
     rdd.unpersist(blocking = false)
     (combined, acc, multiClasses)
   }
@@ -240,7 +239,7 @@ object SuffixOps {
       org.apache.spark.sql.types.BooleanType, nullable = false)
     // materialize before unpersisting the sorted input (both passes
     // read it; a lazy result would recompute the sort after unpersist)
-    val result = s.createDataFrame(out, schema).localCheckpoint(true)
+    val result = Staging.materialize(s.createDataFrame(out, schema), "sa_rerank")
     rdd.unpersist(blocking = false)
     (result, totalRuns)
   }
@@ -315,9 +314,9 @@ object SuffixOps {
     * suffix-array order — lcp computed by direct comparison of the two
     * doc-bounded suffix slices. */
   private def indexedSa(s: SparkSession, dir: String): DataFrame =
-    zipWithRank(
-      suffixRanks(s, dir).orderBy(col("rk"), col("doc_id"), col("i")), "idx")
-      .localCheckpoint()
+    Staging.materialize(zipWithRank(
+      suffixRanks(s, dir).orderBy(col("rk"), col("doc_id"), col("i")), "idx"),
+      "sa_indexed")
 
   /** Tokens shipped per suffix row through the LCP joins. Adjacent-SA
     * neighbors sharing a prefix past this bound escalate to the exact
@@ -371,12 +370,11 @@ object SuffixOps {
     // frame is 6 slim columns per row, not two LcpBound-token arrays
     // (the wide form wrote the whole slice payload to checkpoint
     // storage — measured as most of the bounded pass at x100)
-    val scored = lcpCols(bounded)
+    val scored = Staging.materialize(lcpCols(bounded)
       .select(col("idx"), col("dA"), col("iA"), col("dB"), col("iB"),
         col("lcp"),
         (col("lcp") === LcpBound && col("sufLenA") > LcpBound &&
-          col("sufLenB") > LcpBound).as("open"))
-      .localCheckpoint()
+          col("sufLenB") > LcpBound).as("open")), "lcp_scored")
     val resolved = scored.filter(!col("open"))
       .select(col("idx"), col("dA"), col("iA"), col("lcp"))
     val escalated = lcpCols(scored.filter(col("open"))
@@ -424,7 +422,8 @@ object SuffixOps {
   val q164LongestDup: QueryDef = QueryDef(
     "q164_longest_dup",
     (s, dir) => {
-      val nb = neighborLcpOf(indexedSa(s, dir), tok(s, dir)).localCheckpoint()
+      val nb = Staging.materialize(
+        neighborLcpOf(indexedSa(s, dir), tok(s, dir)), "q164_nb")
       val m = nb.agg(max(col("lcp")).as("m"))
       // only the MAXIMAL pairs (a handful of rows) rejoin the token
       // arrays to extract their sample text — the LCP pass itself
@@ -515,12 +514,13 @@ object SuffixOps {
     // Verify/Bench run every query in one long-lived session, so an
     // un-unpersisted RDD here would leak a corpus-sized cache entry
     // per invocation until session end
-    val result = s.createDataFrame(out, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("ov",
-        org.apache.spark.sql.types.LongType, nullable = false))))
-      .localCheckpoint(true)
+    val result = Staging.materialize(s.createDataFrame(out,
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("doc_id",
+          org.apache.spark.sql.types.LongType, nullable = false),
+        org.apache.spark.sql.types.StructField("ov",
+          org.apache.spark.sql.types.LongType, nullable = false)))),
+      "flagged_lcp")
     rdd.unpersist(blocking = false)
     result
   }
@@ -545,9 +545,8 @@ object SuffixOps {
   val q168ContamDepth: QueryDef = QueryDef(
     "q168_contam_depth",
     (s, dir) => {
-      val sa = saWithLcp(s, dir)
-        .withColumn("flag", col("doc_id") % 10 === 7)
-        .localCheckpoint()
+      val sa = Staging.materialize(saWithLcp(s, dir)
+        .withColumn("flag", col("doc_id") % 10 === 7), "q168_sa")
       // downward edge at row x = adjacent lcp between x and x+1
       val withNext = sa.join(
         sa.select((col("idx") - 1).as("idx"), col("lcp").as("lcp_next")),

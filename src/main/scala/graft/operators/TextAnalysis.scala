@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Staging, Tables}
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -108,12 +108,6 @@ object TextAnalysis {
         FROM documents) p) s
       GROUP BY doc_id ORDER BY doc_id"""))
 
-  /** Same durable-staging materialization seam as DedupOps/MixOps/LmOps
-    * — needed here because the winnowing windows reference the gram
-    * array per element (the project-collapse inlining hazard). */
-  private def materialize(df: DataFrame, tag: String): DataFrame =
-    graft.Staging.materialize(df, tag, "spark.graft.corpus.stagingDir")
-
   private val WinK = 3 // tokens per gram
   private val WinW = 4 // gram hashes per winnowing window
 
@@ -133,7 +127,9 @@ object TextAnalysis {
   val q103Winnowing: QueryDef = QueryDef(
     "q103_winnowing",
     (s, dir) => {
-      val grams = materialize(docs(s, dir)
+      // materialized: the winnowing windows reference the gram array
+      // per element, and an inlined projection would rehash per use
+      val grams = Staging.materialize(docs(s, dir)
         .select(col("doc_id"), tokens(col("text")).as("w"))
         .filter(size(col("w")) >= WinK)
         .select(col("doc_id"), expr(
@@ -237,7 +233,7 @@ object TextAnalysis {
   /** The signal bundle over an arbitrary documents frame — q123's
     * body, reused by the q126 gate sweep. */
   def qualitySignalsOf(d: DataFrame): DataFrame = {
-      val toks = materialize(d
+      val toks = Staging.materialize(d
         .select(col("doc_id"), col("text"), col("n_chars"),
           tokens(col("text")).as("w")), "signals_tok")
       val nTok = size(col("w")).cast("double")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Staging, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,9 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object TokenizerOps {
 
-  private def materialize(df: DataFrame, tag: String): DataFrame =
-    graft.Staging.materialize(df, tag, "spark.graft.corpus.stagingDir")
-
   private val NMerges = 8
   // unroll depth of the q105 encode-fixpoint oracle: bounds word length
   // at FixRounds + 1 chars (see the q105 oracle comment; over-length
@@ -39,7 +36,7 @@ object TokenizerOps {
   /** (word, freq, syms) — the BPE training table: distinct corpus words
     * with frequencies, each word split into single-character symbols. */
   private def wordTable(d: DataFrame): DataFrame =
-    materialize(words(d)
+    Staging.materialize(words(d)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .withColumn("syms", split(col("word"), "")), "bpe_words")
 
@@ -101,7 +98,7 @@ object TokenizerOps {
       round += 1
       // the final round's rewrite is never read — skip the dead job
       if (round < n)
-        cur = materialize(cur.withColumn("syms", mergeFold(col("syms"), l, r)),
+        cur = Staging.materialize(cur.withColumn("syms", mergeFold(col("syms"), l, r)),
           s"bpe_round$round")
     }
     out.toSeq
@@ -230,7 +227,7 @@ object TokenizerOps {
     var remaining = 1L
     while (remaining > 0) {
       require(iter < 1000, s"BPE fixpoint did not converge in $iter rounds")
-      val withBest = materialize(
+      val withBest = Staging.materialize(
         cur.withColumn("best", bestMergeExpr(merges)), s"bpe_fix$iter")
       remaining = withBest.filter(col("best").isNotNull).count()
       cur = withBest

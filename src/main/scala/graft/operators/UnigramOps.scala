@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Staging, Tables}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -70,13 +70,10 @@ object UnigramOps {
   private val ProbFloor = 1e-12  // required single chars never hit 0
   private val QScale = 1e6       // posterior quantization (see scaladoc)
 
-  private def materialize(df: DataFrame, tag: String): DataFrame =
-    graft.Staging.materialize(df, tag, "spark.graft.corpus.stagingDir")
-
   /** (word, freq) — the distinct-word table, shared tokenization with
     * the LM/BPE tiers. */
   private def wordFreq(d: DataFrame): DataFrame =
-    materialize(LmOps.tokenizedOf(d)
+    Staging.materialize(LmOps.tokenizedOf(d)
       .select(explode(col("w")).as("word"))
       .filter(length(col("word")) >= 1)
       .groupBy(col("word")).agg(count(lit(1)).as("freq")), "ug_words")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Staging, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,9 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object WordPieceOps {
 
-  private def materialize(df: DataFrame, tag: String): DataFrame =
-    graft.Staging.materialize(df, tag, "spark.graft.corpus.stagingDir")
-
   private val NMerges = 8
   val Unk = "[UNK]"
 
@@ -46,14 +43,9 @@ object WordPieceOps {
 
   /** (word, freq, syms) — the WordPiece training table. */
   private def wordTable(d: DataFrame): DataFrame =
-    materialize(words(d)
+    Staging.materialize(words(d)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .withColumn("syms", wpSyms), "wp_words")
-
-  /** Strip the continuation marker from the right unit when merging:
-    * merged("a", "##b") = "ab"; merged("##a", "##b") = "##ab". */
-  private def mergedOf(l: Column, r: Column): Column =
-    concat(l, regexp_replace(r, "^##", ""))
 
   /** Learn `n` WordPiece merges. Each round, over the current symbol
     * arrays weighted by word frequency: count adjacent pairs AND unit
@@ -95,7 +87,7 @@ object WordPieceOps {
       out += ((l, r, merged, top(0).getAs[Double]("score")))
       round += 1
       if (round < n)
-        cur = materialize(cur.withColumn("syms",
+        cur = Staging.materialize(cur.withColumn("syms",
           TokenizerOps.mergeFoldColTo(col("syms"), lit(l), lit(r), lit(merged))),
           s"wp_round$round")
     }

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.Staging
 import graft.operators.{CorpusOps, MixOps}
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
@@ -145,9 +146,6 @@ object Curation {
       containmentDropped: Long = 0L,
       containmentGateVerdict: String = "off")
 
-  private def materialize(df: DataFrame, tag: String): DataFrame =
-    graft.Staging.materialize(df, tag, "spark.graft.corpus.stagingDir")
-
   /** Run the pipeline over a documents frame (`doc_id`, `text`, `lang`,
     * `source`). Returns the packed-bin table
     * (source, bin, n_docs, sum_tokens) and the per-stage summary.
@@ -169,7 +167,7 @@ object Curation {
     }
     // boilerplate frequencies on the RAW corpus (q87's rule: template
     // text counts even when its host doc fails other gates)
-    val grams = materialize(CorpusOps.fiveGramsOf(docs)
+    val grams = Staging.materialize(CorpusOps.fiveGramsOf(docs)
       .select(col("doc_id"), explode(col("shingles")).as("sh")), "grams")
     val frequent = grams.groupBy(col("sh"))
       .agg(count(lit(1)).as("n_docs"))
@@ -310,7 +308,7 @@ object Curation {
       .withColumn("is_nb_out", coalesce(col("is_nb_out"), lit(false)))
       .withColumn("is_sem_dup", coalesce(col("is_sem_dup"), lit(false)))
     val obs = Observation()
-    val clean = materialize(flagged
+    val clean = Staging.materialize(flagged
       .observe(obs,
         count(lit(1)).as("raw"),
         count(when(col("is_url_out"), true)).as("url_dropped"),
@@ -370,7 +368,7 @@ object Curation {
     val (deduped0, ndDropped, ndFamily, ndVerdicts) = cfg.nearDupFamily match {
       case None => (exactDeduped, 0L, "none", Seq.empty[(String, String, Double)])
       case Some(want) =>
-        val base = materialize(exactDeduped, "neardup_in")
+        val base = Staging.materialize(exactDeduped, "neardup_in")
         val (famOpt, verdicts) =
           if (want == "auto")
             graft.operators.DedupOps.selectDedupFamily(base, cfg.nearDupBudget)
@@ -383,7 +381,7 @@ object Curation {
           }
         famOpt match {
           case Some(f) =>
-            val dropIds = materialize(
+            val dropIds = Staging.materialize(
               graft.operators.DedupOps.nearDupPairsOf(base, f)
                 .select(col("doc_b").as("doc_id")).distinct(), "neardup_drop")
             (base.join(dropIds, Seq("doc_id"), "left_anti"),
@@ -404,14 +402,14 @@ object Curation {
       if (!cfg.containmentStage)
         (deduped0, 0L, "off")
       else {
-        val base = materialize(deduped0, "contain_in")
+        val base = Staging.materialize(deduped0, "contain_in")
         val r = graft.operators.DedupOps
           .preflightForDocs(base, "containment", cfg.containmentBudget,
             cfg.containmentTau)
           .collect().head
         val v = r.getAs[String]("verdict")
         if (v == "ok") {
-          val dropIds = materialize(
+          val dropIds = Staging.materialize(
             graft.operators.DedupOps.containmentPairsOf(base, cfg.containmentTau)
               .select(col("doc_small").as("doc_id")).distinct(), "contain_drop")
           (base.join(dropIds, Seq("doc_id"), "left_anti"), dropIds.count(), v)
@@ -426,11 +424,11 @@ object Curation {
       if (cfg.prototypePrune) {
         val emb = cfg.semanticEmbeddings.getOrElse(throw new IllegalArgumentException(
           "prototypePrune requires semanticEmbeddings"))
-        val survivors = materialize(dedupedC, "proto_in")
+        val survivors = Staging.materialize(dedupedC, "proto_in")
         val survEmb = emb.select(col("doc_id").as("vec_id"), col("embedding"))
           .join(survivors.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
         val (assigned, _) = graft.operators.ClusterOps.lloydOf(survEmb)
-        val dropIds = materialize(
+        val dropIds = Staging.materialize(
           graft.operators.ClusterOps.prototypeFlags(assigned, cfg.protoPruneDen)
             .filter(col("pruned"))
             .select(col("vec_id").as("doc_id")), "proto_drop")
@@ -451,7 +449,7 @@ object Curation {
           .select(col("source"), col("doc_id"), col("text_dedup").as("text"))
       else deduped
     val obsPack = Observation()
-    val bins = materialize(CorpusOps.packGreedy(
+    val bins = Staging.materialize(CorpusOps.packGreedy(
       packSource
         .select(col("source"), col("doc_id"),
           CorpusOps.nTokens(col("text")).as("n_tokens"))
@@ -584,7 +582,7 @@ object Curation {
     // within-batch canonical: min doc_id per content hash
     val keepIds = kept.groupBy(col("file_hash"))
       .agg(min(col("doc_id")).as("doc_id")).select(col("doc_id"))
-    val canon = materialize(
+    val canon = Staging.materialize(
       kept.join(keepIds, Seq("doc_id"), "left_semi"), "stream_canon")
     // cross-batch history: bloom prefilter + exact anti-join (q84)
     val nSeen = seenHashes.count()

@@ -79,24 +79,4 @@ object Extraction {
       acc.withColumn(spec.name,
         convert(call_function("llm_complete", prompt, lit(clientName)), spec.ftype))
     }
-
-  /** D17 single-pass: one completion returning `name: answer` lines for
-    * all specs, parsed into the same typed columns. The mock honors this
-    * by answering per-line; a real adapter returns JSON. */
-  def extractSinglePass(df: DataFrame, contextCol: String,
-      specs: Seq[PromptSpec], client: () => LLMClient): DataFrame = {
-    val completeFn = LLM.completeUdf(client)
-    val combined = specs.map(s => s"${s.name}: ${s.question}").mkString("\n")
-    // one fused call → one fused note block (each field's rules apply to
-    // the whole combined question, as the reference does per-prompt)
-    val withRaw = df.withColumn("__combined",
-      completeFn(LLM.assemblePrompt(combined, col(contextCol),
-        grammar = specs.flatMap(_.grammar).distinct)))
-    // the mock answers the FIRST matching rule; single-pass parsing is
-    // exercised end-to-end with the JSON-answering test client
-    specs.foldLeft(withRaw) { (acc, spec) =>
-      acc.withColumn(spec.name,
-        convert(get_json_object(col("__combined"), s"$$.${spec.name}"), spec.ftype))
-    }.drop("__combined")
-  }
 }

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.Staging
 import graft.sources.FileScan
 import graft.sinks.Sinks
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
@@ -35,15 +36,6 @@ object Workflow {
       reviewTtlSeconds: Long = 3600,
       resultCache: Option[graft.sinks.ResultCache] = None)
 
-  /** One durable materialization barrier (same contract as
-    * `DedupOps.materialize`): with `spark.graft.workflow.stagingDir` set,
-    * results stage to parquet — survives executor loss, and every
-    * downstream action is a plain parquet re-read; without it,
-    * `localCheckpoint` (executor memory/disk) — fine single-node, lost
-    * with an executor on a real cluster. */
-  private def materialize(df: DataFrame, tag: String): DataFrame =
-    graft.Staging.materialize(df, tag, "spark.graft.workflow.stagingDir")
-
   /** Execute a batch run end-to-end. Returns the summary the reference's
     * chord callback would assemble (workers/file_processing/tasks.py:1023-1090).
     *
@@ -67,7 +59,7 @@ object Workflow {
 
     val obsScan = Observation()
     val obsFresh = Observation()
-    val fresh = materialize(
+    val fresh = Staging.materialize(
       FileScan.dedupAgainstHistory(
           files.observe(obsScan, count(lit(1)).as("listed")), history)
         .withColumn("text", col("content").cast("string"))
@@ -75,7 +67,7 @@ object Workflow {
       "fresh")
 
     val obsExtract = Observation()
-    val extracted = materialize(
+    val extracted = Staging.materialize(
       Extraction.extract(fresh, "text", spec.prompts, client)
         .withColumn("error_message", lit(null).cast("string"))
         // content/text never outlive extraction: staging them would

@@ -11,7 +11,7 @@ class AnnOpsSpec extends SparkSpec {
     val inMemory = AnnOps.q56AnnIvf.fn(spark, sf).collect()
 
     val staging = java.nio.file.Files.createTempDirectory("graft-ivf").toString
-    spark.conf.set("spark.graft.ann.stagingDir", staging)
+    spark.conf.set(graft.Staging.Key, staging)
     try {
       val stagedDf = AnnOps.q56AnnIvf.fn(spark, sf)
       val staged = stagedDf.collect()
@@ -41,7 +41,7 @@ class AnnOpsSpec extends SparkSpec {
         s"no partition filter on cell: ${scan.partitionFilters}")
       assert(scan.selectedPartitions.partitionCount === 4, // NProbe of 16 cells
         s"scan read ${scan.selectedPartitions.partitionCount} partitions, wanted 4")
-    } finally spark.conf.unset("spark.graft.ann.stagingDir")
+    } finally spark.conf.unset(graft.Staging.Key)
   }
 
   test("multiProbeBuckets: own bucket first, flips ordered by ascending margin") {

@@ -3,7 +3,7 @@ package graft.operators
 import graft.SparkSpec
 
 /** Durable-staging switch for the dedup tier: with
-  * spark.graft.dedup.stagingDir set, the multi-pass hashed-shingle
+  * spark.graft.stagingDir set, the multi-pass hashed-shingle
   * table stages to parquet (fault-tolerant — lost executors recompute
   * from files) instead of localCheckpoint, and the LSH pipeline
   * produces identical pairs. */
@@ -13,27 +13,27 @@ class DedupStagingSpec extends SparkSpec {
     val dir = sf("sf0.001")
     val local = DedupOps.q51LshJaccardPairs.fn(spark, dir).collect().map(_.toString)
     val staging = java.nio.file.Files.createTempDirectory("graft-dedup-stage").toString
-    spark.conf.set("spark.graft.dedup.stagingDir", staging)
+    spark.conf.set(graft.Staging.Key, staging)
     try {
       val durable = DedupOps.q51LshJaccardPairs.fn(spark, dir).collect().map(_.toString)
       assert(durable.toSeq == local.toSeq)
       // the staged table actually landed on disk as parquet
       val staged = new java.io.File(staging).listFiles()
       assert(staged != null && staged.exists(_.getName.startsWith("hashed_")))
-    } finally spark.conf.unset("spark.graft.dedup.stagingDir")
+    } finally spark.conf.unset(graft.Staging.Key)
   }
 
   test("q95 semantic dedup is identical under corpus parquet staging") {
     val dir = sf("sf0.001")
     val local = MixOps.q95SemanticDedup.fn(spark, dir).collect().map(_.toString)
     val staging = java.nio.file.Files.createTempDirectory("graft-corpus-stage").toString
-    spark.conf.set("spark.graft.corpus.stagingDir", staging)
+    spark.conf.set(graft.Staging.Key, staging)
     try {
       val durable = MixOps.q95SemanticDedup.fn(spark, dir).collect().map(_.toString)
       assert(durable.toSeq == local.toSeq)
       val staged = new java.io.File(staging).listFiles()
       assert(staged != null && staged.exists(_.getName.startsWith("semdedup_assign_")))
-    } finally spark.conf.unset("spark.graft.corpus.stagingDir")
+    } finally spark.conf.unset(graft.Staging.Key)
   }
 
   test("q96 perplexity and q101 DSIR are identical under corpus parquet staging") {
@@ -41,7 +41,7 @@ class DedupStagingSpec extends SparkSpec {
     val localNll = LmOps.q96LmPerplexity.fn(spark, dir).collect().map(_.toString)
     val localDsir = LmOps.q101Dsir.fn(spark, dir).collect().map(_.toString)
     val staging = java.nio.file.Files.createTempDirectory("graft-lm-stage").toString
-    spark.conf.set("spark.graft.corpus.stagingDir", staging)
+    spark.conf.set(graft.Staging.Key, staging)
     try {
       assert(LmOps.q96LmPerplexity.fn(spark, dir).collect().map(_.toString).toSeq
         == localNll.toSeq)
@@ -50,13 +50,13 @@ class DedupStagingSpec extends SparkSpec {
       val staged = new java.io.File(staging).listFiles()
       assert(staged != null && staged.exists(_.getName.startsWith("lm_bigrams_")))
       assert(staged.exists(_.getName.startsWith("dsir_raw_")))
-    } finally spark.conf.unset("spark.graft.corpus.stagingDir")
+    } finally spark.conf.unset(graft.Staging.Key)
   }
 
   test("Staging.cleanup deletes every tracked staged directory, and only then") {
     val dir = sf("sf0.001")
     val staging = java.nio.file.Files.createTempDirectory("graft-cleanup").toString
-    spark.conf.set("spark.graft.corpus.stagingDir", staging)
+    spark.conf.set(graft.Staging.Key, staging)
     try {
       LmOps.q96LmPerplexity.fn(spark, dir).collect()
       val before = graft.Staging.stagedPaths.filter(_.startsWith(staging))
@@ -67,7 +67,7 @@ class DedupStagingSpec extends SparkSpec {
         "cleanup left staged directories behind")
       assert(graft.Staging.stagedPaths.intersect(before).isEmpty,
         "cleaned paths must leave the tracking set")
-    } finally spark.conf.unset("spark.graft.corpus.stagingDir")
+    } finally spark.conf.unset(graft.Staging.Key)
   }
 
   test("q90 pigeonhole banding finds EVERY pair within the Hamming bound (vs brute force)") {

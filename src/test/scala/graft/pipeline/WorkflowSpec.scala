@@ -164,7 +164,7 @@ class WorkflowSpec extends SparkSpec {
     val outDir = Files.createTempDirectory("graft-wfstage-out").toString + "/results"
     val histPath = Files.createTempDirectory("graft-wfstage-hist").toString + "/history"
     val staging = Files.createTempDirectory("graft-wfstage-stg").toString
-    spark.conf.set("spark.graft.workflow.stagingDir", staging)
+    spark.conf.set(graft.Staging.Key, staging)
     try {
       val spec = Workflow.WorkflowSpec(
         scan = FileScan.ScanConfig(srcDir.toString, glob = "*.txt"),
@@ -179,7 +179,7 @@ class WorkflowSpec extends SparkSpec {
         "extraction did not stage to the configured dir")
       val out = spark.read.json(outDir)
       assert(out.collect().head.getAs[Double]("n_batch") == 1.0)
-    } finally spark.conf.unset("spark.graft.workflow.stagingDir")
+    } finally spark.conf.unset(graft.Staging.Key)
   }
 }
 
