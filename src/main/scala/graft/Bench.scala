@@ -201,6 +201,9 @@ object Bench {
       java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.writeString(out, line + "\n")
     } catch { case NonFatal(e) => System.err.println(s"[bench] file write: $e") }
+    // durable staging (spark.graft.stagingDir) leaves its staged frames
+    // under the root; the run's outputs are written, so delete them
+    Staging.cleanup(spark)
     spark.stop()
     // Clip-proof trailer: the driver snapshots a bounded LOG TAIL, and
     // the full record above (219-query object, multi-KB single line)

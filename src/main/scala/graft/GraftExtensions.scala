@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.expressions.{DotProductFloat, L1Float, L2SqFloat, LLMComplete, SinglePassFusion}
+import graft.functions.expressions.{AsciiCaseRule, DotProductFloat, L1Float, L2SqFloat, LLMComplete, SinglePassFusion}
 import graft.plans.AsOfJoinStrategy
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -32,6 +32,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("llm_complete", "llm_complete(prompt, clientName) - LLM completion via a registered client"),
       (es: Seq[Expression]) => LLMComplete(es.head, es(1).eval(null).toString)))
     ext.injectOptimizerRule(_ => SinglePassFusion)
+    ext.injectOptimizerRule(_ => AsciiCaseRule)
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
   }
 }

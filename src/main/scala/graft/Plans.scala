@@ -57,6 +57,20 @@ object Plans {
       ("q51 LSH candidate join is a hash join on band keys, not a cartesian",
         { val p = planOf("q51_lsh_jaccard_pairs")
           !p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin") }),
+      // q51 materializes its hash and pair frames, so its final plan
+      // shows neither projection: pin the shingle and signature frames
+      ("q51 shingles and signatures are the word_shingles/minhash_sig kernels, no lambda",
+        { val sh = operators.DedupOps.shingledOf(Tables.loadParallel(spark, sfDir, "documents"), "tok")
+            .queryExecution.executedPlan.toString
+          val sig = operators.DedupOps.signatures(operators.DedupOps.hashedShingles(spark, sfDir))
+            .queryExecution.executedPlan.toString
+          sh.contains("word_shingles") && sig.contains("minhash_sig") &&
+            !sh.contains("lambdafunction") && !sig.contains("lambdafunction") }),
+      ("q92 contamination 5-grams come from the word_shingles kernel",
+        planOf("q92_decontaminate").contains("word_shingles")),
+      ("q200 novelty shingles come from the word_shingles kernel (before the q200_sh pin)",
+        operators.CorpusOps.fiveGrams(spark, sfDir).queryExecution.executedPlan.toString
+          .contains("word_shingles")),
       ("q54 blocked Jaccard join is equi on lang (no cross product)",
         !planOf("q54_ngram_jaccard").contains("CartesianProduct")),
       ("q68 LSH ANN probes via a broadcast bucket join + TakeOrdered",

@@ -388,6 +388,9 @@ object ScaleBench {
       java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.writeString(out, line + "\n")
     } catch { case e: Throwable => System.err.println(s"[scale] write: $e") }
+    // durable staging (spark.graft.stagingDir) leaves its staged frames
+    // under the root; the run's outputs are written, so delete them
+    Staging.cleanup(spark)
     spark.stop()
   }
 }

@@ -45,6 +45,10 @@ object Staging {
   def materialize(df: DataFrame, tag: String, confKey: String): DataFrame =
     materialize(df, tag)
 
+  /** Track a directory a caller wrote under the root itself (q56's
+    * partitioned IVF index), so [[cleanup]] deletes it too. */
+  private[graft] def track(path: String): Unit = staged.add(path)
+
   /** Paths staged (durable mode) by this process and not yet cleaned. */
   def stagedPaths: Set[String] = {
     import scala.jdk.CollectionConverters._

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated TPC-H-ish tables (see TESTDATA.md).
   *
@@ -15,7 +16,33 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") loadEvents(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else readParquet(spark, s"$dir/$name.parquet")
+
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long, Map[String, String]), StructType]()
+
+  /** `spark.read.parquet(path)`, inferring a single file's schema once.
+    * Inference is a Spark job (`mergeSchemasInParallel`) on every read,
+    * and every query re-reads the same table files: with the schema
+    * remembered, a re-read plans with `spark.read.schema(s)` and runs no
+    * job. The memo is keyed by the file's qualified path, length and
+    * modification time — a rewritten file is inferred afresh — and by
+    * the session's parquet read settings, which steer inference. A
+    * directory is read as before. */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val st = scala.util.Try(fs.getFileStatus(p)).toOption
+    st.filter(_.isFile) match {
+      case Some(f) =>
+        val settings = spark.conf.getAll.filter { case (k, _) =>
+          k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") }
+        val key = (fs.makeQualified(p).toString, f.getLen, f.getModificationTime, settings)
+        val schema = schemas.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
+        spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
 
   /** Load + round-robin repartition to the cluster's parallelism.
     *
@@ -42,7 +69,7 @@ object Tables {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = readParquet(spark, s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case LongType =>
         // integer division: a double intermediate (ts/1000) only carries 53

@@ -64,6 +64,9 @@ object Verify {
       .filter { case (k, _) => only.isEmpty || only(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // durable staging (spark.graft.stagingDir) leaves its staged frames
+    // under the root; the run's outputs are written, so delete them
+    Staging.cleanup(spark)
     spark.stop()
     if (failures > 0) sys.exit(1)
   }

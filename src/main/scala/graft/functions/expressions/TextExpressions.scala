@@ -108,7 +108,8 @@ object TextExpressions {
     * (the old form) silently skips later members in any session where
     * the first is already registered, and the missing function then
     * fails far from the cause (r14 ADVICE). Column access via
-    * `expr("nfc_norm(col)")` / `expr("prefix_lcp(a, b)")`. */
+    * `expr("nfc_norm(col)")` / `expr("prefix_lcp(a, b)")` /
+    * `expr("word_shingles(text, 3)")` / `expr("minhash_sig(hashes, 8)")`. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
@@ -116,5 +117,7 @@ object TextExpressions {
         reg.createOrReplaceTempFunction(name, builder, "scala_udf")
     ensure("nfc_norm", es => NfcNormalize(es.head))
     ensure("prefix_lcp", es => PrefixLcp(es.head, es(1)))
+    ensure("word_shingles", es => WordShingles(es.head, es(1)))
+    ensure("minhash_sig", es => MinHashSig(es.head, es(1)))
   }
 }

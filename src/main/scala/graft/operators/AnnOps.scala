@@ -122,6 +122,7 @@ object AnnOps {
           // staged path: partitionBy(cell) index + literal in-set probe →
           // the parquet scan prunes to nprobe of C cell directories
           val path = buildIvfIndex(e, centroids, s"$root/ivf_index")
+          Staging.track(path)
           val cents = centroids.collect().map(r =>
             (r.getLong(0), r.getSeq[Float](1).toArray))
           val q = e.filter(col("vec_id") === 0).select(col("embedding"))

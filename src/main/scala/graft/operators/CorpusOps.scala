@@ -27,34 +27,23 @@ object CorpusOps {
   // q81: boilerplate via corpus-frequent n-grams (C4 §2.2 analog)
   // ---------------------------------------------------------------
 
-  /** Distinct 5-word shingles per doc (the whole text when shorter).
-    * Tokens are materialized first: project collapse would otherwise
-    * inline the split into every element_at in the lambda body — one
-    * regex split per gram element instead of one per row (measured
-    * 15.6 s → 1.6 s for the explode at sf0.1; same fix as
-    * DedupOps.shingled). */
+  /** Distinct 5-word shingles per doc (the whole text when shorter). */
   private[graft] def fiveGrams(s: SparkSession, dir: String): DataFrame =
     fiveGramsOf(docs(s, dir))
 
   /** Same, over an arbitrary documents frame (the library-API entry,
-    * used by pipeline/Curation).
+    * used by pipeline/Curation), from the `word_shingles` kernel.
     *
-    * No tokenize checkpoint (same structural fix as DedupOps.shingled):
-    * the token array is bound as a LAMBDA VARIABLE (a transform over a
-    * singleton array), so the split executes once per row and project
-    * collapse cannot inline it into the per-element references — the
-    * r9 re-split hazard is impossible by construction, without a serial
-    * materialization barrier. Multi-consumer callers (q81/q87/q122/
-    * Curation) materialize their own exploded gram frame; single-pass
-    * callers save the checkpoint job outright. */
-  private[graft] def fiveGramsOf(d: DataFrame): DataFrame =
-    d.select(col("doc_id"), expr(
-      """element_at(transform(array(split(trim(text), '\\s+')), w ->
-        |  case when size(w) >= 5
-        |    then array_distinct(transform(sequence(1, size(w) - 4),
-        |      i -> concat_ws(' ', element_at(w, i), element_at(w, i + 1),
-        |        element_at(w, i + 2), element_at(w, i + 3), element_at(w, i + 4))))
-        |    else array(trim(text)) end), 1)""".stripMargin).as("shingles"))
+    * No tokenize checkpoint: the kernel splits each row's text once and
+    * builds every gram from that split, so project collapse has no
+    * token array to inline into per-gram references (the re-split per
+    * element cost 15.6 s against 1.6 s for the sf0.1 explode).
+    * Multi-consumer callers (q81/q87/q122/Curation) materialize their
+    * own exploded gram frame; single-pass callers run no checkpoint. */
+  private[graft] def fiveGramsOf(d: DataFrame): DataFrame = {
+    graft.functions.expressions.TextExpressions.register(d.sparkSession)
+    d.select(col("doc_id"), expr("word_shingles(text, 5)").as("shingles"))
+  }
 
   /** C4-style boilerplate detection: a 5-gram present in >= 3 distinct
     * documents is template text; a document is boilerplate when at

@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   * near-dup. Exact dedup is SourceOps.q22 (sha256 groupBy).
   *
   * Scale design (100 TB):
-  *  - signatures are computed in a narrow map stage (higher-order
-  *    functions over the token array — no UDF, no shuffle of text);
+  *  - signatures are computed in a narrow map stage (the codegen'd
+  *    `word_shingles` and `minhash_sig` kernels — no UDF, no shuffle of
+  *    text);
   *  - the ONLY shuffle is the LSH band join, keyed on (band_id,
   *    band_key) — candidates are a tiny fraction of the corpus, so the
   *    expensive exact-Jaccard verify runs on pairs, never on the
@@ -29,27 +30,18 @@ object DedupOps {
     Tables.loadParallel(s, dir, "documents")
 
   /** doc_id + distinct 3-word shingle set (tiny docs fall back to the
-    * whole text as one shingle).
+    * whole text as one shingle), from the `word_shingles` kernel.
     *
-    * No tokenize checkpoint: the r9 inlining hazard (project collapse
-    * re-running the regex split per element_at in the lambda — measured
-    * 15.3 s → 1.7 s for the hash pass at sf0.1 when a barrier was
-    * added) is avoided STRUCTURALLY instead of with a serial
-    * materialization barrier: the token array is bound as a LAMBDA
-    * VARIABLE (a transform over a singleton array), so the split
-    * executes once per row and project collapse cannot inline it into
-    * the per-element references. Every downstream family materializes
-    * its own hashed frame, so dropping the tokenize checkpoint removes
-    * one full serial job from every dedup query without losing any
-    * reuse. The `tag` is kept for call-shape compatibility (unused). */
-  private def shingledOf(d: DataFrame, tag: String): DataFrame =
-    d.select(col("doc_id"), expr(
-      """element_at(transform(array(split(trim(text), '\\s+')), w ->
-        |  case when size(w) >= 3
-        |    then array_distinct(transform(sequence(1, size(w) - 2),
-        |      i -> concat_ws(' ', element_at(w, i), element_at(w, i + 1),
-        |        element_at(w, i + 2))))
-        |    else array(trim(text)) end), 1)""".stripMargin).as("shingles"))
+    * No tokenize checkpoint: the kernel splits each row's text once and
+    * builds every gram from that split, so project collapse has no
+    * token array to inline into per-gram references (the re-split per
+    * element cost 15.3 s against 1.7 s for the sf0.1 hash pass). Every
+    * downstream family materializes its own hashed frame. The `tag` is
+    * kept for call-shape compatibility (unused). */
+  private[graft] def shingledOf(d: DataFrame, tag: String): DataFrame = {
+    graft.functions.expressions.TextExpressions.register(d.sparkSession)
+    d.select(col("doc_id"), expr("word_shingles(text, 3)").as("shingles"))
+  }
 
   private def shingled(s: SparkSession, dir: String): DataFrame =
     shingledOf(docs(s, dir), "tok")
@@ -80,10 +72,10 @@ object DedupOps {
     // reuse this 4×; without it Spark recomputes the hash pass per use
     hashedOf(shingled(s, dir), "hashed")
 
-  private def signatures(hashed: DataFrame): DataFrame =
-    hashed.withColumn("sig", expr(
-      s"""transform(sequence(0, ${K - 1}),
-         |  k -> array_min(transform(hashes, h -> substr(h, k * 8 + 1, 8))))""".stripMargin))
+  private[graft] def signatures(hashed: DataFrame): DataFrame = {
+    graft.functions.expressions.TextExpressions.register(hashed.sparkSession)
+    hashed.withColumn("sig", expr(s"minhash_sig(hashes, $K)"))
+  }
 
   private val hashSqlCte =
     """hs AS (SELECT doc_id, list_transform(shingles, s -> sha256(s)) AS hashes FROM sh)"""
@@ -113,10 +105,15 @@ object DedupOps {
     * q131's calibration audit. */
   private def bandsOf(sig: DataFrame): DataFrame =
     sig.select(col("doc_id"),
-        explode(expr(s"""transform(sequence(0, ${Bands - 1}),
-          b -> struct(b as band_id,
-            concat(element_at(sig, 2 * b + 1), '|', element_at(sig, 2 * b + 2)) as band_key))""")).as("bd"))
+        explode(unrolled(Bands, b => s"""struct($b as band_id,
+            concat(element_at(sig, 2 * $b + 1), '|', element_at(sig, 2 * $b + 2)) as band_key)""")).as("bd"))
       .select(col("doc_id"), col("bd.band_id"), col("bd.band_key"))
+
+  /** `array(f(0), …, f(n - 1))`: a fixed-length per-row array as one
+    * generated projection, where a `transform` lambda over
+    * `sequence(0, n - 1)` would run interpreted per element. */
+  private def unrolled(n: Int, f: Int => String): Column =
+    expr((0 until n).map(f).mkString("array(", ", ", ")"))
 
   private def lshCandidatePairs(sig: DataFrame): DataFrame = {
     val bands = bandsOf(sig)
@@ -700,10 +697,10 @@ object DedupOps {
     * block (block_id·256 + the block's 8 bits). */
   private def simhashBlocks(sig: DataFrame): DataFrame =
     sig.select(col("doc_id"), col("sig_hi"), col("sig_lo"),
-      explode(expr(
-        """transform(sequence(0, 7), b -> int(b * 256) + int(
-          |  shiftright(if(b < 4, sig_hi, sig_lo),
-          |             cast(24 - 8 * (b % 4) as int)) & 255))""".stripMargin)).as("bk"))
+      explode(unrolled(8, b =>
+        s"""int($b * 256) + int(
+           |  shiftright(if($b < 4, sig_hi, sig_lo),
+           |             cast(24 - 8 * ($b % 4) as int)) & 255)""".stripMargin)).as("bk"))
 
   /** Unsorted SimHash near-dup pair frame — the form every in-engine
     * consumer (q91/q112/q134/q205, triplet mining) composes on; q90
@@ -1004,10 +1001,10 @@ object DedupOps {
     * int per block (block_id·2¹⁶ + the block's 16 bits). */
   private def simhash128Blocks(sig: DataFrame): DataFrame =
     sig.select(col("doc_id"), col("s0"), col("s1"), col("s2"), col("s3"),
-      explode(expr(
-        """transform(sequence(0, 7), b -> int(b * 65536) + int(
-          |  shiftright(element_at(array(s0, s1, s2, s3), int(b div 2) + 1),
-          |             if(b % 2 = 0, 16, 0)) & 65535))""".stripMargin)).as("bk"))
+      explode(unrolled(8, b =>
+        s"""int($b * 65536) + int(
+           |  shiftright(element_at(array(s0, s1, s2, s3), int($b div 2) + 1),
+           |             if($b % 2 = 0, 16, 0)) & 65535)""".stripMargin)).as("bk"))
 
   /** 128-bit SimHash near-dup pairs: q90's shape with 16-bit block
     * keys. Same gate discipline (its own pre-flight family). */
