@@ -1,17 +1,12 @@
 package graft
 
 import graft.pipeline._
-import org.apache.spark.sql.SparkSession
 
 /** Demo main: the extraction-pipeline surface end-to-end with the mock
   * LLM on the sf0.001 documents — `sbt "runMain graft.Demo"`. */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftExtensions.session("graft-demo", 4)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Plan auditor: dumps `.explain("formatted")` for every headline query
@@ -11,14 +10,7 @@ import java.nio.file.{Files, Paths}
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-plans")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftExtensions.session("graft-plans", 8)
     spark.sparkContext.setLogLevel("ERROR")
 
     val sb = new StringBuilder
@@ -60,7 +52,7 @@ object Plans {
       // q51 materializes its hash and pair frames, so its final plan
       // shows neither projection: pin the shingle and signature frames
       ("q51 shingles and signatures are the word_shingles/minhash_sig kernels, no lambda",
-        { val sh = operators.DedupOps.shingledOf(Tables.loadParallel(spark, sfDir, "documents"), "tok")
+        { val sh = operators.DedupOps.shingledOf(Tables.loadParallel(spark, sfDir, "documents"))
             .queryExecution.executedPlan.toString
           val sig = operators.DedupOps.signatures(operators.DedupOps.hashedShingles(spark, sfDir))
             .queryExecution.executedPlan.toString

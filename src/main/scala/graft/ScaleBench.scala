@@ -148,23 +148,15 @@ object ScaleBench {
         if (includeN2) defaults else defaults.filterNot(_ == "q130_knn_graph")
       }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the production posture: every banded-dedup query reads its
-      // family's q239 gate before paying for the band join, so a
-      // content- or family-saturated scale point records a refusal
-      // (DNF-by-gate, with the [scale] preflight line giving the
-      // projected density) instead of an hour of thrash — exactly
-      // what a 100 TB operator would do.
-      .config("spark.graft.dedup.preflight", "true")
-      .getOrCreate()
+    val spark = GraftExtensions.session("graft-scale-bench", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
+    // the production posture: every banded-dedup query reads its
+    // family's q239 gate before paying for the band join, so a
+    // content- or family-saturated scale point records a refusal
+    // (DNF-by-gate, with the [scale] preflight line giving the
+    // projected density) instead of an hour of thrash — exactly
+    // what a 100 TB operator would do.
+    spark.conf.set("spark.graft.dedup.preflight", "true")
 
     // Third decade opt-in via SPARK_GRAFT_SCALES=x1,x10,x100 — the
     // default stays the cheap pair so iterating stays fast. At x100
@@ -222,7 +214,6 @@ object ScaleBench {
     // cell count scaled to hold ~125 vectors per cell, nprobe=4 — the
     // configuration whose candidate fan-out stays linear in N.
     def knnIvf(dir: String): DataFrame = {
-      graft.functions.expressions.VectorExpressions.register(spark)
       val e = Tables.load(spark, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val c = math.max(16L, e.count() / 125L)
@@ -236,7 +227,6 @@ object ScaleBench {
     // O(√N), vs the flat build's N×C assignment that the x100 decade
     // measured at exponent 1.13.
     def knnIvf2(dir: String): DataFrame = {
-      graft.functions.expressions.VectorExpressions.register(spark)
       val e = Tables.load(spark, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       // sizing + centroid pick delegated to the production path so this
@@ -255,7 +245,6 @@ object ScaleBench {
     // pick to q243 (nesting spec-checked); the series prices the
     // sizing delta alone.
     def knnBal(dir: String): DataFrame = {
-      graft.functions.expressions.VectorExpressions.register(spark)
       val e = Tables.load(spark, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val (centroids, cc) = operators.AnnOps.balancedSizing(e)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
 /** Profiling harness (dev-only, kept in-tree so perf work is
@@ -53,15 +52,7 @@ object Scratch {
     // core-count knob (r17): the q107 flatness attribution needs the
     // SAME stage tap at two core counts — mirrors the Bench contract
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scratch")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftExtensions.session("graft-scratch", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // extra runtime confs for diagnostics sessions, e.g.
     // SPARK_GRAFT_CONFS=spark.sql.adaptive.enabled=false,spark.graft.stagingDir=/tmp/stage

@@ -10,7 +10,7 @@ import org.apache.spark.sql.DataFrame
   * Set to a parquet-capable root: write-then-read a staged table under
   * it, so any lost task recomputes from the staged files — the
   * configuration a 100 TB run uses (SCALE.md). Every tier stages under
-  * the same root; the tag names the directory.
+  * the same root, each write in its own [[stagePath]] directory.
   *
   * Cleanup: staged directories are tracked, and the frames returned
   * read from them, so none is deleted per call (callers such as
@@ -24,18 +24,27 @@ object Staging {
 
   private val staged = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** `df`, computed once: staged under `<root>/<tag>_<id>` when [[Key]]
-    * is set, else `df.localCheckpoint()`. Eager either way. */
+  /** `df`, computed once: written to a fresh [[stagePath]] directory
+    * and read back when [[Key]] is set, else `df.localCheckpoint()`.
+    * Eager either way. */
   def materialize(df: DataFrame, tag: String): DataFrame = {
     val s = df.sparkSession
     s.conf.getOption(Key) match {
       case Some(root) =>
-        val path = s"$root/${tag}_${java.util.UUID.randomUUID().toString.take(8)}"
+        val path = stagePath(root, tag)
         df.write.mode("overwrite").parquet(path)
-        staged.add(path)
         s.read.parquet(path)
       case None => df.localCheckpoint()
     }
+  }
+
+  /** A fresh, tracked directory `<root>/<tag>_<id>` under the staging
+    * root: the one naming rule for everything written there, so runs
+    * and call sites sharing a root never write over each other. */
+  private[graft] def stagePath(root: String, tag: String): String = {
+    val path = s"$root/${tag}_${java.util.UUID.randomUUID().toString.take(8)}"
+    staged.add(path)
+    path
   }
 
   /** Kept only for the benchmark's traced copy of `Workflow.run`
@@ -44,10 +53,6 @@ object Staging {
   @deprecated("the key is ignored; call materialize(df, tag)", "0.1.0")
   def materialize(df: DataFrame, tag: String, confKey: String): DataFrame =
     materialize(df, tag)
-
-  /** Track a directory a caller wrote under the root itself (q56's
-    * partitioned IVF index), so [[cleanup]] deletes it too. */
-  private[graft] def track(path: String): Unit = staged.add(path)
 
   /** Paths staged (durable mode) by this process and not yet cleaned. */
   def stagedPaths: Set[String] = {

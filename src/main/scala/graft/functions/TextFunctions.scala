@@ -44,6 +44,14 @@ object TextFunctions {
   def globMatch(c: Column, glob: String): Column =
     lower(c).rlike(globToRegex(glob.toLowerCase))
 
+  /** [[globMatch]] for names listed on the driver: every remote
+    * connector filters its listing with it, so a glob keeps the same
+    * names whichever backend lists them. */
+  def globMatcher(glob: String): String => Boolean = {
+    val re = java.util.regex.Pattern.compile(globToRegex(glob.toLowerCase))
+    name => re.matcher(name.toLowerCase).matches()
+  }
+
   /** NA → null sanitize (P5; legacy_executor.py:1297-1325): the literal
     * strings "NA"/"na" (after trim) become SQL NULL. */
   def naSanitize(c: Column): Column =

@@ -162,24 +162,16 @@ object BottomKAgg {
     StructField("h", StringType, nullable = false),
     StructField("v", LongType, nullable = false)))
 
-  /** SQL registration: `bottomk_sample(hash, value)` → ARRAY<BIGINT>
-    * of ≤ K payloads, value-ascending; `bottomk_pairs(hash, value)` →
-    * ARRAY<STRUCT<h,v>> of the kept entries hash-ascending (the
-    * sketch STATE, for cross-batch folding). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    def reg(name: String, pairsMode: Boolean): Unit =
-      if (!spark.sessionState.functionRegistry.functionExists(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          name, {
-            case Seq(h, v) =>
-              BottomKAgg(h, v, pairs = pairsMode).toAggregateExpression()
-            case _ => throw new org.apache.spark.sql.AnalysisException(
-              errorClass = "USER_RAISED_EXCEPTION",
-              messageParameters = Map("errorMessage" ->
-                s"$name takes exactly two arguments (hash, value)"))
-          }, "scala_udf")
-    reg("bottomk_sample", pairsMode = false)
-    reg("bottomk_pairs", pairsMode = true)
+  /** The SQL builders ([[graft.GraftExtensions]]):
+    * `bottomk_sample(hash, value)` → ARRAY<BIGINT> of ≤ K payloads,
+    * value-ascending; `bottomk_pairs(hash, value)` → ARRAY<STRUCT<h,v>>
+    * of the kept entries hash-ascending (the sketch STATE, for
+    * cross-batch folding). */
+  def build(name: String, pairs: Boolean)(es: Seq[Expression]): Expression = es match {
+    case Seq(h, v) => BottomKAgg(h, v, pairs = pairs).toAggregateExpression()
+    case _ => throw new org.apache.spark.sql.AnalysisException(
+      errorClass = "USER_RAISED_EXCEPTION",
+      messageParameters = Map("errorMessage" ->
+        s"$name takes exactly two arguments (hash, value)"))
   }
 }

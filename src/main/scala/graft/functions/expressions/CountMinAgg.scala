@@ -125,31 +125,27 @@ object CountMinAgg {
       s"(instr('0123456789abcdef', substr($hashSql, 4 * ($rowSql) + $i, 1)) - 1) * ${1 << (4 * (4 - i))}"
     }.mkString("(", " + ", s") % $width")
 
-  /** SQL registration: `cms_sketch(token)` (4×256) or
-    * `cms_sketch(token, depth, width)` with literal INTs. Non-literal
-    * shape parameters are an analysis error — silently defaulting
-    * would change the e·N/w bound without a word (the MisraGriesAgg
-    * registration rule). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("cms_sketch")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "cms_sketch", { es =>
-          def lit(e: Expression, what: String): Int = e match {
-            case Literal(v, IntegerType) => v.asInstanceOf[Int]
-            case other => throw new org.apache.spark.sql.AnalysisException(
-              errorClass = "USER_RAISED_EXCEPTION",
-              messageParameters = Map("errorMessage" ->
-                (s"cms_sketch $what must be a literal INT, got: " + other.sql)))
-          }
-          es match {
-            case Seq(c) => CountMinAgg(c).toAggregateExpression()
-            case Seq(c, d, w) =>
-              CountMinAgg(c, lit(d, "depth"), lit(w, "width")).toAggregateExpression()
-            case _ => throw new org.apache.spark.sql.AnalysisException(
-              errorClass = "USER_RAISED_EXCEPTION",
-              messageParameters = Map("errorMessage" ->
-                "cms_sketch takes (token) or (token, depth, width)"))
-          }
-        }, "scala_udf")
+  /** The `cms_sketch` SQL builder ([[graft.GraftExtensions]]):
+    * `cms_sketch(token)` (4×256) or `cms_sketch(token, depth, width)`
+    * with literal INTs. Non-literal shape parameters are an analysis
+    * error — silently defaulting would change the e·N/w bound without a
+    * word (the MisraGriesAgg rule). */
+  def build(es: Seq[Expression]): Expression = {
+    def lit(e: Expression, what: String): Int = e match {
+      case Literal(v, IntegerType) => v.asInstanceOf[Int]
+      case other => throw new org.apache.spark.sql.AnalysisException(
+        errorClass = "USER_RAISED_EXCEPTION",
+        messageParameters = Map("errorMessage" ->
+          (s"cms_sketch $what must be a literal INT, got: " + other.sql)))
+    }
+    es match {
+      case Seq(c) => CountMinAgg(c).toAggregateExpression()
+      case Seq(c, d, w) =>
+        CountMinAgg(c, lit(d, "depth"), lit(w, "width")).toAggregateExpression()
+      case _ => throw new org.apache.spark.sql.AnalysisException(
+        errorClass = "USER_RAISED_EXCEPTION",
+        messageParameters = Map("errorMessage" ->
+          "cms_sketch takes (token) or (token, depth, width)"))
+    }
+  }
 }

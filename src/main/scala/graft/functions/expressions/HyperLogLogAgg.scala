@@ -137,17 +137,13 @@ object HyperLogLogAgg {
     s"(CASE $arms ELSE ${Suffix + 1} END)"
   }
 
-  /** SQL registration: `hll_sketch(token)` → ARRAY<INT> of 256
-    * registers. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("hll_sketch")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "hll_sketch", {
-          case Seq(c) => HyperLogLogAgg(c).toAggregateExpression()
-          case _ => throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "USER_RAISED_EXCEPTION",
-            messageParameters = Map("errorMessage" ->
-              "hll_sketch takes exactly one argument"))
-        }, "scala_udf")
+  /** The `hll_sketch(token)` SQL builder ([[graft.GraftExtensions]]):
+    * ARRAY<INT> of 256 registers. */
+  def build(es: Seq[Expression]): Expression = es match {
+    case Seq(c) => HyperLogLogAgg(c).toAggregateExpression()
+    case _ => throw new org.apache.spark.sql.AnalysisException(
+      errorClass = "USER_RAISED_EXCEPTION",
+      messageParameters = Map("errorMessage" ->
+        "hll_sketch takes exactly one argument"))
+  }
 }

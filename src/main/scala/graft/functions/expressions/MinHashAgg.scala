@@ -66,12 +66,3 @@ case class MinHashAgg(
   override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression = copy(child = cs.head)
   override def prettyName: String = "minhash_agg"
 }
-
-object MinHashAgg {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    // idempotent: avoid the per-call replaced-function WARN
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_agg")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "minhash_agg", es => MinHashAgg(es.head).toAggregateExpression(), "scala_udf")
-}

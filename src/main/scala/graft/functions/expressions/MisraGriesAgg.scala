@@ -143,27 +143,24 @@ object MisraGriesAgg {
     } else m.toMap
   }
 
-  /** SQL registration: `misra_gries(token)` (k = 64) or
-    * `misra_gries(token, k)` with a literal INT capacity. Anything
-    * else for k is an analysis error — silently falling back to 64
-    * would change the N/(k+1) error bound without a word. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("misra_gries")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "misra_gries", { es =>
-          val k = es match {
-            case Seq(_) => 64
-            case Seq(_, Literal(v, IntegerType)) => v.asInstanceOf[Int]
-            case Seq(_, other) => throw new org.apache.spark.sql.AnalysisException(
-              errorClass = "USER_RAISED_EXCEPTION",
-              messageParameters = Map("errorMessage" ->
-                ("misra_gries capacity must be a literal INT, got: " + other.sql)))
-            case _ => throw new org.apache.spark.sql.AnalysisException(
-              errorClass = "USER_RAISED_EXCEPTION",
-              messageParameters = Map("errorMessage" ->
-                "misra_gries takes (token) or (token, k literal INT)"))
-          }
-          MisraGriesAgg(es.head, k).toAggregateExpression()
-        }, "scala_udf")
+  /** The `misra_gries` SQL builder ([[graft.GraftExtensions]]):
+    * `misra_gries(token)` (k = 64) or `misra_gries(token, k)` with a
+    * literal INT capacity. Anything else for k is an analysis error —
+    * silently falling back to 64 would change the N/(k+1) error bound
+    * without a word. */
+  def build(es: Seq[Expression]): Expression = {
+    val k = es match {
+      case Seq(_) => 64
+      case Seq(_, Literal(v, IntegerType)) => v.asInstanceOf[Int]
+      case Seq(_, other) => throw new org.apache.spark.sql.AnalysisException(
+        errorClass = "USER_RAISED_EXCEPTION",
+        messageParameters = Map("errorMessage" ->
+          ("misra_gries capacity must be a literal INT, got: " + other.sql)))
+      case _ => throw new org.apache.spark.sql.AnalysisException(
+        errorClass = "USER_RAISED_EXCEPTION",
+        messageParameters = Map("errorMessage" ->
+          "misra_gries takes (token) or (token, k literal INT)"))
+    }
+    MisraGriesAgg(es.head, k).toAggregateExpression()
+  }
 }

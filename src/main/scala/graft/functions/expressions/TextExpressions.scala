@@ -14,7 +14,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * the scan (a Scala UDF here would break the codegen span and pay
   * serialization per row). Delegates to `java.text.Normalizer`
   * (ICU-equivalent for NFC), matching DuckDB's `nfc_normalize` so the
-  * oracle compares the same canonical form. */
+  * oracle compares the same canonical form.
+  *
+  * This file's expressions are SQL functions registered by
+  * [[graft.GraftExtensions]]; Column code reaches them by name, e.g.
+  * `expr("nfc_norm(col)")` or `expr("prefix_lcp(a, b)")` (the classic
+  * Column(Expression) constructors are private[sql] in Spark 4). */
 case class NfcNormalize(child: Expression) extends UnaryExpression {
   override def dataType: DataType = StringType
 
@@ -100,24 +105,4 @@ case class PrefixLcp(left: Expression, right: Expression) extends BinaryExpressi
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(l, r)
   override def prettyName: String = "prefix_lcp"
-}
-
-object TextExpressions {
-  /** Idempotent SQL registration of the text-expression family, guarded
-    * PER FUNCTION: keying every member on the first name's existence
-    * (the old form) silently skips later members in any session where
-    * the first is already registered, and the missing function then
-    * fails far from the cause (r14 ADVICE). Column access via
-    * `expr("nfc_norm(col)")` / `expr("prefix_lcp(a, b)")` /
-    * `expr("word_shingles(text, 3)")` / `expr("minhash_sig(hashes, 8)")`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def ensure(name: String, builder: Seq[Expression] => Expression): Unit =
-      if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "scala_udf")
-    ensure("nfc_norm", es => NfcNormalize(es.head))
-    ensure("prefix_lcp", es => PrefixLcp(es.head, es(1)))
-    ensure("word_shingles", es => WordShingles(es.head, es(1)))
-    ensure("minhash_sig", es => MinHashSig(es.head, es(1)))
-  }
 }

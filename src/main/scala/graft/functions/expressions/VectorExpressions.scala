@@ -16,6 +16,11 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * plumbing — while computing the SAME double-precision sequential fold
   * (each float widened exactly to double), so results are bit-identical
   * with the reference formulation and the DuckDB oracle.
+  *
+  * [[graft.GraftExtensions]] registers them as `dot_product_f`,
+  * `l2_sq_f` and `l1_f`; Column code reaches them by name, e.g.
+  * `expr("dot_product_f(a, b)")` (the classic Column(Expression)
+  * constructors are private[sql] in Spark 4).
   */
 abstract class FloatVectorFold extends BinaryExpression {
   // inputs are produced by the engine (ARRAY<FLOAT> embedding columns);
@@ -84,22 +89,4 @@ case class L1Float(left: Expression, right: Expression) extends FloatVectorFold 
   override protected def combineCode: String = "java.lang.Math.abs(va - vb)"
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
   override def prettyName: String = "l1_f"
-}
-
-object VectorExpressions {
-
-  /** Register as SQL functions; Column access goes through
-    * `expr("dot_product_f(a, b)")` after registration (the classic
-    * Column(Expression) constructors are private[sql] in Spark 4). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    // idempotent: re-registering an existing function logs a WARN per
-    // call, which drowns real warnings when every QueryDef registers
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier("dot_product_f")
-    if (!reg.functionExists(ident)) {
-      reg.createOrReplaceTempFunction("dot_product_f", es => DotProductFloat(es.head, es(1)), "scala_udf")
-      reg.createOrReplaceTempFunction("l2_sq_f", es => L2SqFloat(es.head, es(1)), "scala_udf")
-      reg.createOrReplaceTempFunction("l1_f", es => L1Float(es.head, es(1)), "scala_udf")
-    }
-  }
 }

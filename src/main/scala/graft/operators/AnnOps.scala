@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.{QueryDef, Staging, Tables}
-import graft.functions.expressions.VectorExpressions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -110,7 +109,6 @@ object AnnOps {
   val q56AnnIvf: QueryDef = QueryDef(
     "q56_ann_ivf",
     (s, dir) => {
-      VectorExpressions.register(s)
       val e = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val centroids = e.filter(col("vec_id") < C)
@@ -121,8 +119,7 @@ object AnnOps {
         case Some(root) =>
           // staged path: partitionBy(cell) index + literal in-set probe →
           // the parquet scan prunes to nprobe of C cell directories
-          val path = buildIvfIndex(e, centroids, s"$root/ivf_index")
-          Staging.track(path)
+          val path = buildIvfIndex(e, centroids, Staging.stagePath(root, "ivf_index"))
           val cents = centroids.collect().map(r =>
             (r.getLong(0), r.getSeq[Float](1).toArray))
           val q = e.filter(col("vec_id") === 0).select(col("embedding"))
@@ -196,7 +193,6 @@ object AnnOps {
   val q68AnnLsh: QueryDef = QueryDef(
     "q68_ann_lsh",
     (s, dir) => {
-      VectorExpressions.register(s)
       val e = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
         .withColumn("bucket", expr(bucketExprSql()))
@@ -231,7 +227,6 @@ object AnnOps {
   val q79AnnLshMultiprobe: QueryDef = QueryDef(
     "q79_ann_lsh_multiprobe",
     (s, dir) => {
-      VectorExpressions.register(s)
       val e = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
         .withColumn("bucket", expr(bucketExprSql()))
@@ -386,7 +381,6 @@ object AnnOps {
     * cluster stages once and amortizes over every query. Bench times
     * it separately from [[pqProbe]] (the q100/q117 split). */
   def pqIndex(s: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(s)
     pqCodes(Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding")))
   }
@@ -395,7 +389,6 @@ object AnnOps {
     * every code row (narrow map over a broadcast literal M×K table),
     * TakeOrdered shortlist, exact re-rank of the 50 candidates only. */
   def pqProbe(s: SparkSession, dir: String, index: DataFrame): DataFrame = {
-    VectorExpressions.register(s)
     val e = Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     // stage 1 — ADC: sum of M lookups in subspace order (narrow map),
@@ -465,7 +458,6 @@ object AnnOps {
     * query; Bench times it separately from [[ivfpqProbe]] so the
     * per-query number is the probe, not the build. */
   def ivfpqIndex(s: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(s)
     val e = Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val centroids = e.filter(col("vec_id") < C)
@@ -479,7 +471,6 @@ object AnnOps {
     * exact-re-rank the shortlist. Query-time work only: the centroid
     * table and the query's ADC distance table are driver-sized. */
   def ivfpqProbe(s: SparkSession, dir: String, index: DataFrame): DataFrame = {
-    VectorExpressions.register(s)
     val e = Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val centroids = e.filter(col("vec_id") < C)
@@ -588,7 +579,6 @@ object AnnOps {
     * driver-sized dequant constants (mn[j], scale[j]) — together the
     * staged artifact queries run against. */
   def sq8Index(s: SparkSession, dir: String): (DataFrame, Seq[Double], Seq[Double]) = {
-    VectorExpressions.register(s)
     val e = Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
 
@@ -619,7 +609,6 @@ object AnnOps {
     * re-rank of the shortlist only. */
   def sq8Probe(s: SparkSession, dir: String, codes: DataFrame,
       mnArr: Seq[Double], scArr: Seq[Double]): DataFrame = {
-    VectorExpressions.register(s)
     val e = Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val qArr = sqDims(e.filter(col("vec_id") === 0)).orderBy(col("j"))
@@ -985,7 +974,6 @@ object AnnOps {
   val q243KnnGraphProd: QueryDef = QueryDef(
     "q243_knn_graph_prod",
     (s, dir) => {
-      VectorExpressions.register(s)
       val e = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val (centroids, cc) = prodSizing(e)
@@ -1098,7 +1086,6 @@ object AnnOps {
     QueryDef(
       "q160_pagerank",
       (s, dir) => {
-        VectorExpressions.register(s)
         val e = Tables.load(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding"))
         val edges = Staging.materialize(
@@ -1124,7 +1111,6 @@ object AnnOps {
   val q130KnnGraph: QueryDef = QueryDef(
     "q130_knn_graph",
     (s, dir) => {
-      VectorExpressions.register(s)
       val e = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       // the EXACT graph through the production two-level plumbing:
@@ -1194,9 +1180,7 @@ object AnnOps {
     * shortlist size exposed — AnnOpsSpec proves shortlist = N returns
     * EXACTLY the brute-force top-k (projection can reorder only the
     * shortlist cut, never the exact re-rank). */
-  private[operators] def jlTopK(s: SparkSession, e: DataFrame,
-      shortlist: Int, k: Int): DataFrame = {
-    VectorExpressions.register(s)
+  private[operators] def jlTopK(e: DataFrame, shortlist: Int, k: Int): DataFrame = {
     val pe = e.select(col("vec_id"), col("embedding"),
       expr(jlProjSpark("embedding")).as("pv"))
     val pq = pe.filter(col("vec_id") === 0)
@@ -1223,10 +1207,9 @@ object AnnOps {
     QueryDef(
       "q155_ann_jl",
       (s, dir) => {
-        VectorExpressions.register(s)
         val e = Tables.load(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding"))
-        jlTopK(s, e, JlShortlist, 5)
+        jlTopK(e, JlShortlist, 5)
       },
       Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         p AS (SELECT vec_id, v, ${projDuck("v")} AS pv FROM e),
@@ -1264,7 +1247,6 @@ object AnnOps {
     "q179_ann_recall",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      VectorExpressions.register(s)
       val e = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val centroids = e.filter(col("vec_id") < C)
@@ -1547,7 +1529,6 @@ object AnnOps {
   val q197AnnNsw: QueryDef = QueryDef(
     "q197_ann_nsw",
     (s, dir) => {
-      VectorExpressions.register(s)
       val e = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val edges = Staging.materialize(
@@ -1622,7 +1603,6 @@ object AnnOps {
     "q198_nn_descent",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      VectorExpressions.register(s)
       val e = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       // hash-seeded init: GraphK deterministic pseudo-random targets
@@ -1773,7 +1753,6 @@ object AnnOps {
     "q199_ann_hnsw",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      VectorExpressions.register(s)
       val e = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       // geometric levels from integer thresholds on a 16-bit bucket

@@ -40,10 +40,8 @@ object CorpusOps {
     * element cost 15.6 s against 1.6 s for the sf0.1 explode).
     * Multi-consumer callers (q81/q87/q122/Curation) materialize their
     * own exploded gram frame; single-pass callers run no checkpoint. */
-  private[graft] def fiveGramsOf(d: DataFrame): DataFrame = {
-    graft.functions.expressions.TextExpressions.register(d.sparkSession)
+  private[graft] def fiveGramsOf(d: DataFrame): DataFrame =
     d.select(col("doc_id"), expr("word_shingles(text, 5)").as("shingles"))
-  }
 
   /** C4-style boilerplate detection: a 5-gram present in >= 3 distinct
     * documents is template text; a document is boilerplate when at

@@ -36,15 +36,12 @@ object DedupOps {
     * builds every gram from that split, so project collapse has no
     * token array to inline into per-gram references (the re-split per
     * element cost 15.3 s against 1.7 s for the sf0.1 hash pass). Every
-    * downstream family materializes its own hashed frame. The `tag` is
-    * kept for call-shape compatibility (unused). */
-  private[graft] def shingledOf(d: DataFrame, tag: String): DataFrame = {
-    graft.functions.expressions.TextExpressions.register(d.sparkSession)
+    * downstream family materializes its own hashed frame. */
+  private[graft] def shingledOf(d: DataFrame): DataFrame =
     d.select(col("doc_id"), expr("word_shingles(text, 3)").as("shingles"))
-  }
 
   private def shingled(s: SparkSession, dir: String): DataFrame =
-    shingledOf(docs(s, dir), "tok")
+    shingledOf(docs(s, dir))
 
   private def shingleSqlCteFor(src: String): String =
     s"""tok AS (SELECT doc_id, trim(text) AS t,
@@ -72,10 +69,8 @@ object DedupOps {
     // reuse this 4×; without it Spark recomputes the hash pass per use
     hashedOf(shingled(s, dir), "hashed")
 
-  private[graft] def signatures(hashed: DataFrame): DataFrame = {
-    graft.functions.expressions.TextExpressions.register(hashed.sparkSession)
+  private[graft] def signatures(hashed: DataFrame): DataFrame =
     hashed.withColumn("sig", expr(s"minhash_sig(hashes, $K)"))
-  }
 
   private val hashSqlCte =
     """hs AS (SELECT doc_id, list_transform(shingles, s -> sha256(s)) AS hashes FROM sh)"""
@@ -427,7 +422,7 @@ object DedupOps {
       containTau: Double = ContainTauDefault): DataFrame = {
     family match {
       case "minhash" => pfReport(d, smp =>
-          bandsOf(signatures(hashedOf(shingledOf(smp, "pf_tok"), "pf_hashed")))
+          bandsOf(signatures(hashedOf(shingledOf(smp), "pf_hashed")))
             .select(col("doc_id"),
               concat_ws(":", col("band_id"), col("band_key")).as("k")),
         Bands, budget)
@@ -444,10 +439,10 @@ object DedupOps {
             .select(col("doc_id"), col("mk").cast("string").as("k")),
         MankuTables.length, budget)
       case "containment" => pfReportBipartite(d,
-        smp => containProbes(hashedOf(shingledOf(smp, "pf_ctok"), "pf_chash"),
+        smp => containProbes(hashedOf(shingledOf(smp), "pf_chash"),
             containTau)
           .select(col("small_id").as("doc_id"), col("h").as("k")),
-        smp => containIndex(hashedOf(shingledOf(smp, "pf_ctok2"), "pf_chash2"))
+        smp => containIndex(hashedOf(shingledOf(smp), "pf_chash2"))
           .select(col("big_id").as("doc_id"), col("h").as("k")),
         budget)
       case other => throw new IllegalArgumentException(
@@ -508,7 +503,6 @@ object DedupOps {
   val q52MinhashAggregate: QueryDef = QueryDef(
     "q52_minhash_aggregate",
     (s, dir) => {
-      graft.functions.expressions.MinHashAgg.register(s)
       shingled(s, dir)
         .select(col("doc_id"), explode(col("shingles")).as("shingle"))
         .withColumn("h", sha2(col("shingle"), 256))
@@ -595,7 +589,6 @@ object DedupOps {
   val q55EmbeddingNeardup: QueryDef = QueryDef(
     "q55_embedding_neardup",
     (s, dir) => {
-      graft.functions.expressions.VectorExpressions.register(s)
       val e = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("label"), col("embedding"))
       e.as("a").join(e.as("b"),
@@ -1370,7 +1363,7 @@ object DedupOps {
     * smaller side, slim verify throughout. */
   private[graft] def containmentPairsOf(d: DataFrame,
       tau: Double = ContainTauDefault): DataFrame =
-    containmentRecallOf(hashed16Of(shingledOf(d, "cpol_tok"), "cpol_hashed"),
+    containmentRecallOf(hashed16Of(shingledOf(d), "cpol_hashed"),
       tau, "cpol")
 
   /** q245's DuckDB oracle, rendered from the SAME τ the Spark plan
@@ -1968,7 +1961,7 @@ object DedupOps {
         // saturation-robust fallback, so it is picked exactly on the
         // densest corpora. Slim rows only: |A∩B| via commonHashCounts,
         // |A∪B| = n_a + n_b − |A∩B| from cached set sizes.
-        val hashed = hashedOf(shingledOf(d, "policy_tok"), "policy_hashed")
+        val hashed = hashedOf(shingledOf(d), "policy_hashed")
         // materialized: the verify consumes the candidate frame four
         // times (count + bloom build + two semi-joins + final join)
         val cand = Staging.materialize(lshCandidatePairs(signatures(hashed)), "policy_cand")

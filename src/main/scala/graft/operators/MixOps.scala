@@ -257,7 +257,6 @@ object MixOps {
   val q95SemanticDedup: QueryDef = QueryDef(
     "q95_semantic_dedup",
     (s, dir) => {
-      graft.functions.expressions.VectorExpressions.register(s)
       val e = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val cents = e.filter(col("vec_id") < Cents)
@@ -308,7 +307,6 @@ object MixOps {
   val q127EmbeddingOutliers: QueryDef = QueryDef(
     "q127_embedding_outliers",
     (s, dir) => {
-      graft.functions.expressions.VectorExpressions.register(s)
       val e = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val cents = e.filter(col("vec_id") < Cents)
@@ -376,7 +374,6 @@ object MixOps {
   val q132KnnClusters: QueryDef = QueryDef(
     "q132_knn_clusters",
     (s, dir) => {
-      graft.functions.expressions.VectorExpressions.register(s)
       val e = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val knn = AnnOps.knnGraphExact(e, AnnOps.GraphK)

@@ -184,7 +184,6 @@ object Relational2 {
     QueryDef(
       "q77_sketches",
       (s, dir) => {
-        HyperLogLogAgg.register(s)
         val li = t(s, dir, "lineitem")
         val hll = li.groupBy(col("l_returnflag")).agg(
             expr("hll_sketch(cast(l_partkey as string))").as("rp"),
@@ -268,7 +267,6 @@ object Relational2 {
   val q133HeavyHitters: QueryDef = QueryDef(
     "q133_heavy_hitters",
     (s, dir) => {
-      graft.functions.expressions.MisraGriesAgg.register(s)
       Tables.loadParallel(s, dir, "documents")
         .select(explode(split(trim(col("text")), "\\s+")).as("token"))
         .agg(expr("misra_gries(token, 64)").as("hh"))
@@ -317,7 +315,6 @@ object Relational2 {
     QueryDef(
       "q154_cms_frequency",
       (s, dir) => {
-        CountMinAgg.register(s)
         val toks = Tables.loadParallel(s, dir, "documents")
           .select(explode(split(trim(col("text")), "\\s+")).as("tok"))
         val sk = toks.agg(expr(s"cms_sketch(tok, $depth, $width)").as("sk"))
@@ -382,7 +379,6 @@ object Relational2 {
     QueryDef(
       "q169_hll_distinct",
       (s, dir) => {
-        HyperLogLogAgg.register(s)
         // Registers are dedup-invariant (max-merge is idempotent), so
         // sketch the DISTINCT (source, tok) set: one aggregation and a
         // plain count(*) instead of the Expand a mixed
@@ -458,7 +454,6 @@ object Relational2 {
     QueryDef(
       "q240_quantile_sketch",
       (s, dir) => {
-        BottomKAgg.register(s)
         Tables.loadParallel(s, dir, "documents")
           .select(col("source"), col("n_chars").cast("long").as("v"),
             expr("sha2(cast(doc_id as string), 256)").as("h"))
@@ -577,7 +572,6 @@ object Relational2 {
     QueryDef(
       "q230_hll_union",
       (s, dir) => {
-        HyperLogLogAgg.register(s)
         val dv = Tables.loadParallel(s, dir, "documents")
           .select(col("source"),
             explode(split(trim(col("text")), "\\s+")).as("tok"))

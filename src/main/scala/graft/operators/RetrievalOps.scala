@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import graft.functions.expressions.VectorExpressions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -33,7 +32,6 @@ object RetrievalOps {
   val q30TopkCosine: QueryDef = QueryDef(
     "q30_topk_cosine",
     (s, dir) => {
-      VectorExpressions.register(s)
       val e = emb(s, dir)
       e.crossJoin(broadcast(queryVec(e)))
         .select(col("vec_id"), round(expr("dot_product_f(embedding, qv)"), 6).as("score"))
@@ -52,7 +50,6 @@ object RetrievalOps {
   val q31KnnPerLabel: QueryDef = QueryDef(
     "q31_knn_per_label",
     (s, dir) => {
-      VectorExpressions.register(s)
       val e = emb(s, dir)
       val w = Window.partitionBy(col("label"))
         .orderBy(col("score").desc, col("vec_id"))
@@ -77,7 +74,6 @@ object RetrievalOps {
   val q32RrfFusion: QueryDef = QueryDef(
     "q32_rrf_fusion",
     (s, dir) => {
-      VectorExpressions.register(s)
       val e = emb(s, dir)
       // all three metrics in one projection, then PERSIST: the three
       // TakeOrdered passes below reuse the 24-bytes-per-row scored frame
@@ -163,7 +159,6 @@ object RetrievalOps {
   val q57Subquestion: QueryDef = QueryDef(
     "q57_subquestion",
     (s, dir) => {
-      VectorExpressions.register(s)
       val e = emb(s, dir)
       def sub(qid: Int) = {
         val qv = e.filter(col("vec_id") === qid).select(col("embedding").as("qv"))
@@ -208,7 +203,6 @@ object RetrievalOps {
   val q59RecursiveRetrieval: QueryDef = QueryDef(
     "q59_recursive_retrieval",
     (s, dir) => {
-      VectorExpressions.register(s)
       val e = emb(s, dir)
       val qv = queryVec(e)
       val roots = e.filter(col("vec_id") % 10 === 0 && col("vec_id") =!= 0)
@@ -275,7 +269,6 @@ object RetrievalOps {
   val q161RetrievalMetrics: QueryDef = QueryDef(
     "q161_retrieval_metrics",
     (s, dir) => {
-      VectorExpressions.register(s)
       val e = emb(s, dir)
       val queries = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"),

@@ -166,7 +166,6 @@ object SampleOps {
   val q118TripletMining: QueryDef = QueryDef(
     "q118_triplet_mining",
     (s, dir) => {
-      graft.functions.expressions.VectorExpressions.register(s)
       val e = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"), col("label"))
       val anchors = e.filter(col("vec_id") < NAnchors)

@@ -335,7 +335,6 @@ object SuffixOps {
     * SCALE.md Round 14). TextExpressionsSpec proves the two forms
     * row-identical, nulls and prefix cases included. */
   private def lcpCols(df: DataFrame): DataFrame = {
-    graft.functions.expressions.TextExpressions.register(df.sparkSession)
     df.withColumn("lcp", expr("prefix_lcp(sufA, sufB)"))
   }
 

@@ -187,7 +187,6 @@ object TextAnalysis {
   val q113CcnetNormalize: QueryDef = QueryDef(
     "q113_ccnet_normalize",
     (s, dir) => {
-      graft.functions.expressions.TextExpressions.register(s)
       val norm = trim(regexp_replace(regexp_replace(
         lower(expr("nfc_norm(text)")), "[0-9]", "0"), "\\s+", " "))
       docs(s, dir)

@@ -237,7 +237,6 @@ object Curation {
     // and the whole embedding pass (assign + cluster-blocked pairs)
     // never touches text
     val semIds = cfg.semanticEmbeddings.map { emb =>
-      graft.functions.expressions.VectorExpressions.register(docs.sparkSession)
       val raw = emb.select(col("doc_id").as("vec_id"), col("embedding"))
       // optional ZCA whitening (q157's operator): isotropic geometry
       // before centroid training, so cluster blocking and the cosine

@@ -21,12 +21,10 @@ object Retrievers {
   private def qvCol(q: Query): Column =
     lit(q.vector.toArray).cast("array<float>")
 
-  private def scored(chunks: DataFrame, q: Query): DataFrame = {
-    graft.functions.expressions.VectorExpressions.register(chunks.sparkSession)
+  private def scored(chunks: DataFrame, q: Query): DataFrame =
     chunks.withColumn("__qv", qvCol(q))
       .withColumn("score", expr("dot_product_f(embedding, __qv)"))
       .drop("__qv")
-  }
 
   /** D5 simple: top-k by similarity, score ≤ 0 dropped, doc filter
     * (retrievers/simple.py:11-52). */

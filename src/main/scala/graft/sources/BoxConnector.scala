@@ -1,6 +1,7 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import graft.functions.TextFunctions
 import graft.tools.{HttpTransport, JdkHttpTransport}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -72,7 +73,7 @@ final class BoxConnector(auth: BoxJwtAuth, mkTransport: () => HttpTransport,
   private def listFolder(root: String, glob: String): Seq[Entry] = {
     val folder = if (root.isEmpty) "0" else root
     val c = new BoxClient(auth, mkTransport(), apiBase)
-    val re = GoogleDriveConnector.globToRegex(glob)
+    val keep = TextFunctions.globMatcher(glob)
     val out = scala.collection.mutable.ArrayBuffer.empty[Entry]
     var offset = 0L
     var total = Long.MaxValue
@@ -86,7 +87,7 @@ final class BoxConnector(auth: BoxJwtAuth, mkTransport: () => HttpTransport,
       (0 until entries.size()).foreach { i =>
         val e = entries.get(i)
         val nm = e.path("name").asText("")
-        if (e.path("type").asText() == "file" && re.matches(nm) &&
+        if (e.path("type").asText() == "file" && keep(nm) &&
             out.length < MaxListing)
           out += Entry(e.path("id").asText(""), nm, e.path("size").asLong(-1),
             scala.util.Try(java.time.Instant.parse(

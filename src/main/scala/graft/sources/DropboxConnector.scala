@@ -1,6 +1,7 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import graft.functions.TextFunctions
 import graft.tools.{HttpTransport, JdkHttpTransport}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -69,7 +70,7 @@ final class DropboxConnector(accessToken: String,
 
   private def listFolder(root: String, glob: String): Seq[Entry] = {
     val t = mkTransport()
-    val re = GoogleDriveConnector.globToRegex(glob)
+    val keep = TextFunctions.globMatcher(glob)
     val path = if (root == "/" || root.isEmpty) "" else root
     val out = scala.collection.mutable.ArrayBuffer.empty[Entry]
     var body = s"""{"path":${quoteJson(path)},"recursive":false}"""
@@ -86,7 +87,7 @@ final class DropboxConnector(accessToken: String,
       (0 until entries.size()).foreach { i =>
         val e = entries.get(i)
         val name = e.path("name").asText("")
-        if (e.path(".tag").asText() == "file" && re.matches(name) &&
+        if (e.path(".tag").asText() == "file" && keep(name) &&
             out.length < MaxListing) {
           out += Entry(e.path("path_lower").asText(""), name,
             e.path("size").asLong(-1),

@@ -1,6 +1,7 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import graft.functions.TextFunctions
 import graft.tools.{HttpTransport, JdkHttpTransport}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -84,7 +85,7 @@ final class GoogleDriveConnector(auth: DriveAuth,
   private def listFolder(root: String, glob: String): Seq[DriveEntry] = {
     val folder = root.stripPrefix("gdrive://").stripSuffix("/")
     val c = new DriveClient(auth, mkTransport(), apiBase, tokenUrl)
-    val re = globToRegex(glob)
+    val keep = TextFunctions.globMatcher(glob)
     val q = java.net.URLEncoder.encode(
       s"'$folder' in parents and trashed=false", "UTF-8")
     val fields = java.net.URLEncoder.encode(
@@ -105,7 +106,7 @@ final class GoogleDriveConnector(auth: DriveAuth,
         val name = f.path("name").asText("")
         // folders are namespace nodes, not files (P1 analog)
         if (mime != "application/vnd.google-apps.folder" &&
-            re.matches(name) && out.length < MaxListing) {
+            keep(name) && out.length < MaxListing) {
           out += DriveEntry(f.path("id").asText(""), name, mime,
             f.path("size").asText("-1").toLong, // Google-native: no size
             scala.util.Try(java.time.Instant.parse(
@@ -134,14 +135,6 @@ object GoogleDriveConnector {
     "application/vnd.google-apps.document" -> ("text/plain", ".txt"),
     "application/vnd.google-apps.spreadsheet" -> ("text/csv", ".csv"),
     "application/vnd.google-apps.presentation" -> ("text/plain", ".txt"))
-
-  private[sources] def globToRegex(glob: String): scala.util.matching.Regex =
-    glob.flatMap {
-      case '*' => ".*"
-      case '?' => "."
-      case c if "\\.[]{}()+-^$|".contains(c) => s"\\$c"
-      case c => c.toString
-    }.r
 
   final case class DriveEntry(id: String, name: String, mime: String,
       size: Long, mtimeMs: Long)

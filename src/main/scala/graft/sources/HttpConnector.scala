@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.functions.TextFunctions
 import graft.tools.{HttpTransport, JdkHttpTransport}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -35,10 +36,11 @@ final class HttpStagingConnector(mkTransport: () => HttpTransport,
     val base = slashed(root)
     val page = t.request("GET", base)
     require(page.status == 200, s"index GET $base -> HTTP ${page.status}")
+    val keep = TextFunctions.globMatcher(glob)
     val names = HrefRe.findAllMatchIn(page.text).map(_.group(1)).toSeq.distinct
       .filterNot(h => h.endsWith("/") || h.startsWith("..") ||
         h.startsWith("#") || h.startsWith("?")) // dirs, parent, anchors
-      .filter(h => globToRegex(glob).matches(lastSegment(h)))
+      .filter(h => keep(lastSegment(h)))
       .take(MaxListing)
     val urls = names.map { h =>
       val url = if (h.startsWith("http://") || h.startsWith("https://")) h
@@ -103,14 +105,6 @@ object HttpStagingConnector {
     val clean = path.stripSuffix("/")
     clean.substring(clean.lastIndexOf('/') + 1)
   }
-
-  private def globToRegex(glob: String): scala.util.matching.Regex =
-    glob.flatMap {
-      case '*' => ".*"
-      case '?' => "."
-      case c if "\\.[]{}()+-^$|".contains(c) => s"\\$c"
-      case c => c.toString
-    }.r
 
   private[sources] def parseHttpDate(s: String): Option[java.sql.Timestamp] =
     scala.util.Try(java.sql.Timestamp.from(java.time.Instant.from(

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.functions.TextFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** SFTP file attributes, the fields SSH_FXP_ATTRS carries that the
@@ -64,12 +65,12 @@ final class SftpStagingConnector(mkChannel: () => SftpChannel,
 
   def listRemote(spark: SparkSession, root: String, glob: String): DataFrame = {
     import spark.implicits._
-    val re = GoogleDriveConnector.globToRegex(glob)
+    val keep = TextFunctions.globMatcher(glob)
     val ch = mkChannel()
     val entries =
       try {
         ch.readdir(root)
-          .filter { case (fname, attrs) => !attrs.isDir && re.matches(fname) }
+          .filter { case (fname, attrs) => !attrs.isDir && keep(fname) }
           .map { case (fname, attrs) =>
             (joinPath(root, fname), fname, attrs.size,
               new java.sql.Timestamp(attrs.mtimeSec * 1000L))

@@ -1,6 +1,7 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import graft.functions.TextFunctions
 import graft.tools.{HttpTransport, JdkHttpTransport}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -72,7 +73,7 @@ final class SharePointConnector(auth: GraphClientCredentials,
 
   private def listFolder(root: String, glob: String): Seq[Entry] = {
     val t = mkTransport()
-    val re = GoogleDriveConnector.globToRegex(glob)
+    val keep = TextFunctions.globMatcher(glob)
     val base =
       if (root.isEmpty || root == "/") s"$graphBase/v1.0/sites/$siteId/drive/root/children"
       else s"$graphBase/v1.0/sites/$siteId/drive/root:/${root.stripPrefix("/")}:/children"
@@ -89,7 +90,7 @@ final class SharePointConnector(auth: GraphClientCredentials,
         val e = items.get(i)
         val nm = e.path("name").asText("")
         // driveItems carry a `file` facet or a `folder` facet
-        if (!e.path("file").isMissingNode && re.matches(nm) &&
+        if (!e.path("file").isMissingNode && keep(nm) &&
             out.length < MaxListing)
           out += Entry(e.path("id").asText(""), nm, e.path("size").asLong(-1),
             scala.util.Try(java.time.Instant.parse(

@@ -36,7 +36,6 @@ object HeavyHitters {
       * monitor. The per-batch summary is computed distributed; only
       * ≤ k (token, count) pairs cross to the driver. */
     def observe(batchTokens: DataFrame): Unit = {
-      MisraGriesAgg.register(batchTokens.sparkSession)
       val rows = batchTokens
         .agg(expr(s"misra_gries(token, $k)").as("hh"))
         .select(explode(col("hh")).as("e"))
@@ -60,13 +59,11 @@ object HeavyHitters {
     * (CountMinStreamSpec proves equality over 3 batches). Driver
     * state is depth·width longs forever — 8 KiB at the 4×256 default. */
   final class CmsMonitor(val depth: Int = 4, val width: Int = 256) {
-    import graft.functions.expressions.CountMinAgg
     @volatile private var state = new Array[Long](depth * width)
 
     /** Fold one micro-batch (a frame with a `token` column): the grid
       * is built distributed, one array crosses to the driver. */
     def observe(batchTokens: DataFrame): Unit = {
-      CountMinAgg.register(batchTokens.sparkSession)
       val batch = batchTokens
         .agg(expr(s"cms_sketch(token, $depth, $width)").as("sk"))
         .collect().head.getSeq[Long](0)
@@ -115,7 +112,6 @@ object HeavyHitters {
 
     /** Fold one micro-batch (a frame with a `token` column). */
     def observe(batchTokens: DataFrame): Unit = {
-      HyperLogLogAgg.register(batchTokens.sparkSession)
       val batch = batchTokens
         .agg(expr("hll_sketch(token)").as("sk"))
         .collect().head.getSeq[Int](0)

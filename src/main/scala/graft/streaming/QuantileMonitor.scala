@@ -43,7 +43,6 @@ final class QuantileMonitor(maxGroups: Int = QuantileMonitor.MaxGroups) {
     * identity coin, e.g. sha2 of the row id), `value` (long). */
   def observe(batch: DataFrame, group: String = "source",
       hash: String = "h", value: String = "v"): Unit = {
-    BottomKAgg.register(batch.sparkSession)
     val rows = batch
       .select(col(group).as("g"), col(hash).as("h"), col(value).as("v"))
       .groupBy(col("g"))

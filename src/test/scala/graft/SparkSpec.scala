@@ -5,14 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session: one local SparkSession per suite (lazy). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftExtensions.session("graft-test", 4)
 
   def sf(name: String): String = s"/root/testdata/$name"
 

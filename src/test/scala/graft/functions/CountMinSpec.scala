@@ -14,7 +14,6 @@ class CountMinSpec extends SparkSpec {
 
   private def sketch(df: org.apache.spark.sql.DataFrame,
       depth: Int, width: Int): Array[Long] = {
-    CountMinAgg.register(spark)
     df.agg(expr(s"cms_sketch(token, $depth, $width)").as("sk"))
       .collect().head.getSeq[Long](0).toArray
   }
@@ -64,7 +63,6 @@ class CountMinSpec extends SparkSpec {
   }
 
   test("native bucket matches the portable SQL arithmetic for every row") {
-    CountMinAgg.register(spark)
     import spark.implicits._
     val toks = Seq("alpha", "beta", "", "snow☃man").toDF("tok")
     (0 until 4).foreach { j =>
@@ -81,7 +79,6 @@ class CountMinSpec extends SparkSpec {
   }
 
   test("non-literal shape parameters are an analysis error, not a silent default") {
-    CountMinAgg.register(spark)
     import spark.implicits._
     val df = Seq("a").toDF("token")
     val e = intercept[Exception] {

@@ -14,7 +14,6 @@ import graft.functions.expressions.HyperLogLogAgg
 class HyperLogLogSpec extends SparkSpec {
 
   private def regs(df: org.apache.spark.sql.DataFrame): Array[Int] = {
-    HyperLogLogAgg.register(spark)
     df.agg(expr("hll_sketch(token)").as("sk"))
       .collect().head.getSeq[Int](0).toArray
   }

@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
 class MisraGriesSpec extends SparkSpec {
 
   private def summary(df: org.apache.spark.sql.DataFrame, k: Int): Map[String, Long] = {
-    graft.functions.expressions.MisraGriesAgg.register(spark)
     df.agg(expr(s"misra_gries(token, $k)").as("hh"))
       .select(explode(col("hh")).as("e"))
       .select(col("e.token"), col("e.est"))
@@ -80,7 +79,6 @@ class MisraGriesSpec extends SparkSpec {
   test("non-literal or non-int capacity is an analysis error, not a silent k=64") {
     val sp = spark
     import sp.implicits._
-    graft.functions.expressions.MisraGriesAgg.register(sp)
     val df = Seq("a", "b", "a").toDF("token")
     // the registry wraps the builder's AnalysisException in a
     // SparkException during analysis — check the cause chain

@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.functions.expressions.TextExpressions
 import org.apache.spark.sql.functions._
 
 /** PrefixLcp must be ROW-IDENTICAL to the zip_with formulation it
@@ -19,7 +18,6 @@ class TextExpressionsSpec extends SparkSpec {
       |end""".stripMargin).cast("long")
 
   test("prefix_lcp equals the zip_with form on randomized and edge-case slices") {
-    TextExpressions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(11)
     val vocab = Vector("a", "b", "c")
@@ -45,7 +43,6 @@ class TextExpressionsSpec extends SparkSpec {
   }
 
   test("prefix_lcp survives both eval paths: codegen and interpreted") {
-    TextExpressions.register(spark)
     import spark.implicits._
     val df = Seq((Seq("x", "y", "z"), Seq("x", "y", "q")))
       .toDF("sufA", "sufB")
@@ -62,7 +59,6 @@ class TextExpressionsSpec extends SparkSpec {
   }
 
   test("prefix_lcp rejects non-ARRAY<STRING> arguments at analysis time") {
-    TextExpressions.register(spark)
     import spark.implicits._
     val df = Seq((1L, Seq("a"))).toDF("n", "suf")
     // wrong type on either side must be an AnalysisException, not a
@@ -73,18 +69,5 @@ class TextExpressionsSpec extends SparkSpec {
       }
       assert(ex.getMessage.contains("ARRAY<STRING>"), ex.getMessage)
     }
-  }
-
-  test("register is per-function: prefix_lcp registers even when nfc_norm pre-exists") {
-    val reg = spark.sessionState.functionRegistry
-    val lcpIdent = org.apache.spark.sql.catalyst.FunctionIdentifier("prefix_lcp")
-    // simulate the partial-session state: nfc_norm present, prefix_lcp absent
-    reg.createOrReplaceTempFunction("nfc_norm",
-      es => graft.functions.expressions.NfcNormalize(es.head), "scala_udf")
-    reg.dropFunction(lcpIdent)
-    assert(!reg.functionExists(lcpIdent))
-    TextExpressions.register(spark)
-    assert(reg.functionExists(lcpIdent),
-      "register() keyed every member on the first name and skipped prefix_lcp")
   }
 }

@@ -3,7 +3,7 @@ package graft.functions
 import java.nio.file.{Files, Path, StandardCopyOption}
 
 import graft.{SparkEntry, SparkSpec, Tables}
-import graft.functions.expressions.{AsciiCaseMap, TextExpressions}
+import graft.functions.expressions.AsciiCaseMap
 import graft.sources.FileScan
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, Lower, Upper}
@@ -64,7 +64,6 @@ class TextKernelsSpec extends SparkSpec {
   }
 
   test("word_shingles equals the lambda shingler on edge texts, n = 3 and 5, both eval paths") {
-    TextExpressions.register(spark)
     import spark.implicits._
     // repartitioned, so the projection runs in a stage rather than being
     // folded into the local relation at optimization time
@@ -85,13 +84,11 @@ class TextKernelsSpec extends SparkSpec {
   }
 
   test("word_shingles equals the lambda shingler on the sf0.001 documents") {
-    TextExpressions.register(spark)
     val docs = Tables.load(spark, sf("sf0.001"), "documents")
     for (n <- Seq(3, 5)) assertSameColumns(docs, lambdaShingles(n), expr(s"word_shingles(text, $n)"))
   }
 
   test("minhash_sig equals the nested substr/array_min lambda, both eval paths") {
-    TextExpressions.register(spark)
     import spark.implicits._
     val sha = "9f86d081884c7d659a2feaa0c55ad015a3bf4f1b2b0b822cd15d6c15b0f00a08"
     val edges: Seq[Option[Seq[String]]] = Seq(
@@ -110,7 +107,6 @@ class TextKernelsSpec extends SparkSpec {
   }
 
   test("minhash_sig equals the lambda on the sf0.001 documents' sha2 shingle digests") {
-    TextExpressions.register(spark)
     val hashed = Tables.load(spark, sf("sf0.001"), "documents")
       .select(expr("transform(word_shingles(text, 3), s -> sha2(s, 256))").as("hashes"))
     assertSameColumns(hashed, lambdaSig, expr("minhash_sig(hashes, 8)"))

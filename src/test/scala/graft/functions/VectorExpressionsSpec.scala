@@ -1,13 +1,11 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.functions.expressions.VectorExpressions
 import org.apache.spark.sql.functions._
 
 class VectorExpressionsSpec extends SparkSpec {
 
   test("custom dot/l2sq expressions are bit-identical to the HOF fold") {
-    VectorExpressions.register(spark)
     val e = graft.Tables.load(spark, sf("sf0.001"), "embeddings")
     val q = e.filter(col("vec_id") === 7).select(col("embedding").as("qv"))
     val both = e.crossJoin(broadcast(q)).select(
@@ -27,7 +25,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("custom expressions participate in whole-stage codegen") {
-    VectorExpressions.register(spark)
     val e = graft.Tables.load(spark, sf("sf0.001"), "embeddings")
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     val df = e.crossJoin(broadcast(q))
@@ -40,7 +37,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("null and length-mismatch behavior") {
-    VectorExpressions.register(spark)
     import spark.implicits._
     val df = Seq(
       (Some(Seq(1.0f, 2.0f)), Some(Seq(3.0f, 4.0f))),

@@ -1,7 +1,6 @@
 package graft.ml
 
 import graft.SparkSpec
-import graft.functions.expressions.VectorExpressions
 import org.apache.spark.sql.functions._
 
 class VectorMLSpec extends SparkSpec {
@@ -20,7 +19,6 @@ class VectorMLSpec extends SparkSpec {
   }
 
   test("LSH nearest neighbors approximate the brute-force top-k") {
-    VectorExpressions.register(spark)
     val qRow = emb.filter(col("vec_id") === 0)
       .select("embedding").collect().head.getSeq[Float](0)
     val idx = new VectorML.LshIndex(emb, "embedding", bucketLength = 1.0, numTables = 5)

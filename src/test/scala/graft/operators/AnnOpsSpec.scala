@@ -17,8 +17,11 @@ class AnnOpsSpec extends SparkSpec {
       val staged = stagedDf.collect()
       assert(staged.map(_.toString).toSeq === inMemory.map(_.toString).toSeq)
 
-      // the index landed as one directory per inverted list
-      val cellDirs = new java.io.File(s"$staging/ivf_index").listFiles()
+      // the index landed in its own staged directory, one subdirectory
+      // per inverted list
+      val Array(index) = new java.io.File(staging).listFiles()
+        .filter(_.getName.startsWith("ivf_index_"))
+      val cellDirs = index.listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("cell="))
       assert(cellDirs.length > 4, s"expected >4 cell dirs, got ${cellDirs.length}")
 
@@ -41,6 +44,24 @@ class AnnOpsSpec extends SparkSpec {
         s"no partition filter on cell: ${scan.partitionFilters}")
       assert(scan.selectedPartitions.partitionCount === 4, // NProbe of 16 cells
         s"scan read ${scan.selectedPartitions.partitionCount} partitions, wanted 4")
+    } finally spark.conf.unset(graft.Staging.Key)
+  }
+
+  test("q56 durable: two runs under one root stage two IVF indexes, and cleanup removes both") {
+    val inMemory = AnnOps.q56AnnIvf.fn(spark, sf).collect().map(_.toString).toSeq
+    val root = java.nio.file.Files.createTempDirectory("graft-ivf-twice").toFile
+    def indexDirs: Seq[String] = Option(root.listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.startsWith("ivf_index_"))
+    spark.conf.set(graft.Staging.Key, root.toString)
+    try {
+      val first = AnnOps.q56AnnIvf.fn(spark, sf)
+      val second = AnnOps.q56AnnIvf.fn(spark, sf)
+      assert(indexDirs.distinct.length === 2, s"staged: ${indexDirs.mkString(", ")}")
+      // the second run wrote beside the first, so both still read their own
+      assert(first.collect().map(_.toString).toSeq === inMemory)
+      assert(second.collect().map(_.toString).toSeq === inMemory)
+      graft.Staging.cleanup(spark)
+      assert(indexDirs.isEmpty, s"left behind: ${indexDirs.mkString(", ")}")
     } finally spark.conf.unset(graft.Staging.Key)
   }
 
@@ -85,7 +106,6 @@ class AnnOpsSpec extends SparkSpec {
 
   test("IVF append: incremental ingest reproduces the full rebuild exactly") {
     import org.apache.spark.sql.functions._
-    graft.functions.expressions.VectorExpressions.register(spark)
     val e = graft.Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val cents = e.filter(col("vec_id") < 16)
@@ -108,7 +128,6 @@ class AnnOpsSpec extends SparkSpec {
 
   test("ivfTopK with trained k-means centroids: recall@5 >= the deterministic pick") {
     import org.apache.spark.sql.functions._
-    graft.functions.expressions.VectorExpressions.register(spark)
     val e = graft.Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding")).cache()
     // queries OUTSIDE both centroid sets (the deterministic pick is the
@@ -143,7 +162,6 @@ class AnnOpsSpec extends SparkSpec {
 
   test("q85 PQ: approximate top-10 recalls most of the exact-L2 top-10") {
     import org.apache.spark.sql.functions._
-    graft.functions.expressions.VectorExpressions.register(spark)
     val pqIds = AnnOps.q85AnnPq.fn(spark, sf).collect()
       .map(_.getAs[Long]("vec_id")).toSet
     assert(pqIds.size === 10)
@@ -165,7 +183,6 @@ class AnnOpsSpec extends SparkSpec {
 
   test("q100 IVFPQ: cell-pruned ADC still recalls most of the exact-L2 top-10") {
     import org.apache.spark.sql.functions._
-    graft.functions.expressions.VectorExpressions.register(spark)
     val rows = AnnOps.q100AnnIvfPq.fn(spark, sf).collect()
     assert(rows.length === 10)
     val dists = rows.map(_.getDouble(1))
@@ -199,7 +216,6 @@ class AnnOpsSpec extends SparkSpec {
 
   test("q85 PQ: codes are M bytes-worth per vector — a 32x compression") {
     import org.apache.spark.sql.functions._
-    graft.functions.expressions.VectorExpressions.register(spark)
     // re-derive the code table exactly as the query builds it and check
     // every vector got M in-range codes (each fits a byte; the float
     // slices it replaces are M*D*4 bytes)
@@ -216,7 +232,6 @@ class AnnOpsSpec extends SparkSpec {
 
   test("q117 SQ8: 255-level quantization recalls (almost) all of the exact top-10") {
     import org.apache.spark.sql.functions._
-    graft.functions.expressions.VectorExpressions.register(spark)
     val sqIds = AnnOps.q117AnnSq8.fn(spark, sf).collect()
       .map(_.getAs[Long]("vec_id")).toSet
     assert(sqIds.size === 10)
@@ -247,7 +262,6 @@ class AnnOpsSpec extends SparkSpec {
     // ranks are not uniform (the graph actually concentrated mass)
     assert(rows.values.max > 1.5 / n, "no concentration — suspicious uniform ranks")
     // driver-side reference: same edges, same 5 damped iterations
-    graft.functions.expressions.VectorExpressions.register(spark)
     val e = graft.Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val edges = AnnOps.knnGraphExact(e, 5)
@@ -267,13 +281,12 @@ class AnnOpsSpec extends SparkSpec {
 
   test("q155 JL: full shortlist returns exactly the brute-force top-5; scores are true dots") {
     import org.apache.spark.sql.functions._
-    graft.functions.expressions.VectorExpressions.register(spark)
     val e = graft.Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val n = e.count().toInt
     // shortlist = N: the projection can only reorder the cut, never the
     // exact re-rank — output must equal brute force
-    val full = AnnOps.jlTopK(spark, e, n, 5)
+    val full = AnnOps.jlTopK(e, n, 5)
       .select(col("vec_id"), col("score")).collect().map(r => (r.getLong(0), r.getDouble(1)))
     val qv = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     val brute = e.crossJoin(broadcast(qv)).filter(col("vec_id") =!= 0)
@@ -282,7 +295,7 @@ class AnnOpsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(full.toSeq === brute.toSeq)
     // the production shortlist's scores are still true exact dots
-    val short = AnnOps.jlTopK(spark, e, 20, 5).collect()
+    val short = AnnOps.jlTopK(e, 20, 5).collect()
     val exactScores = brute.toMap ++ e.crossJoin(broadcast(qv))
       .select(col("vec_id"), round(expr("dot_product_f(embedding, qv)"), 6).as("s"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -297,7 +310,6 @@ class AnnOpsSpec extends SparkSpec {
 
   test("q130 kNN graph: IVF build at full probe IS the exact graph; recall is monotone in nprobe") {
     import org.apache.spark.sql.functions._
-    graft.functions.expressions.VectorExpressions.register(spark)
     val e = graft.Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val cents = e.filter(col("vec_id") < 16)
@@ -327,7 +339,6 @@ class AnnOpsSpec extends SparkSpec {
 
   test("two-level IVF: full coarse probe IS the flat assignment/build; no N×C window exchange") {
     import org.apache.spark.sql.functions._
-    graft.functions.expressions.VectorExpressions.register(spark)
     val e = graft.Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val cents = e.filter(col("vec_id") < 16)
@@ -376,7 +387,6 @@ class AnnOpsSpec extends SparkSpec {
 
   test("knnGraphAuto picks flat below the cell threshold and two-level above; q130/q243 share the plumbing") {
     import org.apache.spark.sql.functions._
-    graft.functions.expressions.VectorExpressions.register(spark)
     val e = graft.Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val cents = e.filter(col("vec_id") < 16)
@@ -412,7 +422,6 @@ class AnnOpsSpec extends SparkSpec {
 
   test("prodSizing pick is unbiased: hash-C beats first-C recall on a source-clustered corpus") {
     import org.apache.spark.sql.functions._
-    graft.functions.expressions.VectorExpressions.register(spark)
     import spark.implicits._
     // the real-ingest shape: ids CLUSTER-CONTIGUOUS (source 0 first,
     // then source 1, ...), sized so the old first-C pick lands every

@@ -16,7 +16,6 @@ class BottomKSpec extends SparkSpec {
     pmod(xxhash64(col("id"), lit("v")), lit(100000)).as("v"))
 
   private def sample(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] = {
-    BottomKAgg.register(spark)
     df.groupBy(col("g")).agg(expr("bottomk_sample(h, v)").as("vs"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
   }

@@ -108,7 +108,6 @@ class MixOpsSpec extends SparkSpec {
   }
 
   test("semDedup with trained k-means centroids catches >= the deterministic pick") {
-    graft.functions.expressions.VectorExpressions.register(spark)
     val e = graft.Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     // exact all-pairs near-dup set (the un-blocked ground truth)
@@ -185,7 +184,6 @@ class MixOpsSpec extends SparkSpec {
   }
 
   test("q132: clusters equal a driver-side union-find over the mutual-kNN edges") {
-    graft.functions.expressions.VectorExpressions.register(spark)
     val e = graft.Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val got = MixOps.q132KnnClusters.fn(spark, dir).collect()

@@ -78,7 +78,6 @@ class SampleOpsSpec extends SparkSpec {
   }
 
   test("q118: mined positive is the true same-label argmax (vs brute force)") {
-    graft.functions.expressions.VectorExpressions.register(spark)
     val e = graft.Tables.load(spark, dir, "embeddings")
     val anchor = e.filter(col("vec_id") === 3)
       .select(col("embedding").as("av"), col("label").as("al"))
@@ -93,7 +92,6 @@ class SampleOpsSpec extends SparkSpec {
   }
 
   test("IVF triplet mining at full probe equals the brute miner; pruned probes stay valid") {
-    graft.functions.expressions.VectorExpressions.register(spark)
     val e = graft.Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), col("label"))
     val centroids = e.filter(col("vec_id") < 16)

@@ -67,7 +67,6 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("q113 normalization: unicode forms, case, digits, and spacing dedup together") {
     import spark.implicits._
-    graft.functions.expressions.TextExpressions.register(spark)
     // the same visible text five ways: decomposed vs composed accents
     // (NFC's job — the ASCII oracle corpus can't exercise this), case,
     // digit choice, and whitespace shape

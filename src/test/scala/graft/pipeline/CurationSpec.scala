@@ -184,7 +184,6 @@ class CurationSpec extends SparkSpec {
   }
 
   test("semantic dedup stage drops exactly semDedup's flag set") {
-    graft.functions.expressions.VectorExpressions.register(spark)
     val emb = graft.Tables.load(spark, dir, "embeddings")
       .select(col("vec_id").as("doc_id"), col("embedding"))
     val (_, base) = Curation.run(docs)
@@ -206,7 +205,6 @@ class CurationSpec extends SparkSpec {
   }
 
   test("prototype pruning drops the q175 quota between dedup and packing, deterministically") {
-    graft.functions.expressions.VectorExpressions.register(spark)
     val emb = graft.Tables.load(spark, dir, "embeddings")
       .select(col("vec_id").as("doc_id"), col("embedding"))
     val (_, base) = Curation.run(docs)
@@ -235,7 +233,6 @@ class CurationSpec extends SparkSpec {
   }
 
   test("semanticWhiten: the whitened stage still finds near-dups; summary stays conserved") {
-    graft.functions.expressions.VectorExpressions.register(spark)
     val emb = graft.Tables.load(spark, dir, "embeddings")
       .select(col("vec_id").as("doc_id"), col("embedding"))
     // planted exact/near duplicates survive whitening: W is a linear

@@ -51,8 +51,12 @@ class PostprocessSpec extends SparkSpec {
   }
 
   test("GraftExtensions injects functions at session build (no manual register)") {
-    // SparkSpec builds the session with spark.sql.extensions=graft.GraftExtensions;
-    // the function must resolve without VectorExpressions.register()
+    // SparkSpec builds the session with spark.sql.extensions=graft.GraftExtensions,
+    // the one place every engine function is registered
+    val names = Seq("dot_product_f", "l2_sq_f", "l1_f", "llm_complete",
+      "nfc_norm", "prefix_lcp", "word_shingles", "minhash_sig", "minhash_agg",
+      "hll_sketch", "cms_sketch", "misra_gries", "bottomk_sample", "bottomk_pairs")
+    assert(names.filterNot(spark.catalog.functionExists) === Nil)
     val got = spark.sql(
       "SELECT dot_product_f(array(cast(1.0 as float), cast(2.0 as float)), array(cast(3.0 as float), cast(4.0 as float))) AS d")
       .collect().head.getDouble(0)

@@ -228,6 +228,29 @@ class ConnectorsSpec extends SparkSpec {
     }
   }
 
+  test("one glob rule: HadoopFs, Drive and HTTP keep the same names for every glob") {
+    val names = ConnectorsSpec.globNames
+    val local = Files.createTempDirectory("graft-glob")
+    names.foreach(n => Files.write(local.resolve(n), n.getBytes("UTF-8")))
+    val drive = new GoogleDriveConnector(DriveAuth("tok-valid"),
+      () => ConnectorsSpec.driveListing(names), apiBase = ConnectorsSpec.driveApi,
+      tokenUrl = ConnectorsSpec.driveToken)
+    val http = new HttpStagingConnector(() => ConnectorsSpec.globFileServer())
+    val connectors = Seq[(String, String => org.apache.spark.sql.DataFrame)](
+      "hadoop_fs" -> (g => new HadoopFsConnector().listRemote(spark, local.toString, g)),
+      "google_drive" -> (g => drive.listRemote(spark, "gdrive://folder-1", g)),
+      "http" -> (g => http.listRemote(spark, ConnectorsSpec.globRoot, g)))
+    val table = Seq(
+      "*.PDF" -> Set("a.pdf", "B.PDF"),
+      "file[AB].txt" -> Set("fileA.txt", "filea.txt", "fileB.txt"),
+      "file[!AB].txt" -> Set("fileC.txt"),
+      "?.txt" -> Set("x.txt"))
+    for ((glob, want) <- table; (name, list) <- connectors) {
+      val got = list(glob).select("file_name").collect().map(_.getString(0)).toSet
+      assert(got === want, s"$name kept ${got.toSeq.sorted} for $glob")
+    }
+  }
+
   test("SFTP: isdir credential probe, attr-driven listing, staged bytes, permission message") {
     val c = new SftpStagingConnector(() => ConnectorsSpec.sftpChannel())
     // test_credentials = isdir(user_dir): true on the dir, false on a
@@ -306,6 +329,15 @@ object ConnectorsSpec {
         }
       } else graft.tools.HttpResponse.status(404, url)
     })
+
+  /** Names for the glob table: case variants, bracket classes, one-char stems. */
+  val globNames: Seq[String] = Seq("a.pdf", "B.PDF", "c.pdfx", "fileA.txt",
+    "filea.txt", "fileB.txt", "fileC.txt", "x.txt", "ab.txt")
+
+  val globRoot = "https://files.example.com/glob"
+
+  def globFileServer(): graft.tools.CannedTransport =
+    server(globRoot, globNames.map(n => n -> n).toMap)
 
   // ---- canned Dropbox API v2 (RPC + content endpoints) ----
 
@@ -524,6 +556,20 @@ object ConnectorsSpec {
       } else R.status(404, url)
     })
   }
+
+  /** A one-page Drive files.list of plain-text files with the given names. */
+  def driveListing(names: Seq[String]): graft.tools.CannedTransport =
+    new graft.tools.CannedTransport({ (method, url, headers, _) =>
+      import graft.tools.{HttpResponse => R}
+      if (!headers.get("Authorization").contains("Bearer tok-valid"))
+        R.status(401, """{"error":"UNAUTHENTICATED"}""")
+      else if (method == "GET" && url.startsWith(s"$driveApi/drive/v3/files?"))
+        R.ok(names.zipWithIndex.map { case (n, i) =>
+          s"""{"id":"id-$i","name":"$n","mimeType":"text/plain","size":"${n.length}",""" +
+            """"modifiedTime":"2026-08-11T07:28:00Z"}"""
+        }.mkString("""{"files":[""", ",", "]}"))
+      else R.status(404, url)
+    })
 
   // ---- canned SFTP channel ------------------------------------------------
 

@@ -256,7 +256,6 @@ class EventStreamsSpec extends SparkSpec {
     val mon = new HeavyHitters.CmsMonitor(4, 64)
     parts.foreach(p => mon.observe(p.toDF("token")))
     // exactly-associative merge: cross-batch grid == one-shot grid
-    graft.functions.expressions.CountMinAgg.register(spark)
     val oneShot = toks.toDF("token")
       .agg(expr("cms_sketch(token, 4, 64)")).collect().head.getSeq[Long](0)
     assert(mon.grid.toSeq === oneShot, "cross-batch CMS must equal the one-shot sketch")
@@ -277,7 +276,6 @@ class EventStreamsSpec extends SparkSpec {
     val mon = new HeavyHitters.HllMonitor
     parts.foreach(p => mon.observe(p.toDF("token")))
     // max-merge associativity: cross-batch registers == one-shot
-    graft.functions.expressions.HyperLogLogAgg.register(spark)
     val oneShot = toks.toDF("token")
       .agg(expr("hll_sketch(token)")).collect().head.getSeq[Int](0)
     assert(mon.registers.toSeq === oneShot,

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.functions.expressions.BottomKAgg
 import org.apache.spark.sql.functions._
 
 /** The cross-batch quantile monitor must fold to EXACTLY the one-shot
@@ -15,7 +14,6 @@ class QuantileMonitorSpec extends SparkSpec {
     pmod(xxhash64(col("id"), lit("v")), lit(100000)).as("v"))
 
   private def oneShot: Map[String, Seq[Long]] = {
-    BottomKAgg.register(spark)
     corpus.groupBy(col("source"))
       .agg(expr("bottomk_sample(h, v)").as("vs"))
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1).toSeq).toMap
@@ -60,7 +58,6 @@ class QuantileMonitorSpec extends SparkSpec {
   }
 
   test("bottomk_pairs rejects a non-bigint value at analysis time") {
-    BottomKAgg.register(spark)
     val bad = intercept[org.apache.spark.sql.AnalysisException] {
       corpus.select(col("source"), col("h"), col("v").cast("string").as("v"))
         .groupBy(col("source")).agg(expr("bottomk_pairs(h, v)")).collect()
@@ -69,7 +66,6 @@ class QuantileMonitorSpec extends SparkSpec {
   }
 
   test("bottomk_pairs is the sketch state: hash-ascending, same kept set as bottomk_sample") {
-    BottomKAgg.register(spark)
     val rows = corpus.groupBy(col("source"))
       .agg(expr("bottomk_pairs(h, v)").as("ps"))
       .collect()
