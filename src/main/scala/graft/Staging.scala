@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 
 /** The one materialization seam: every barrier in the operator and
   * pipeline tiers (multi-pass tables, iterative rounds, the workflow's
-  * `fresh` and `extracted` frames) calls [[materialize]], and one key,
+  * `extracted` frame) calls [[materialize]], and one key,
   * [[Key]], decides for all of them. Unset: `localCheckpoint` — eager
   * and fast, but pinned to executors, so a lost executor kills the job.
   * Set to a parquet-capable root: write-then-read a staged table under
@@ -49,7 +49,8 @@ object Staging {
 
   /** Kept only for the benchmark's traced copy of `Workflow.run`
     * (perfbench), which still passes a per-tier key: the key is
-    * ignored, so that pass stages exactly when `Workflow.run` does. */
+    * ignored. That copy still stages a `fresh` frame, which
+    * `Workflow.run` no longer does. */
   @deprecated("the key is ignored; call materialize(df, tag)", "0.1.0")
   def materialize(df: DataFrame, tag: String, confKey: String): DataFrame =
     materialize(df, tag)

@@ -15,9 +15,27 @@ import org.apache.spark.util.LongAccumulator
   */
 trait LLMClient extends Serializable {
   def complete(prompt: String): String
-  /** crude token accounting: whitespace tokens */
-  def countTokens(s: String): Long =
-    if (s == null || s.trim.isEmpty) 0L else s.trim.split("\\s+").length.toLong
+  /** Crude token accounting: whitespace tokens, as
+    * `s.trim.split("\\s+").length` counts them (0 for null or blank), in
+    * one pass: after trimming chars <= U+0020 at both ends, the runs of
+    * chars outside `[ \t\n\x0B\f\r]`. */
+  def countTokens(s: String): Long = {
+    if (s == null) return 0L
+    var end = s.length
+    while (end > 0 && s.charAt(end - 1) <= ' ') end -= 1
+    var i = 0
+    while (i < end && s.charAt(i) <= ' ') i += 1
+    var n = 0L
+    var inToken = false
+    while (i < end) {
+      val c = s.charAt(i)
+      val space = c == ' ' || c == '\t' || c == '\n' || c == '\u000b' || c == '\f' || c == '\r'
+      if (!space && !inToken) n += 1
+      inToken = !space
+      i += 1
+    }
+    n
+  }
 }
 
 /** Deterministic mock (mirrors the reference's LLM_MOCK_RESPONSE e2e

@@ -39,18 +39,20 @@ object Workflow {
   /** Execute a batch run end-to-end. Returns the summary the reference's
     * chord callback would assemble (workers/file_processing/tasks.py:1023-1090).
     *
-    * Exactly TWO jobs touch source bytes / the LLM:
-    *  1. scan → anti-join against the history table (a history that
-    *     exists but cannot be read fails the run here, before any
-    *     completion is billed), with the listing and post-dedup counts
-    *     collected via [[Observation]] on that same pass — a separate
-    *     `files.count()` would add a job over the scan's spread;
-    *  2. extraction, materialized ONCE — the fs sink, review queue,
-    *     result cache and history upsert all read the staged result, so
-    *     each LLM completion is billed once per (row, prompt), never
-    *     once per downstream action (SURVEY §7.4's double-billing
-    *     hazard; at 100 TB with a metered LLM a per-action re-run is a
-    *     4× cost multiplier). */
+    * ONE job reads the source files and calls the LLM: the scan (numbered
+    * on the driver, each kept file read once in its slice) → anti-join
+    * against the history table → extraction, materialized ONCE as
+    * `extracted`. The listing and post-dedup counts are [[Observation]]s
+    * on that same pass. The fs sink, review queue, result cache and
+    * history upsert all read the materialized result, so each LLM
+    * completion is billed once per (row, prompt), never once per
+    * downstream action (SURVEY §7.4's double-billing hazard; at 100 TB
+    * with a metered LLM a per-action re-run is a 4× cost multiplier).
+    *
+    * A history that exists but cannot be read fails the run before any
+    * completion is billed: `readHistory` infers its schema eagerly, and
+    * the anti-join's history side is an exchange (broadcast or shuffle)
+    * that completes before the stage that calls the LLM starts. */
   def run(spark: SparkSession, spec: WorkflowSpec,
       client: () => LLMClient): RunSummary = {
     val files = FileScan.scan(spark, spec.scan)
@@ -59,19 +61,17 @@ object Workflow {
 
     val obsScan = Observation()
     val obsFresh = Observation()
-    val fresh = Staging.materialize(
-      FileScan.dedupAgainstHistory(
-          files.observe(obsScan, count(lit(1)).as("listed")), history)
-        .withColumn("text", col("content").cast("string"))
-        .observe(obsFresh, count(lit(1)).as("fresh")),
-      "fresh")
+    val fresh = FileScan.dedupAgainstHistory(
+        files.observe(obsScan, count(lit(1)).as("listed")), history)
+      .withColumn("text", col("content").cast("string"))
+      .observe(obsFresh, count(lit(1)).as("fresh"))
 
     val obsExtract = Observation()
     val extracted = Staging.materialize(
       Extraction.extract(fresh, "text", spec.prompts, client)
         .withColumn("error_message", lit(null).cast("string"))
         // content/text never outlive extraction: staging them would
-        // rewrite every source byte a second time
+        // rewrite every source byte
         .drop("content", "text")
         .observe(obsExtract,
           count(lit(1)).as("n_out"),

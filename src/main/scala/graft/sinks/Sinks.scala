@@ -140,8 +140,8 @@ object Sinks {
     * writes nothing.
     *
     * Every write goes through `writeBuckets`: each bucket it writes is
-    * written by one task as one file, and the buckets are spread over
-    * every core.
+    * written by one task as one file, and a wider table's buckets are
+    * spread over every core.
     *
     * Crash safety: merged buckets are staged, then promoted per bucket as
     * rename(current → __old), rename(staged → current), delete(__old) —
@@ -158,17 +158,24 @@ object Sinks {
     val fs = dst.getFileSystem(conf)
     val tableWidth = recoverOrphans(fs, dst)
     // one job over the updates gives both their row count and their
-    // buckets at the widest width, which fix those at every narrower one
-    val perBucket = updates.groupBy(bucketOf(MaxWidth)).count()
-      .collect() // bounded: ≤256 values
-    require(!perBucket.exists(_.isNullAt(0)), "upsertHistory: a row has no cache_key")
+    // buckets at the widest width, which fix those at every narrower one:
+    // each partition counts its rows per bucket (≤256 pairs, plus a null
+    // key for rows without a cache_key), merged here, with no shuffle
+    val perBucket = updates.select(bucketOf(MaxWidth)).rdd
+      .mapPartitions { rows =>
+        val counts = scala.collection.mutable.HashMap.empty[String, Long]
+        rows.foreach { r => val b = r.getString(0); counts(b) = counts.getOrElse(b, 0L) + 1 }
+        counts.iterator
+      }
+      .collect().groupMapReduce(_._1)(_._2)(_ + _)
+    require(!perBucket.contains(null), "upsertHistory: a row has no cache_key")
     // nothing to record; a first write of no rows would leave a directory
     // with no parquet file, which no later read can infer a schema from
     if (perBucket.isEmpty) return
     val current = readHistory(spark, historyPath)
     // past 16 × RowsPerBucket rows the width is capped whatever the rest
     val tableRows = footerRows(current, conf, upTo = RowsPerBucket << (4 * (MaxWidth - 1)))
-    val width = upsertWidth(tableWidth, tableRows, perBucket.map(_.getLong(1)).sum)
+    val width = upsertWidth(tableWidth, tableRows, perBucket.values.sum)
     val keyed = updates.withColumn("key_prefix", bucketOf(width))
     val rowKey = Seq("cache_key", "file_path")
     if (!fs.exists(dst)) {
@@ -196,7 +203,7 @@ object Sinks {
       fs.delete(old, true)
       return
     }
-    val prefixes = perBucket.map(_.getString(0).take(1 + width)).distinct
+    val prefixes = perBucket.keys.map(_.take(1 + width)).toSeq.distinct
     val merged = current
       .filter(col("key_prefix").isin(prefixes.toIndexedSeq: _*)) // partition pruning
       .join(updates.select(rowKey.map(col): _*), rowKey, "left_anti")
@@ -239,13 +246,17 @@ object Sinks {
   }
 
   /** Write a `key_prefix`-partitioned history table with each bucket's
-    * rows in one task: without the shuffle, every input partition opens
-    * its own writer per bucket and a bucket ends up as many small files.
-    * The explicit count (no more tasks than the width has buckets) keeps
-    * AQE from coalescing the buckets into fewer tasks. */
+    * rows in one task: otherwise every input partition opens its own
+    * writer per bucket and a bucket ends up as many small files. One
+    * bucket (width 0) is one task through `coalesce(1)`, with no shuffle.
+    * Wider tables are hash-partitioned by bucket; the explicit count (no
+    * more tasks than the width has buckets) keeps AQE from coalescing
+    * the buckets into fewer tasks. */
   private def writeBuckets(df: DataFrame, width: Int, mode: SaveMode, path: String): Unit =
-    df.repartition(math.min(1 << (4 * width), df.sparkSession.sparkContext.defaultParallelism),
-        col("key_prefix"))
+    (if (width == 0) df.coalesce(1)
+     else df.repartition(
+       math.min(1 << (4 * width), df.sparkSession.sparkContext.defaultParallelism),
+       col("key_prefix")))
       .write.mode(mode).partitionBy("key_prefix").parquet(path)
 
   /** Restore buckets orphaned by a crash mid-promote: a failure between

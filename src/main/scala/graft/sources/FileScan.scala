@@ -8,7 +8,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 /** Source-stage file scanning (SURVEY.md S1-S7, P1-P2, P10, W1-W2, F1-F2).
@@ -22,8 +23,8 @@ import org.apache.spark.util.SerializableConfiguration
   * Metadata first, as in the reference: the listing is the file index
   * `binaryFile` builds on the driver (path, length, mtime; no job, no
   * file opened), and filtering, ordering, the cap and numbering run over
-  * those rows alone. Only the kept files are read, each once, in the
-  * partition that goes on to extract it, so content never crosses a
+  * those rows on the driver. Only the kept files are read, each once, in
+  * the partition that goes on to extract it, so content never crosses a
   * shuffle and never reaches the driver. Hashing and MIME sniffing are
   * codegen'd expressions over the content column, not driver-side loops.
   */
@@ -56,45 +57,64 @@ object FileScan {
       .otherwise("text/plain")
   }
 
-  /** Depth of a file below the scan root (root-level file = 1). Both
-    * sides count the segments of their URI path, so `/x`, `file:/x`,
+  /** The listing's depth cap as a test on a path: its depth below the
+    * scan root (root-level file = 1) is at most `maxDepth`. Both sides
+    * count the segments of their URI path, so `/x`, `file:/x`,
     * `file:///x` and `scheme://host/x` roots cap at the same level. */
-  private def depthBelow(conf: Broadcast[SerializableConfiguration], root: String): Column = {
+  private def depthWithin(conf: Broadcast[SerializableConfiguration], root: String,
+      maxDepth: Int): String => Boolean = {
     val r = new Path(root)
     val rootPath = r.getFileSystem(conf.value.value).makeQualified(r).toUri.getPath
-    val filePath = regexp_replace(col("file_path"), "^[A-Za-z][A-Za-z0-9+.-]*:(//[^/]*)?", "")
-    size(split(filePath, "/")) - rootPath.stripSuffix("/").split("/", -1).length
+    val rootDepth = rootPath.stripSuffix("/").split("/", -1).length
+    path => UriPrefix.matcher(path).replaceFirst("").split("/", -1).length - rootDepth <= maxDepth
   }
 
-  // nullable, as binaryFile reads them
-  private val ListingSchema = StructType(Seq(
-    StructField("file_path", StringType),
-    StructField("file_size", LongType),
-    StructField("mtime_ms", LongType)))
+  private val UriPrefix = java.util.regex.Pattern.compile("^[A-Za-z][A-Za-z0-9+.-]*:(//[^/]*)?")
+
+  /** One listed file, as the driver holds it. */
+  private final case class Listed(path: String, name: String, size: Long, mtimeMs: Long) {
+    /** `path` as Spark orders strings: by UTF-8 bytes, not UTF-16 units. */
+    lazy val pathKey: UTF8String = UTF8String.fromString(path)
+    def row: Row = Row(path, name, size, mtimeMs)
+  }
 
   /** S1 listing: the file index `binaryFile` builds on the driver for
-    * `root`, with its hidden-file and `recursiveFileLookup` rules, as
-    * rows of file_path, file_name, file_size, mtime. Runs no job and
-    * opens no file. Paths in one listing are unique, so the in-listing
-    * dedup (P2) holds without a shuffle. */
-  def listFiles(spark: SparkSession, root: String, recursive: Boolean): DataFrame = {
+    * `root`, with its hidden-file and `recursiveFileLookup` rules. Runs
+    * no job and opens no file. Paths in one listing are unique, so the
+    * in-listing dedup (P2) holds without a shuffle. */
+  private def listing(spark: SparkSession, root: String, recursive: Boolean): Seq[Listed] = {
     val index = spark.read.format("binaryFile")
       .option("recursiveFileLookup", recursive.toString)
       .load(root)
       .queryExecution.analyzed
       .collectFirst { case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location }
       .get
-    val rows = index.listFiles(Nil, Nil).flatMap(_.files).map { f =>
+    index.listFiles(Nil, Nil).flatMap(_.files).map { f =>
       val s = f.fileStatus
-      Row(s.getPath.toString, s.getLen, s.getModificationTime)
+      val path = s.getPath.toString
+      Listed(path, path.substring(path.lastIndexOf('/') + 1), s.getLen, s.getModificationTime)
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows), ListingSchema)
-      .select(
-        col("file_path"),
-        element_at(split(col("file_path"), "/"), -1).as("file_name"),
-        col("file_size"),
-        timestamp_millis(col("mtime_ms")).as("mtime"))
   }
+
+  // nullable, as binaryFile reads them; file_number as Ranks numbers
+  private val ListingSchema = StructType(Seq(
+    StructField("file_path", StringType),
+    StructField("file_name", StringType),
+    StructField("file_size", LongType),
+    StructField("mtime_ms", LongType)))
+  private val NumberedSchema = ListingSchema.add("file_number", IntegerType, nullable = false)
+
+  /** `rows` as a frame over `defaultParallelism` partitions, `mtime_ms`
+    * turned into binaryFile's `mtime` timestamp. */
+  private def listingFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, spark.sparkContext.defaultParallelism), schema)
+      .withColumn("mtime_ms", timestamp_millis(col("mtime_ms")))
+      .withColumnRenamed("mtime_ms", "mtime")
+
+  /** [[listing]] as rows of file_path, file_name, file_size, mtime. */
+  def listFiles(spark: SparkSession, root: String, recursive: Boolean): DataFrame =
+    listingFrame(spark, listing(spark, root, recursive).map(_.row), ListingSchema)
 
   /** The session's Hadoop configuration (`spark.hadoop.*` and session
     * `fs.*` settings included), broadcast once for executor-side reads
@@ -132,48 +152,49 @@ object FileScan {
     * FileRow frame: file_path, file_name, file_size, mtime, content,
     * file_hash (sha256), mime_type, file_number.
     *
-    *  1. metadata: [[listFiles]], then the depth, glob and empty-file
-    *     filters, the MIME gate (reading only each candidate's 4-byte
-    *     head, and only when `allowedMime` is set), mtime order, the cap
-    *     and `file_number`;
-    *  2. spread: the numbered paths are hash-partitioned by `file_path`
-    *     over `defaultParallelism` partitions, so the stages downstream
-    *     of the scan (extraction, sinks) run on every core;
-    *  3. read: each kept file is read once in its partition, with the
-    *     session's Hadoop configuration, and hashed and sniffed there.
+    *  1. metadata, on the driver: the [[listing]] it already holds, then
+    *     the depth, glob and empty-file filters, the MIME gate (one job
+    *     reading only each candidate's 4-byte head, and only when
+    *     `allowedMime` is set), mtime order, the cap and `file_number`;
+    *  2. read: the numbered rows are sliced over `defaultParallelism`
+    *     partitions, so the stages downstream of the scan (extraction,
+    *     sinks) run on every core, and each kept file is read once in its
+    *     slice, with the session's Hadoop configuration, and hashed and
+    *     sniffed there. No job runs until the caller's action, and no
+    *     exchange moves the rows.
     *
-    * Partition order is not scan order: `file_number` carries the
-    * FIFO/LIFO position, so order by it wherever order matters. */
+    * A slice of a fixed sequence is as stable under task retry as a hash
+    * partition. Partition order is scan order, but `file_number` carries
+    * the FIFO/LIFO position: order by it wherever order matters. */
   def scan(spark: SparkSession, cfg: ScanConfig): DataFrame = {
     val conf = hadoopConf(spark)
-    val depthOk = if (cfg.recursive) depthBelow(conf, cfg.root) <= cfg.maxDepth else lit(true)
-    val globOk = TextFunctions.globMatch(col("file_name"), cfg.glob)
+    val depthOk = if (cfg.recursive) depthWithin(conf, cfg.root, cfg.maxDepth) else (_: String) => true
+    val globOk = TextFunctions.globMatcher(cfg.glob)
+    val listed = listing(spark, cfg.root, cfg.recursive)
+      .filter(f => depthOk(f.path) && globOk(f.name) && f.size > 0) // P1 dir/empty guard
 
-    val listed = listFiles(spark, cfg.root, cfg.recursive)
-      .filter(depthOk && globOk && col("file_size") > 0)       // P1 dir/empty guard
+    val candidates = if (cfg.allowedMime.isEmpty) listed          // P10, before the cap
+      else {
+        val kept = listingFrame(spark, listed.map(_.row), ListingSchema)
+          .withColumn("head", readHead(conf)(col("file_path")))
+          .filter(sniffMime(col("head"), col("file_name")).isin(cfg.allowedMime: _*))
+          .select("file_path").collect().map(_.getString(0)).toSet // bounded by the listing
+        listed.filter(f => kept(f.path))
+      }
 
-    val candidates = if (cfg.allowedMime.isEmpty) listed       // P10, before the cap
-      else listed.withColumn("head", readHead(conf)(col("file_path")))
-        .filter(sniffMime(col("head"), col("file_name")).isin(cfg.allowedMime: _*))
-        .drop("head")
-
-    // W1/W2: mtime order (path tiebreak), cap, 1-based file_number.
-    // The reference caps sortable listings at 40k files; at scale the
-    // order-by-limit compiles to TakeOrdered (no full sort materialized)
-    // and the sequence numbering stays distributed (no global window).
-    val order = cfg.order match {
-      case Fifo => Seq(col("mtime").asc, col("file_path"))
-      case Lifo => Seq(col("mtime").desc, col("file_path"))
-    }
-    val numbered = graft.operators.Ranks.sequenceNumber(
-      candidates.orderBy(order: _*).limit(cfg.maxFiles), order, "file_number")
+    // W1/W2: mtime order, ties by path in Spark's (UTF-8 byte) string
+    // order, the cap, a 1-based file_number. The reference caps sortable
+    // listings at 40k files; the driver holds the whole listing already.
+    val byMtime = Ordering.by[Listed, Long](_.mtimeMs)
+    val order = (cfg.order match {
+      case Fifo => byMtime
+      case Lifo => byMtime.reverse
+    }).orElse(Ordering.fromLessThan[Listed]((a, b) => a.pathKey.compareTo(b.pathKey) < 0))
+    val numbered = candidates.sorted(order).take(cfg.maxFiles).zipWithIndex
+      .map { case (f, i) => Row(f.path, f.name, f.size, f.mtimeMs, i + 1) }
 
     val maxLength = spark.conf.get("spark.sql.sources.binaryFile.maxLength").toInt
-    // numbering leaves one partition; spread it by path (stable under
-    // task retry). The count is explicit: a count-less repartition(col)
-    // may be coalesced back into one partition by AQE.
-    numbered
-      .repartition(spark.sparkContext.defaultParallelism, col("file_path"))
+    listingFrame(spark, numbered, NumberedSchema)
       .withColumn("content", readContent(conf, maxLength)(col("file_path"), col("file_size")))
       .select(col("file_path"), col("file_name"), col("file_size"), col("mtime"),
         col("content"),

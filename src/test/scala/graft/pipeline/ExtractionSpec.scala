@@ -210,6 +210,28 @@ class ExtractionSpec extends SparkSpec {
     assert(e.getMessage == "down 4")
     assert(calls == 4)
   }
+
+  test("countTokens counts what trim + split on \\s+ counts (property)") {
+    import org.scalacheck.Gen
+    val client = new MockLLM
+    def bySplit(s: String): Long =
+      if (s == null || s.trim.isEmpty) 0L else s.trim.split("\\s+").length.toLong
+    // among plain letters: whitespace, control characters <= U+0020 that
+    // are not \s, U+00A0, U+2003 and surrogate halves
+    val char = Gen.frequency(
+      4 -> Gen.alphaNumChar,
+      2 -> Gen.oneOf(' ', '\t', '\n', '\u000b', '\f', '\r'),
+      1 -> Gen.oneOf('\u0000', '\u0001', '\u001c', '\u001f'),
+      1 -> Gen.oneOf('\u00a0', '\u2003', '\ud83d', '\ude00'))
+    forAll(Gen.listOf(char).map(_.mkString)) { s =>
+      assert(client.countTokens(s) == bySplit(s), s"for ${s.map(_.toInt)}")
+    }
+    val fixed = Seq(null, "", "   ", "\t\n", "\u0001", "\u0001 a", "a\u0001b", "a \u0001 b",
+      "\u00a0", "a\u00a0b", " a  b\tc\n", "one")
+    fixed.foreach(s => assert(client.countTokens(s) == bySplit(s), s"for $s"))
+    assert(client.countTokens("\u0001 a") == 1L && client.countTokens("a\u0001b") == 1L)
+    assert(client.countTokens("\u00a0") == 1L) // not trimmed, not \s
+  }
 }
 
 /** Canned OpenAI-compatible provider on the companion object (client

@@ -1,8 +1,10 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import graft.sinks.Sinks
 import graft.sources.FileScan
 import java.nio.file.Files
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** E2E pipeline fixture (FIXTURES.md §7, mirroring the reference's
   * tests/e2e/etl flow with a canned LLM). */
@@ -61,9 +63,10 @@ class WorkflowSpec extends SparkSpec {
   /** A workflow over a folder of its own with EVERY optional destination
     * hop active: fs sink + review queue + result cache + history upsert +
     * the two summary counts — with the old per-action re-execution such a
-    * run would bill the LLM up to 6×. Runs again over the same folder and
-    * history as often as asked, metering completions in `calls`. */
-  private final class CountedFlow(tag: String) {
+    * run would bill the LLM up to 6×. Without `hops`, the review queue and
+    * result cache are off. Runs again over the same folder and history as
+    * often as asked, metering completions in `calls`. */
+  private final class CountedFlow(tag: String, hops: Boolean = true) {
     private val srcDir = Files.createTempDirectory(s"graft-$tag-src")
     val histPath: String = Files.createTempDirectory(s"graft-$tag-hist").toString + "/history"
     val calls = spark.sparkContext.longAccumulator(s"llm-calls-$tag")
@@ -78,9 +81,10 @@ class WorkflowSpec extends SparkSpec {
           PromptSpec("mentions_pipeline", "does it mention 'pipeline'", "boolean")),
         historyPath = histPath,
         outputFolder = Files.createTempDirectory(s"graft-$tag-out").toString + "/results",
-        reviewQueue = Some((() => new graft.streaming.DirectoryQueue(queueRoot), "review:wf-1")),
+        reviewQueue = Some((() => new graft.streaming.DirectoryQueue(queueRoot), "review:wf-1"))
+          .filter(_ => hops),
         resultCache = Some(new graft.sinks.ResultCache(
-          () => new graft.streaming.MemoryQueue(cacheNs), ttlSeconds = 600)))
+          () => new graft.streaming.MemoryQueue(cacheNs), ttlSeconds = 600)).filter(_ => hops))
     }
 
     def write(name: String, text: String): Unit =
@@ -142,6 +146,64 @@ class WorkflowSpec extends SparkSpec {
       s"LLM billed ${flow.calls.value} completions before the history read failed")
   }
 
+  test("a history that fails only when its rows are read fails the run before any completion is billed") {
+    import spark.implicits._
+    val flow = new CountedFlow("wfmixed")
+    flow.write("a.txt", "batch pipeline")
+    flow.write("b.txt", "batch batch")
+    // either file alone infers a valid schema; read under the other's
+    // schema, the first fails on its cache_key column
+    Seq(("k1", "/x/a.txt", "COMPLETED", "{}")).toDF("cache_key", "file_path", "status", "result")
+      .coalesce(1).write.parquet(flow.histPath)
+    Seq((7, "/x/b.txt", "COMPLETED", "{}")).toDF("cache_key", "file_path", "status", "result")
+      .coalesce(1).write.mode("append").parquet(flow.histPath)
+    assert(Sinks.readHistory(spark, flow.histPath).columns.length == 4)
+    intercept[Exception](flow.run())
+    assert(flow.calls.value === 0L,
+      s"LLM billed ${flow.calls.value} completions before the history read failed")
+  }
+
+  /** The Spark jobs `body` starts. A sentinel job after it marks the end:
+    * listener events arrive in order, so once the sentinel's start is
+    * seen, every job `body` started has been counted. */
+  private def jobsOf(body: => Unit): Int = {
+    val sentinel = s"sentinel-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(p => sentinel == p.getProperty("spark.job.description")))
+          done.countDown()
+        else jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobDescription(sentinel)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "sentinel job not seen")
+      jobs.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a run into an empty history is four Spark jobs; a re-run of done files is five") {
+    val flow = new CountedFlow("wfjobs", hops = false)
+    (1 to 40).foreach(i => flow.write(f"f$i%03d.txt", s"batch $i pipeline"))
+    // extraction (the one pass over the files), the fs sink, the
+    // history's bucket count and its one-file write
+    var run1: (Workflow.RunSummary, Long) = null
+    val first = jobsOf { run1 = flow.run() }
+    assert(first == 4, s"first run: $first jobs")
+    assert(run1 == ((Workflow.RunSummary(40, 40, 40, 0), 80L)))
+    // the history's schema, its broadcast side, extraction, the fs sink
+    // and the bucket count
+    var run2: (Workflow.RunSummary, Long) = null
+    val rerun = jobsOf { run2 = flow.run() }
+    assert(run2 == ((Workflow.RunSummary(40, 0, 0, 0), 0L)))
+    assert(rerun == 5, s"re-run: $rerun jobs")
+  }
+
   test("a history set aside by a crashed re-layout still counts: done files are not billed again") {
     val flow = new CountedFlow("wfsetaside")
     flow.write("a.txt", "batch pipeline")
@@ -177,6 +239,8 @@ class WorkflowSpec extends SparkSpec {
       val staged = new java.io.File(staging).listFiles()
       assert(staged.exists(_.getName.startsWith("extracted_")),
         "extraction did not stage to the configured dir")
+      // the source bytes are not staged: only the extraction's result is
+      assert(!staged.exists(_.getName.startsWith("fresh_")), staged.map(_.getName).toSeq)
       val out = spark.read.json(outDir)
       assert(out.collect().head.getAs[Double]("n_batch") == 1.0)
     } finally spark.conf.unset(graft.Staging.Key)
